@@ -30,10 +30,10 @@ object GraftSession {
       // touches ~the overlapping files through plain spark.sql
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.StatsPruneRule(s)))
-      // merge-on-read tombstones applied by the planner (conf-gated,
-      // default off): plain spark.sql/spark.table over a table with
-      // pending `_deletes` anti-joins them instead of silently
-      // resurrecting soft-deleted rows
+      // merge-on-read applied by the planner (always on): plain
+      // spark.sql/spark.table over a table with pending `_deletes` or
+      // `_updates` serves the folded view instead of silently
+      // resurrecting soft-deleted rows or serving stale ones
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.TombstoneApplyRule(s)))
       // dynamic file pruning from the join side (conf-gated, default

@@ -442,33 +442,26 @@ object GraftDml {
           s"session conf spark.graft.dml.key.<table>."))
   }
 
-  private def hasUpdates(spark: SparkSession, loc: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(p, "_updates"), "u-*")))
-      .exists(_.nonEmpty)
-  }
+  private def hasUpdates(spark: SparkSession, loc: String): Boolean =
+    graft.sources.LakeSink.updateBatches(new org.apache.hadoop.fs.Path(loc)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), loc).nonEmpty
 
-  /** the table view a DML predicate scans. With
-    * `spark.graft.morApply.enabled` on, a SINGLE-ROOT read — the
+  /** the table view a DML predicate scans: a SINGLE-ROOT read — the
     * planner folds the log ([[TombstoneApplyRule]], value-identical
     * to the explicit API, a36's hash-proved contract) AND the
     * manifest prune rules can fire on it, so `DELETE … WHERE k = 42`
     * over a blooms-carrying table reads ~the owning files instead of
     * the table (Delta's DELETE does its file skipping exactly here).
-    * With the conf off, the explicit fold API (prune-proof but always
-    * correct). The landing kernels re-verify liveness under the log
-    * claim either way, so the choice affects READ cost only. */
+    * An EVOLVED table uses the explicit fold: a single-root read's
+    * footer-inferred schema cannot carry the widened columns (the
+    * planner fold refuses it by name). The landing kernels re-verify
+    * liveness under the log claim either way, so the choice affects
+    * READ cost only. */
   private def dmlView(spark: SparkSession, loc: String,
       key: String): org.apache.spark.sql.DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(loc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an EVOLVED table always uses the explicit fold: a single-root
-    // read's footer-inferred schema cannot carry the widened columns
-    // (the planner fold refuses it by name)
-    if (spark.conf.get("spark.graft.morApply.enabled", "false").toBoolean &&
-        graft.sources.LakeSink.persistedSchema(fs, loc).isEmpty)
+    if (graft.sources.LakeSink.persistedSchema(fs, loc).isEmpty)
       spark.read.parquet(loc)
     else graft.sources.LakeSink.morReadUpsertDir(spark, loc, key)
   }
@@ -589,7 +582,7 @@ object GraftDml {
       // answer to the RDBMS's B-tree duplicate probe,
       // order_rdbms_blob.js:574). Fallback (no/stale manifest): the
       // view-oriented semi-join — still the orientation the
-      // morApply+dynFilePrune rules CAN prune when enabled.
+      // dynFilePrune rule CAN prune when enabled.
       val nLive = graft.sources.LakeSink.liveKeyCount(spark, loc, key,
           batch.select(col(key))).getOrElse {
         view.select(col(key))
@@ -678,9 +671,9 @@ object GraftDml {
   }
 
   /** `VACUUM <target> [RETAIN n …]` — on-demand retention GC: a
-    * catalog table reclaims superseded generations + claim graves
+    * catalog table reclaims superseded generations
     * ([[graft.sources.LakeSink.vacuumTable]]) AND its live
-    * directory's staging/grave/schema leftovers; a path target
+    * directory's staging/schema leftovers; a path target
     * reclaims the directory tier only. Returns objects reclaimed. */
   private[plans] def runVacuum(spark: SparkSession, target: String,
       retainMs: Long, dryRun: Boolean = false): Long = {

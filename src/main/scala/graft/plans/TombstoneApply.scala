@@ -1,185 +1,104 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.EqualTo
-import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, BROADCAST}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import graft.sources.LakeSink
 
-/** MERGE-ON-READ TOMBSTONES APPLIED BY THE PLANNER — closing the
-  * plain-read resurrection hole: `spark.table(t)` /
-  * `spark.read.parquet(dir)` on a tombstone-carrying table reads
-  * DATA FILES ONLY (`_deletes/` is `_`-hidden from the scan), so
-  * every soft-deleted row silently came back unless the caller knew
-  * to use [[graft.sources.LakeSink.readMor]]. The reference's
-  * contract is the opposite — a deleted order must NEVER serve again
-  * (order.js:675 deletes row and object in lockstep); a GDPR erasure
-  * followed by plain SQL must stay erased.
+/** MERGE-ON-READ APPLIED BY THE PLANNER — closing the plain-read
+  * resurrection hole: `spark.table(t)` / `spark.read.parquet(dir)` on
+  * a log-carrying table reads DATA FILES ONLY (`_deletes/` and
+  * `_updates/` are `_`-hidden from the scan), so every soft-deleted
+  * row would come back and every upserted key would serve stale. The
+  * reference's contract is the opposite — a deleted order must NEVER
+  * serve again (order.js:675 deletes row and object in lockstep); a
+  * GDPR erasure followed by plain SQL must stay erased.
   *
-  * With `spark.graft.morApply.enabled` on, every eligible parquet
-  * scan whose single root directory carries `_deletes/b-*` batches is
-  * rewritten to `scan ⟕̸ tombstones` — a LEFT ANTI join against the
-  * union of the delete-key batches, broadcast-hinted (the tombstone
-  * side is delete-sized, the same shape [[graft.sources.LakeSink
-  * .morRead]] builds explicitly — this rule makes it the PLAN'S
-  * default, exactly how Delta applies deletion vectors inside scan
-  * planning). The key column comes from the tombstone schema itself
-  * (one column, [[graft.sources.LakeSink.softDeleteDir]]'s shape); a
-  * scan that does not expose that column cannot have the deletes
-  * applied and REFUSES BY NAME pointing at readMor — serving
-  * resurrected rows silently is the one wrong answer.
+  * Every eligible parquet scan whose single root directory carries
+  * `_deletes/b-*` or `_updates/u-*` batches is rewritten to
+  * [[graft.sources.LakeSink.foldMor]] over the marked scan — the one
+  * fold every explicit MOR reader builds too (`scan ⟕̸ tombstones`
+  * for deletes only; `scan ⟕̸ (latest keys ∪ tombstones) ∪ latest ⟕̸
+  * tombstones` with an update log), the way Delta applies deletion
+  * vectors inside scan planning. The key comes from the log's
+  * committed `_updates/_key` marker, or from the tombstone schema
+  * itself (one column) on a delete-only table. REFUSES BY NAME: a
+  * scan that does not expose the key, update batches with no `_key`
+  * marker, and an EVOLVED table (`_updates/_schema` wider than the
+  * footer-inferred scan) — serving stale, resurrected or narrowed
+  * rows silently is the one wrong answer. The explicit MOR APIs read
+  * by EXPLICIT FILE LIST (ineligible shape), so the fold never stacks
+  * on top of their own — the union, unlike the delete anti-join, is
+  * not idempotent.
   *
-  * THE UPSERT FOLD (r14 — a33's plain-read contract, a36): a root
-  * carrying `_updates/u-*` batches rewrites to
-  * `(scan ⟕̸ updKeys∪tombs) ∪ (latest-version-per-key minus tombs)` —
-  * exactly [[graft.sources.LakeSink.morReadUpsertDir]]'s plan made
-  * the plan's default, so plain SQL over an upsert-log table serves
-  * the folded view instead of STALE rows (and sees log inserts). The
-  * key comes from the log's committed `_updates/_key` marker; the
-  * union's first child is the marked scan's anti-join, so the
-  * rewritten node keeps the original output attribute ids and every
-  * parent reference stays bound. The explicit MOR APIs read by
-  * EXPLICIT FILE LIST (ineligible shape), so the fold can never
-  * stack on top of their own — the union, unlike the delete
-  * anti-join, is not idempotent.
-  *
-  * Discipline ([[BloomPruneRule]]'s): conf-gated OFF by default;
-  * convergence-guarded through the shared
-  * [[ManifestPrune.PrunedFileIndex]] ledger under the name "mor"
-  * (the marked relation — the join's left child — is skipped on the
-  * next fixpoint pass, while the manifest prune rules still compose
-  * on it: predicates push below the anti-join's left side, so a
-  * `WHERE k = v` over a MOR table prunes files AND hides deletes in
-  * one plan); existence probes memoized on the root's mtime
-  * (creating `_deletes/` updates the root directory entry, so the
-  * memo never serves a pre-delete answer). Queries over tables with
-  * no `_deletes` pay one memoized probe and are otherwise untouched.
-  * LakeSpec pins plain-read ≡ readMor under the flag, pre/post
-  * softDelete and post-compactMor; a29 hash-checks it end to end. */
+  * The fold is spliced as its OPTIMIZED plan under a projection onto
+  * the scan's own output, so every parent reference stays bound and
+  * the injected analysis-only operators (distinct's Deduplicate) are
+  * already rewritten — the outer optimizer's once-batches have run.
+  * Discipline ([[BloomPruneRule]]'s): convergence-guarded through the
+  * shared [[ManifestPrune.PrunedFileIndex]] ledger under the name
+  * "mor" (the marked scan is skipped on the next fixpoint pass, while
+  * the manifest prune rules still compose on it: predicates push
+  * below the anti-join, so a `WHERE k = v` over a MOR table prunes
+  * files AND hides deletes in one plan); existence probes memoized on
+  * the root's mtime (creating `_deletes/` updates the root directory
+  * entry, so the memo never serves a pre-delete answer). Scans of
+  * directories without logs pay one memoized probe and are otherwise
+  * untouched. LakeSpec pins plain read ≡ readMor/morReadUpsertDir,
+  * pre/post delete and post-compaction; a29/a36 hash-check it end to
+  * end. */
 class TombstoneApplyRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import ManifestPrune._
 
-  val ConfKey = "spark.graft.morApply.enabled"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get(ConfKey, "false").toBoolean) return plan
-    plan.transformUp {
-      case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _)
-          if eligibleRoot(r).exists(!_._2.contains("mor")) =>
-        val (root, prunedBy) = eligibleRoot(r).get
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val rootMtime = fs.getFileStatus(root).getModificationTime
-        val hasDel = manifestExists(fs, root, rootMtime, "_deletes")
-        val hasUps = manifestExists(fs, root, rootMtime, "_updates")
-        if (!hasDel && !hasUps) l
-        else {
-          def glob(sub: String, pat: String) = Option(fs.globStatus(
-              new org.apache.hadoop.fs.Path(
-                new org.apache.hadoop.fs.Path(root, sub), pat)))
-            .getOrElse(Array.empty).map(_.getPath.toString)
-          val delBatches = if (hasDel) glob("_deletes", "b-*") else Array.empty[String]
-          val upsBatches = if (hasUps) glob("_updates", "u-*") else Array.empty[String]
-          if (delBatches.isEmpty && upsBatches.isEmpty) l
-          else if (hasUps &&
-              graft.sources.LakeSink.persistedSchema(fs, root.toString)
-                .exists(_.length > l.output.length))
-            // an EVOLVED table (committed `_updates/_schema` wider
-            // than this scan): the plan-time fold would run against
-            // the scan's unmerged-footer schema and silently drop the
-            // added columns — refuse by name, never serve a narrowed
-            // fold (the explicit APIs carry the widened schema)
-            throw new IllegalStateException(
-              s"MOR PLAN REFUSED: $root carries an evolved schema " +
-                "(_updates/_schema) wider than this scan — the " +
-                "plan-time fold cannot widen a footer-inferred scan; " +
-                "read through LakeSink.morReadUpsertDir, or compact " +
-                "(compactUpsertsDir) to materialize the widened table.")
-          else {
-            val tombOpt =
-              if (delBatches.isEmpty) None
-              else {
-                val t = spark.read.parquet(delBatches.toIndexedSeq: _*)
-                require(t.columns.length == 1,
-                  s"MOR PLAN REFUSED: tombstones under $root carry " +
-                    s"${t.columns.length} columns (${t.columns.mkString(",")}) " +
-                    "— not a softDeleteDir key set")
-                Some(t)
-              }
-            // the key: the tombstone schema's single column, or the
-            // update log's committed `_key` marker — both REQUIRED to
-            // agree when both logs are pending (one key per table)
-            val logKey = graft.sources.LakeSink.updateLogKey(fs, root.toString)
-            if (upsBatches.nonEmpty && logKey.isEmpty)
-              throw new IllegalStateException(
-                s"MOR PLAN REFUSED: $root carries update batches but no " +
-                  "_updates/_key marker — not a softUpsertDir log; read " +
-                  "the directory through an explicit API or remove _updates/.")
-            val key = logKey.orElse(tombOpt.map(_.columns.head)).get
-            tombOpt.foreach(t => require(logKey.forall(_ == t.columns.head),
-              s"MOR PLAN REFUSED: $root's update log is keyed on " +
-                s"'${logKey.get}' but its tombstones on '${t.columns.head}'"))
-            val resolver = spark.sessionState.conf.resolver
-            val keyAttr = l.output.find(a => resolver(a.name, key))
-              .getOrElse(throw new IllegalStateException(
-                s"MOR PLAN REFUSED: $root carries pending merge-on-read " +
-                  s"state keyed on '$key' but this scan does not expose " +
-                  "that column — the fold cannot be applied and serving " +
-                  "stale or resurrected rows silently is not an option. " +
-                  "Read through LakeSink.readMor/morReadUpsertDir, or " +
-                  "compact the table."))
-            // marked left child (all files kept — the mark is the
-            // point): the fixpoint batch must not stack a second
-            // fold; the prune rules still compose on it
-            val marked = pruneRelation(spark, l, r, root, prunedBy, "mor",
-              r.location.inputFiles.map(f =>
-                new org.apache.hadoop.fs.Path(f).getName).toSet)
-            if (upsBatches.isEmpty) {
-              // deletes only — exactly morRead's broadcast anti-join
-              // (idempotent by construction: no NULL keys, so a
-              // second application would drop nothing more)
-              val tplan = tombOpt.get.queryExecution.analyzed
-              Join(marked, tplan, LeftAnti,
-                Some(EqualTo(keyAttr, tplan.output.head)),
-                JoinHint(None, Some(HintInfo(strategy = Some(BROADCAST)))))
-            } else {
-              // THE UPSERT FOLD (a36 — a33's plain-read contract):
-              //   Union(base ⟕̸ (updKeys ∪ tombs),  latest minus tombs)
-              // exactly morReadUpsertDir's plan, built here so plain
-              // spark.sql serves the folded view. The union's FIRST
-              // child is the marked scan's anti-join, so the node
-              // keeps the original output attribute ids and every
-              // parent reference stays bound.
-              import org.apache.spark.sql.functions.{broadcast, col,
-                lit, row_number}
-              import org.apache.spark.sql.expressions.Window
-              val log = upsBatches.sorted.map { p =>
-                val seq = new org.apache.hadoop.fs.Path(p).getName
-                  .split("-")(1).toLong
-                spark.read.parquet(p).withColumn("_u_seq", lit(seq))
-              }.reduce(_.unionByName(_))
-              val latest = log
-                .withColumn("_rn", row_number().over(
-                  Window.partitionBy(col(key)).orderBy(col("_u_seq").desc)))
-                .filter(col("_rn") === 1)
-                .select(l.output.map(a => col(a.name)).toIndexedSeq: _*)
-              val latestKept = tombOpt.fold(latest)(t =>
-                latest.join(broadcast(t), Seq(key), "left_anti"))
-              val hide = tombOpt.fold(latest.select(col(key)))(t =>
-                latest.select(col(key)).unionByName(t)).distinct()
-              // OPTIMIZED sub-plans, not analyzed: the injected trees
-              // carry analysis-only operators (distinct's Deduplicate)
-              // that the outer optimizer's already-run batches would
-              // never rewrite — planning them raw is an internal error
-              val hplan = hide.queryExecution.optimizedPlan
-              val anti = Join(marked, hplan, LeftAnti,
-                Some(EqualTo(keyAttr, hplan.output.head)),
-                JoinHint(None, Some(HintInfo(strategy = Some(BROADCAST)))))
-              org.apache.spark.sql.catalyst.plans.logical.Union(
-                Seq(anti, latestKept.queryExecution.optimizedPlan))
-            }
-          }
-        }
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+        if eligibleRoot(r).exists(!_._2.contains("mor")) =>
+      val (root, prunedBy) = eligibleRoot(r).get
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val rootMtime = fs.getFileStatus(root).getModificationTime
+      val dir = root.toString
+      val hasUps = manifestExists(fs, root, rootMtime, "_updates")
+      val ups = if (hasUps) LakeSink.updateBatches(fs, dir) else Nil
+      val logKey = if (hasUps) LakeSink.updateLogKey(fs, dir) else None
+      val tomb =
+        if (manifestExists(fs, root, rootMtime, "_deletes"))
+          LakeSink.tombstoneKeys(spark, fs, dir, logKey)
+        else None
+      if (ups.isEmpty && tomb.isEmpty) l
+      else {
+        if (ups.nonEmpty &&
+            LakeSink.persistedSchema(fs, dir).exists(_.length > l.output.length))
+          throw new IllegalStateException(
+            s"MOR PLAN REFUSED: $root carries an evolved schema " +
+              "(_updates/_schema) wider than this scan — the " +
+              "plan-time fold cannot widen a footer-inferred scan; " +
+              "read through LakeSink.morReadUpsertDir, or compact " +
+              "(compactUpsertsDir) to materialize the widened table.")
+        if (ups.nonEmpty && logKey.isEmpty)
+          throw new IllegalStateException(
+            s"MOR PLAN REFUSED: $root carries update batches but no " +
+              "_updates/_key marker — not a softUpsertDir log; read " +
+              "the directory through an explicit API or remove _updates/.")
+        val key = logKey.orElse(tomb.map(_.columns.head)).get
+        val resolver = spark.sessionState.conf.resolver
+        if (!l.output.exists(a => resolver(a.name, key)))
+          throw new IllegalStateException(
+            s"MOR PLAN REFUSED: $root carries pending merge-on-read " +
+              s"state keyed on '$key' but this scan does not expose " +
+              "that column — the fold cannot be applied and serving " +
+              "stale or resurrected rows silently is not an option. " +
+              "Read through LakeSink.readMor/morReadUpsertDir, or " +
+              "compact the table.")
+        // marked scan (all files kept — the mark is the point): the
+        // fixpoint batch must not stack a second fold; the prune
+        // rules still compose on it
+        val marked = pruneRelation(spark, l, r, root, prunedBy, "mor",
+          r.location.inputFiles.map(f =>
+            new org.apache.hadoop.fs.Path(f).getName).toSet)
+        val fold = LakeSink.foldMor(GraftBridge.ofRows(spark, marked), key,
+          LakeSink.taggedLog(spark, fs, dir, ups), tomb)
+        Project(l.output, fold.queryExecution.optimizedPlan)
+      }
   }
 }

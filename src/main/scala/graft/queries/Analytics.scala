@@ -1986,28 +1986,15 @@ object Analytics {
     t(s, d, "orders").orderBy("o_orderkey").limit(50)
       .select(col("o_orderkey"))
       .coalesce(1).write.mode("overwrite").parquet(pageDir)
-    // the conf is scoped to THIS query: the result materializes
-    // (localCheckpoint forces optimization + execution with the rule
-    // on) inside try/finally, so later queries on the shared session
-    // run with the default-off discipline intact — a leaked "true"
-    // would contaminate every subsequent bench/verify timing
-    val prior = s.conf.getOption("spark.graft.dynFilePrune.enabled")
-    s.conf.set("spark.graft.dynFilePrune.enabled", "true")
-    try {
-      s.read.parquet(factDir).createOrReplaceTempView("q60_fact")
-      s.read.parquet(pageDir).createOrReplaceTempView("q60_page")
-      s.sql("""
-        SELECT o_orderkey, count(*) AS n_items,
-          CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-          sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT))
-            AS sum_cents
-        FROM q60_fact JOIN q60_page ON l_orderkey = o_orderkey
-        GROUP BY o_orderkey ORDER BY o_orderkey""")
-        .localCheckpoint(true)
-    } finally prior match {
-      case Some(v) => s.conf.set("spark.graft.dynFilePrune.enabled", v)
-      case None => s.conf.unset("spark.graft.dynFilePrune.enabled")
-    }
+    s.read.parquet(factDir).createOrReplaceTempView("q60_fact")
+    s.read.parquet(pageDir).createOrReplaceTempView("q60_page")
+    Q.withConfs(s, "spark.graft.dynFilePrune.enabled" -> "true")(s.sql("""
+      SELECT o_orderkey, count(*) AS n_items,
+        CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+        sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT))
+          AS sum_cents
+      FROM q60_fact JOIN q60_page ON l_orderkey = o_orderkey
+      GROUP BY o_orderkey ORDER BY o_orderkey"""))
   }
 
   val qs: Seq[Q] = Seq(q1, q2, q3, q4, q5, q6, q7, q8, q9, q10,

@@ -700,9 +700,7 @@ object Crud {
     * the rewrite is correctness-neutral BY CONSTRUCTION, which is
     * what sharing a23's oracle hash-proves). CatalystRuleSpec pins
     * the pruning itself (8 files → ≤2), default-off, the spark.sql
-    * path, and the no-manifest bail. The conf stays on for the
-    * session once this query runs — the rule never changes results,
-    * only files read. */
+    * path, and the no-manifest bail. */
   val a24 = Q("a24_bloom_prune_rule", Some("""
     SELECT o_orderkey, o_custkey, o_orderstatus,
       CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS price_cents
@@ -714,14 +712,15 @@ object Crud {
     val st = s.read.parquet(s"$dir/_stats")
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
-    s.conf.set("spark.graft.bloomPrune.enabled", "true")
-    s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(0))
-      .unionByName(
-        s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(1)))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-          .as("price_cents"))
-      .orderBy("o_orderkey")
+    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true") {
+      s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(0))
+        .unionByName(
+          s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(1)))
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+            .as("price_cents"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** a25: PAGED point lookups — `o_orderkey IN (k1, k2, …)` through
@@ -745,13 +744,14 @@ object Crud {
     val st = s.read.parquet(s"$dir/_stats")
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
-    s.conf.set("spark.graft.bloomPrune.enabled", "true")
-    s.read.parquet(dir)
-      .filter(col("o_orderkey").isin(st.getLong(0), st.getLong(1), -1L))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-          .as("price_cents"))
-      .orderBy("o_orderkey")
+    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true") {
+      s.read.parquet(dir)
+        .filter(col("o_orderkey").isin(st.getLong(0), st.getLong(1), -1L))
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+            .as("price_cents"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** a26: a20's RANGE skipping through PLAIN `spark.sql` with
@@ -773,15 +773,16 @@ object Crud {
       AND o_orderdate <= TIMESTAMP '1995-03-31 23:59:59'
     GROUP BY o_orderstatus ORDER BY o_orderstatus""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
-    s.read.parquet(dir)
-      .filter(col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp") &&
-        col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp"))
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-          .as("sum_cents"))
-      .orderBy("o_orderstatus")
+    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
+      s.read.parquet(dir)
+        .filter(col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp") &&
+          col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp"))
+        .groupBy("o_orderstatus")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+            .as("sum_cents"))
+        .orderBy("o_orderstatus")
+    }
   }
 
   // table copy with TWO delete-snapshot generations (r13: softDelete
@@ -901,32 +902,31 @@ object Crud {
       AND o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
       AND o_orderdate <= TIMESTAMP '1995-12-31 23:59:59'""")) { (s, d) =>
     val dir = ensureZOrderedOrders(s, d)
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
-    s.read.parquet(dir)
-      .filter(col("o_custkey") >= 100L && col("o_custkey") <= 400L &&
-        col("o_orderdate") >= lit("1994-01-01 00:00:00").cast("timestamp") &&
-        col("o_orderdate") <= lit("1995-12-31 23:59:59").cast("timestamp"))
-      .agg(count(lit(1)).as("n_orders"),
-        count_distinct(col("o_custkey")).as("n_custs"),
-        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-          .as("sum_cents"))
+    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
+      s.read.parquet(dir)
+        .filter(col("o_custkey") >= 100L && col("o_custkey") <= 400L &&
+          col("o_orderdate") >= lit("1994-01-01 00:00:00").cast("timestamp") &&
+          col("o_orderdate") <= lit("1995-12-31 23:59:59").cast("timestamp"))
+        .agg(count(lit(1)).as("n_orders"),
+          count_distinct(col("o_custkey")).as("n_custs"),
+          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+            .as("sum_cents"))
+    }
   }
 
   /** a29: a22's MERGE-ON-READ view through PLAIN `spark.read.parquet`
-    * with [[graft.plans.TombstoneApplyRule]] enabled — the
-    * resurrection hole closed where it lived: the scan is a plain
-    * read, not `morRead`, and the conf-gated planner rule injects the
-    * tombstone anti-join over it (broadcast, delete-sized — the exact
-    * plan morRead builds explicitly, now the PLAN'S default, the way
-    * Delta applies deletion vectors in scan planning). The reference
-    * deletes a row and its object in lockstep and expects neither to
-    * ever serve again (order.js:675); with this rule a GDPR erasure
+    * — the resurrection hole closed where it lived: the scan is a
+    * plain read, not `morRead`, and [[graft.plans.TombstoneApplyRule]]
+    * injects the tombstone anti-join over it (broadcast, delete-sized
+    * — the exact plan morRead builds explicitly, the PLAN'S default,
+    * the way Delta applies deletion vectors in scan planning). The
+    * reference deletes a row and its object in lockstep and expects
+    * neither to ever serve again (order.js:675); a GDPR erasure
     * followed by any plain SQL stays erased. Shares a22's oracle —
-    * plain-read-under-the-rule ≡ explicit merge-on-read view ≡ the
-    * delete predicates over the raw table, hash-proved. The conf is
-    * scoped to this query's plan (time travel reads as-published via
-    * explicit file lists; LakeSpec pins travel + refusal + compaction
-    * under the flag). */
+    * plain read ≡ explicit merge-on-read view ≡ the delete predicates
+    * over the raw table, hash-proved (time travel reads as-published
+    * via explicit file lists; LakeSpec pins travel + refusal +
+    * compaction). */
   val a29 = Q("a29_mor_sql_rule", Some("""
     SELECT o_orderstatus, count(*) AS n_orders,
       CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
@@ -936,7 +936,6 @@ object Crud {
       AND NOT (o_orderstatus = 'F' AND o_orderkey % 7 = 2)
     GROUP BY o_orderstatus ORDER BY o_orderstatus""")) { (s, d) =>
     val dir = ensureMorOrders(s, d)
-    s.conf.set("spark.graft.morApply.enabled", "true")
     s.read.parquet(dir)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
@@ -969,23 +968,24 @@ object Crud {
       AND o_orderdate <= t.d0 + INTERVAL 15 DAY
     ORDER BY o_orderkey""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    s.conf.set("spark.graft.bloomPrune.enabled", "true")
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
     val mk = s.read.parquet(s"$dir/_stats")
       .agg(min("min_o_orderkey")).head().getLong(0)
-    // the row's own date through the bloom-pruned point lookup
-    // (TIMESTAMP_NTZ column — the tables' uniform timestamp type)
-    val d0 = s.read.parquet(dir).filter(col("o_orderkey") === mk)
-      .agg(min("o_orderdate")).head()
-      .getAs[java.time.LocalDateTime](0)
-    val (lo, hi) = (d0.minusDays(15), d0.plusDays(15))
-    s.read.parquet(dir)
-      .filter(col("o_orderkey") === mk &&
-        col("o_orderdate") >= lit(lo) && col("o_orderdate") <= lit(hi))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-          .as("price_cents"))
-      .orderBy("o_orderkey")
+    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true",
+        "spark.graft.statsPrune.enabled" -> "true") {
+      // the row's own date through the bloom-pruned point lookup
+      // (TIMESTAMP_NTZ column — the tables' uniform timestamp type)
+      val d0 = s.read.parquet(dir).filter(col("o_orderkey") === mk)
+        .agg(min("o_orderdate")).head()
+        .getAs[java.time.LocalDateTime](0)
+      val (lo, hi) = (d0.minusDays(15), d0.plusDays(15))
+      s.read.parquet(dir)
+        .filter(col("o_orderkey") === mk &&
+          col("o_orderdate") >= lit(lo) && col("o_orderdate") <= lit(hi))
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+            .as("price_cents"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** a31: IN-list skipping WITHOUT a bloom — [[graft.plans
@@ -1006,17 +1006,18 @@ object Crud {
                           (SELECT max(o_orderdate) FROM orders))
     GROUP BY 1 ORDER BY 1""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
     val st = s.read.parquet(s"$dir/_stats")
       .agg(min("min_o_orderdate").as("lo"), max("max_o_orderdate").as("hi"))
       .head()
-    s.read.parquet(dir)
-      .filter(col("o_orderdate").isin(st.getAs[Any](0), st.getAs[Any](1)))
-      .groupBy(col("o_orderdate").cast("date").as("odate"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-          .as("sum_cents"))
-      .orderBy("odate")
+    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
+      s.read.parquet(dir)
+        .filter(col("o_orderdate").isin(st.getAs[Any](0), st.getAs[Any](1)))
+        .groupBy(col("o_orderdate").cast("date").as("odate"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+            .as("sum_cents"))
+        .orderBy("odate")
+    }
   }
 
   // HIVE-PARTITIONED copy of orders (o_orderstatus dirs, date-sliced
@@ -1076,15 +1077,16 @@ object Crud {
       AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
       AND o_orderdate <= TIMESTAMP '1995-03-31 23:59:59'""")) { (s, d) =>
     val dir = ensurePartitionedOrders(s, d)
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
-    s.read.parquet(dir)
-      .filter(col("o_orderstatus") === "F" &&
-        col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp_ntz") &&
-        col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp_ntz"))
-      .agg(count(lit(1)).as("n_orders"),
-        count_distinct(col("o_custkey")).as("n_custs"),
-        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-          .as("sum_cents"))
+    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
+      s.read.parquet(dir)
+        .filter(col("o_orderstatus") === "F" &&
+          col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp_ntz") &&
+          col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp_ntz"))
+        .agg(count(lit(1)).as("n_orders"),
+          count_distinct(col("o_custkey")).as("n_custs"),
+          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+            .as("sum_cents"))
+    }
   }
 
   // same stamped-tmp/atomic-rename discipline as ensureMorOrders: the
@@ -1212,18 +1214,16 @@ object Crud {
     * without it, `spark.read.parquet(dir)` over an `_updates`-carrying
     * table serves STALE rows and misses log inserts — the UPDATE
     * sibling of the r13 tombstone-resurrection hole (closed as a29).
-    * With `spark.graft.morApply.enabled` on, the eligible scan
-    * rewrites to `(base ⟕̸ updKeys∪tombs) ∪ (latest minus tombs)` —
-    * exactly `morReadUpsertDir`'s plan, now the PLAN's default; the
+    * The eligible scan rewrites to
+    * `(base ⟕̸ updKeys∪tombs) ∪ (latest minus tombs)` — exactly
+    * `morReadUpsertDir`'s fold, the PLAN's default; the
     * key comes from the log's committed `_updates/_key` marker, a
     * key-less scan refuses by name, and the explicit APIs read by
     * file list so the fold can never stack twice. Shares a33's
-    * oracle: plain-read-under-the-rule ≡ explicit view ≡ the SQL
-    * reconstruction, hash-proved. */
+    * oracle: plain read ≡ explicit view ≡ the SQL reconstruction,
+    * hash-proved. */
   val a36 = Q("a36_mor_upsert_sql_rule", Some(a33OracleSql)) { (s, d) =>
-    val dir = ensureUpsertOrders(s, d)
-    s.conf.set("spark.graft.morApply.enabled", "true")
-    upsertViewAgg(s.read.parquet(dir))
+    upsertViewAgg(s.read.parquet(ensureUpsertOrders(s, d)))
   }
 
   // the a34 rule set — the SAME predicate text runs as Spark SQL in
@@ -1511,7 +1511,6 @@ object Crud {
     FROM v WHERE NOT (k % 17 = 3) AND st IN ('F', 'U')
     GROUP BY st ORDER BY st""")) { (s, d) =>
     val dir = ensurePartUpsertOrders(s, d)
-    s.conf.set("spark.graft.morApply.enabled", "true")
     upsertViewAgg(s.read.parquet(dir)
       .filter(col("o_orderstatus").isin("F", "U")))
   }
@@ -2307,9 +2306,8 @@ object Crud {
       graft.sources.LakeSink.registerKeyDir(s, bp, "o_orderkey")
       s.sql(s"UPDATE parquet.`$bp` SET o_totalprice = o_totalprice " +
         "+ 1000.0 WHERE o_orderkey % 13 = 1")
-      s.conf.set("spark.graft.optimize.targetRecordsPerFile", "2000")
-      try s.sql(s"OPTIMIZE parquet.`$bp` ZORDER BY (o_custkey, o_orderkey)")
-      finally s.conf.unset("spark.graft.optimize.targetRecordsPerFile")
+      Q.withConfs(s, "spark.graft.optimize.targetRecordsPerFile" -> "2000")(
+        s.sql(s"OPTIMIZE parquet.`$bp` ZORDER BY (o_custkey, o_orderkey)"))
     }
 
   /** a51: `OPTIMIZE … ZORDER BY` — the SQL path from "my table is
@@ -2334,15 +2332,12 @@ object Crud {
       CAST(max(o_orderkey) AS BIGINT) AS max_k
     FROM v WHERE o_custkey BETWEEN 100 AND 220""")) { (s, d) =>
     val dir = ensureZOrderOrders(s, d)
-    s.conf.set("spark.graft.statsPrune.enabled", "true")
-    try s.sql(s"""
+    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true")(s.sql(s"""
       SELECT count(*) AS n_orders,
         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
           AS BIGINT) AS sum_cents,
         min(o_orderkey) AS min_k, max(o_orderkey) AS max_k
-      FROM parquet.`$dir` WHERE o_custkey BETWEEN 100 AND 220""")
-      .localCheckpoint(true)
-    finally s.conf.unset("spark.graft.statsPrune.enabled")
+      FROM parquet.`$dir` WHERE o_custkey BETWEEN 100 AND 220"""))
   }
 
   private def ensureVacuumOrders(s: SparkSession, d: String): String =
@@ -2362,9 +2357,8 @@ object Crud {
       s.sql("DELETE FROM a52_vac_orders WHERE o_orderkey % 23 = 7")
       s.sql("OPTIMIZE a52_vac_orders") // folds the log in place at g1
       graft.sources.LakeSink.compactTable(s, "a52_vac_orders", 10000L) // g2
-      s.conf.set("spark.graft.vacuum.retentionCheck.enabled", "false")
-      try s.sql("VACUUM a52_vac_orders RETAIN 0 MINUTES")
-      finally s.conf.unset("spark.graft.vacuum.retentionCheck.enabled")
+      Q.withConfs(s, "spark.graft.vacuum.retentionCheck.enabled" -> "false")(
+        s.sql("VACUUM a52_vac_orders RETAIN 0 MINUTES"))
       s.sql("DROP TABLE IF EXISTS a52_vac_orders")
     }
 
@@ -2544,11 +2538,8 @@ object Crud {
       s.sql("UPDATE graft_a55.orders_t SET o_orderstatus = 'U' " +
         "WHERE o_orderkey % 13 = 1")
       s.sql("DELETE FROM graft_a55.orders_t WHERE o_orderkey % 17 = 3")
-      // the INSERT source is a temp view over the RAW source table —
-      // a read of the target itself would be ambient-conf-dependent
-      // (under morApply a plain read of the log-carrying dir folds;
-      // without it, it serves the stale base): fixture builds must be
-      // deterministic under ANY session state
+      // the INSERT source is a temp view over the RAW source table,
+      // not a read of the target (which serves its folded view)
       t(s, d, "orders").filter(col("o_orderkey") % 29 === 11)
         .createOrReplaceTempView("a55_ins_src")
       s.sql("INSERT INTO graft_a55.orders_t " +

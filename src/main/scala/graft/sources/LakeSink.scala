@@ -325,12 +325,21 @@ object LakeSink {
       p: org.apache.hadoop.fs.Path): Boolean =
     fs.exists(new org.apache.hadoop.fs.Path(p, DeleteMarker))
 
+  /** `fs.globStatus` with no match as empty (Hadoop returns null) */
+  private def glob(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    Option(fs.globStatus(p)).getOrElse(Array.empty)
+
+  /** the committed tombstone batches of `dir` (`_deletes/b-*`) */
+  private def deleteBatches(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Array[org.apache.hadoop.fs.FileStatus] =
+    glob(fs, new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dir, "_deletes"), "b-*"))
+
   /** does the live data generation carry tombstone batches? */
   private def hasTombstones(fs: org.apache.hadoop.fs.FileSystem,
       loc: org.apache.hadoop.fs.Path): Boolean =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*")))
-      .exists(_.nonEmpty)
+    deleteBatches(fs, loc.toString).nonEmpty
 
   /** the data generation a delete snapshot resolves through */
   private def readDataGenRef(fs: org.apache.hadoop.fs.FileSystem,
@@ -358,11 +367,9 @@ object LakeSink {
     val curLoc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = curLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (stem, catGen) = parseGen(curLoc.getName)
-    def glob(p: org.apache.hadoop.fs.Path) =   // null, not empty, on no match
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
     val siblings =
-      (glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
-        glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
+      (glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
+        glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
         .filterNot(_.getPath.getName.endsWith(".claim"))
     // PENDING-DELETE REFUSAL (the tombstone-resurrection guard): this
     // publish writes the next generation from `spark.table(table)`,
@@ -578,24 +585,20 @@ object LakeSink {
   /** a DATA generation read AS PUBLISHED — time travel's contract:
     * rows soft-deleted AFTER the snapshot are post-snapshot state and
     * must stay visible (the delete-snapshot branch hides exactly the
-    * keys deleted BY its snapshot, from its own `_tombstones`). With
-    * [[graft.plans.TombstoneApplyRule]] enabled, a single-root read
-    * of the directory would anti-join the live `_deletes` — turning
-    * every travel read into the live view — so travel reads by
-    * EXPLICIT FILE LIST (multi-root: the rule's eligible shape does
+    * keys deleted BY its snapshot, from its own `_tombstones`). A
+    * single-root read of the directory would have
+    * [[graft.plans.TombstoneApplyRule]] anti-join the live `_deletes`
+    * — turning every travel read into the live view — so travel reads
+    * by EXPLICIT FILE LIST (multi-root: the rule's eligible shape does
     * not match, by design). Generations are immutable, so the listed
     * snapshot is exactly the directory. */
   private def readAsPublished(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       format: String): DataFrame = {
-    if (!spark.conf.get("spark.graft.morApply.enabled", "false").toBoolean)
-      spark.read.format(format).load(dir)
-    else {
-      val files = dataFileNames(fs, dir).toSeq.sorted
-        .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
-      if (files.isEmpty) spark.read.format(format).load(dir)
-      else spark.read.format(format).load(files: _*)
-    }
+    val files = dataFileNames(fs, dir).toSeq.sorted
+      .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
+    if (files.isEmpty) spark.read.format(format).load(dir)
+    else spark.read.format(format).load(files: _*)
   }
 
   private def generationPaths(spark: SparkSession, table: String)
@@ -608,15 +611,13 @@ object LakeSink {
     val curLoc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = curLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (stem, catGen) = parseGen(curLoc.getName)
-    def glob(p: org.apache.hadoop.fs.Path) =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
     // retained snapshots: data generations at or below the catalog
     // generation, plus PUBLISHED delete snapshots (marker present —
     // these sit ABOVE the catalog generation until a compactMor
     // folds them; an unmarked newer dir is a crashed copy)
     val gens =
-      (glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
-        glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
+      (glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
+        glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
         .filterNot(_.getPath.getName.endsWith(".claim")) // publish locks, not snapshots
         .filter(st => parseGen(st.getPath.getName)._2 <= catGen ||
           isDeleteGen(fs, st.getPath))
@@ -793,7 +794,7 @@ object LakeSink {
       // manifest is empty — a 0-row table describes no files); the
       // manifest-only variant needs a file row to resolve a schema.
       anchor match {
-        case Some(d) => spark.read.parquet(d).filter(lit(false))
+        case Some(d) => readDataFilesList(spark, d).filter(lit(false))
         case None =>
           val any = anchored(manifest.select("file").head().getString(0))
           spark.read.parquet(any).filter(lit(false))
@@ -866,52 +867,33 @@ object LakeSink {
     } else fs.create(path, false).close()
   }
 
-  /** STALE-CLAIM RECLAMATION BY RENAME — never delete-then-create:
-    * the old path (stat → delete → createExclusive) let writer B's
-    * delete remove writer A's FRESH claim when A reclaimed and
-    * re-acquired between B's stat and B's delete — both then held.
-    * Here the stale claim is MOVED ASIDE with one atomic rename to a
-    * per-reclaimer-unique grave: renames of the same source race such
-    * that exactly ONE succeeds (the source is gone for the rest), so
-    * exactly one reclaimer proceeds; and the winner re-checks the
-    * GRAVE's mtime (rename preserves it) before discarding — if it
-    * turns out to have displaced a claim that became fresh in the
-    * stat-to-rename window, it RESTORES it instead of deleting, and
-    * refuses. A fresh claim is never deleted, by construction. */
+  /** STALE-CLAIM RECLAMATION UNDER A MUTEX. Reclaimers serialize
+    * through one exclusive-create `.<claim>.reclaim` file; the holder
+    * re-stats the claim and deletes it only if it is STILL stale.
+    * Only a mutex holder ever deletes a claim, and a present claim
+    * cannot be re-created, so the claim a holder re-stats as stale is
+    * the one it deletes — a fresh claim is never removed or moved
+    * aside, so no window exists in which a second writer could
+    * acquire beside it. Losing the mutex race just skips the
+    * reclaim; the caller's exclusive create decides the winner. The
+    * mutex is held for one stat and one delete; a mutex older than
+    * `retainMs` was left by a crashed reclaimer and is cleared. It is
+    * dot-prefixed so generation globs (`stem.g*`) never list it. */
   private def reclaimStaleClaim(fs: org.apache.hadoop.fs.FileSystem,
       claim: org.apache.hadoop.fs.Path, retainMs: Long): Unit = {
-    // graves are DOT-PREFIXED: generation machinery globs the claim's
-    // parent for sibling generations (`stem.g*`), and a grave that
-    // matched would read as a bogus generation entry
-    def gravePath(suffix: String) = new org.apache.hadoop.fs.Path(
-      claim.getParent, s".${claim.getName}.reclaim-$suffix")
-    // sweep graves a crashed reclaimer left behind, under the same
-    // retention contract as the claims themselves
-    val now = System.currentTimeMillis()
-    Option(fs.globStatus(gravePath("*")))
-      .getOrElse(Array.empty)
-      .filter(g => now - g.getModificationTime > retainMs)
-      .foreach(g => scala.util.Try(fs.delete(g.getPath, false)))
-    val st =
-      try fs.getFileStatus(claim)
-      catch { case _: java.io.FileNotFoundException => return }
-    if (System.currentTimeMillis() - st.getModificationTime <= retainMs)
-      return
-    val grave = gravePath(java.util.UUID.randomUUID().toString.take(8))
-    if (!fs.rename(claim, grave)) return // lost the reclaim race
-    val gst = fs.getFileStatus(grave)
-    if (System.currentTimeMillis() - gst.getModificationTime > retainMs) {
-      // verified stale in our exclusive possession: the crashed claim
-      scala.util.Try(fs.delete(grave, false))
-    } else if (!fs.rename(grave, claim)) {
-      // we displaced a FRESH claim (acquired between our stat and our
-      // rename) and a third writer claimed in the gap — refuse loudly
-      // with the displaced claim preserved in the grave, never deleted
-      throw new IllegalStateException(
-        s"claim reclaim displaced a fresh claim at $claim and could " +
-          s"not restore it — displaced claim preserved at $grave; " +
-          "resolve manually")
-    }
+    def stale(p: org.apache.hadoop.fs.Path): Boolean =
+      try System.currentTimeMillis() -
+        fs.getFileStatus(p).getModificationTime > retainMs
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!stale(claim)) return
+    val n = claim.getName
+    val mutex = new org.apache.hadoop.fs.Path(claim.getParent,
+      s"${if (n.startsWith(".")) n else "." + n}.reclaim")
+    if (stale(mutex)) fs.delete(mutex, false)
+    try createExclusive(fs, mutex)
+    catch { case _: java.io.IOException => return }
+    try if (stale(claim)) fs.delete(claim, false)
+    finally fs.delete(mutex, false)
   }
 
   /** acquire the claim at `path`, reclaiming a crashed one past
@@ -1021,9 +1003,7 @@ object LakeSink {
 
   private def logSeqs(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Seq[Long] = {
-    val delSeqs = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(dir, "_deletes"), "b-*")))
-      .getOrElse(Array.empty).toIndexedSeq
+    val delSeqs = deleteBatches(fs, dir).toIndexedSeq
       .map(st => tombstoneBatchSeq(st.getPath.getName).getOrElse(0L))
     updateBatches(fs, dir).map(_._1) ++ delSeqs
   }
@@ -1091,29 +1071,15 @@ object LakeSink {
     * the delete-key union is tombstone-sized and broadcasts — the
     * fact side never shuffles for its own deletes. The key column
     * must match what [[softDeleteDir]] landed (checked by name
-    * against the tombstone schema). */
+    * against the tombstone schema). The data files are read by
+    * explicit list, so this stays the BASE view even on a directory
+    * that also carries an update log (a single-root read would fold
+    * it). */
   def morRead(spark: SparkSession, dir: String, key: String): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    // explicit file list = rule-proof AND flag-independent: with
-    // TombstoneApplyRule on, a single-root read of a dir that ALSO
-    // carries `_updates` would be rewritten into the upsert fold —
-    // silently turning this documented base-view read into upsert
-    // semantics depending on a session conf
-    val data = readDataFilesList(spark, dir)
-    val loc = new org.apache.hadoop.fs.Path(dir)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dels = new org.apache.hadoop.fs.Path(loc, "_deletes")
-    val batches = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(dels, "b-*")))
-      .getOrElse(Array.empty).map(_.getPath.toString)
-    if (batches.isEmpty) data
-    else {
-      val tomb = spark.read.parquet(batches.toIndexedSeq: _*)
-      require(tomb.columns.toSeq == Seq(key),
-        s"MOR READ REFUSED: tombstones carry key '${tomb.columns.mkString(",")}', " +
-          s"read asked for '$key'")
-      data.join(broadcast(tomb), Seq(key), "left_anti")
-    }
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    foldMor(readDataFilesList(spark, dir), key, None,
+      tombstoneKeys(spark, fs, dir, Some(key)))
   }
 
   /** catalog-level [[softDeleteDir]] — and a COMMIT in the snapshot
@@ -1152,9 +1118,7 @@ object LakeSink {
       catalog.getTableMetadata(ident).location)
     val fs = curLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (stem, catGen) = parseGen(curLoc.getName)
-    def glob(p: org.apache.hadoop.fs.Path) =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val deleteGens = glob(new org.apache.hadoop.fs.Path(curLoc.getParent,
+    val deleteGens = glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent,
         stem + ".g*"))
       .filterNot(_.getPath.getName.endsWith(".claim"))
       .filter(st => st.getPath != curLoc && isDeleteGen(fs, st.getPath))
@@ -1178,10 +1142,7 @@ object LakeSink {
       val next = new org.apache.hadoop.fs.Path(curLoc.getParent,
         s"$stem.g${gen + 1}")
       fs.delete(next, true) // a crashed prior attempt's unmarked copy
-      val tomb = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(curLoc, "_deletes"), "b-*")
-      val batches = glob(tomb).map(_.getPath.toString)
-      val union = spark.read.parquet(batches.toIndexedSeq: _*)
+      val union = tombstoneKeys(spark, fs, curLoc.toString, Some(key)).get
         .distinct().localCheckpoint(true)
       val expected = union.count()
       // multi-file snapshot: the cumulative tombstone set grows with
@@ -1204,7 +1165,7 @@ object LakeSink {
       // retention window — publishes can't (they refuse on pending
       // tombstones), so the delete path GCs its own history
       val now = System.currentTimeMillis()
-      glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*"))
+      glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*"))
         .filterNot(st => st.getPath.getName.endsWith(".claim") ||
           st.getPath == curLoc || st.getPath == next)
         .filter(st => isDeleteGen(fs, st.getPath) &&
@@ -1250,17 +1211,14 @@ object LakeSink {
   /** the committed update-log batches of `dir`, (seq, path) in landed
     * order — `_updates/u-<seq>-<tag>` directories, `_`-hidden from
     * every plain data read like `_deletes` is. */
-  private def updateBatches(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(Long, String)] = {
-    val ups = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(dir), "_updates")
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(ups, "u-*")))
-      .getOrElse(Array.empty).toIndexedSeq
+  private[graft] def updateBatches(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[(Long, String)] =
+    glob(fs, new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(dir, "_updates"), "u-*")).toIndexedSeq
       .map { st =>
         val n = st.getPath.getName // u-<seq>-<tag>
         (n.split("-")(1).toLong, st.getPath.toString)
       }.sortBy(_._1)
-  }
 
   /** the update log's committed KEY column (`_updates/_key`) — landed
     * with the first batch so PLAN-TIME consumers
@@ -1286,9 +1244,8 @@ object LakeSink {
   private def schemaVersions(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
     val ups = new org.apache.hadoop.fs.Path(dir, "_updates")
-    val versioned = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(ups, "_schema-*")))
-      .getOrElse(Array.empty).toIndexedSeq
+    val versioned = glob(fs,
+        new org.apache.hadoop.fs.Path(ups, "_schema-*")).toIndexedSeq
       .flatMap { st =>
         scala.util.Try(
           st.getPath.getName.stripPrefix("_schema-").toLong).toOption
@@ -1328,15 +1285,59 @@ object LakeSink {
         .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
 
-  /** a reader for this directory's LOG BATCH files: the evolved
-    * schema when committed (old batches null-fill new columns), the
-    * files' own schema otherwise. Resolved once per fold, not per
-    * batch. */
-  private def logBatchReader(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): String => DataFrame = {
-    val sch = persistedSchema(fs, dir)
-    p => sch.fold(spark.read)(s0 => spark.read.schema(s0)).parquet(p)
+  /** the chosen update batches `ups` of `dir` as ONE seq-tagged
+    * (`_u_seq`) union, None when there are none. Batch files read
+    * through the evolved schema when one is committed (old batches
+    * null-fill new columns), their own schema otherwise — resolved
+    * once per read, not per batch. */
+  private[graft] def taggedLog(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      ups: Seq[(Long, String)]): Option[DataFrame] =
+    if (ups.isEmpty) None
+    else {
+      val rd = persistedSchema(fs, dir)
+        .fold(spark.read)(s0 => spark.read.schema(s0))
+      Some(ups.map { case (seq, p) =>
+        rd.parquet(p).withColumn("_u_seq",
+          org.apache.spark.sql.functions.lit(seq))
+      }.reduce(_.unionByName(_)))
+    }
+
+  /** THE MERGE-ON-READ FOLD — the one place its policy is written:
+    * the latest version per key by landed seq wins (base rows are
+    * version 0; a non-unique base key is replaced as a group); hide
+    * = the latest keys ∪ the tombstones;
+    * `base ⟕̸ hide ∪ latest ⟕̸ tombstones`. The log is update-sized,
+    * so its window never touches the base, and the base pays exactly
+    * one BROADCAST anti-join. Tombstones also hide the folded updates
+    * (a delete landed after an update wins — [[softUpsertDir]]'s
+    * pending-tombstone refusal makes "after" the only possibility).
+    * With no log this is `base ⟕̸ tombstones` ([[morRead]]'s view);
+    * with neither it is `base`. Every reader picks its own batches
+    * (live, as-of, tombstone-free) and folds through here, the
+    * planner rule included. */
+  private[graft] def foldMor(base: DataFrame, key: String,
+      log: Option[DataFrame], tomb: Option[DataFrame]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{broadcast, col, row_number}
+    def dropTombs(df: DataFrame) =
+      tomb.fold(df)(t => df.join(broadcast(t), Seq(key), "left_anti"))
+    log.fold(dropTombs(base)) { l =>
+      require(l.columns.contains(key),
+        s"MOR READ REFUSED: update log carries no '$key' column")
+      // log keys are never NULL (softUpsertDir refuses them); saying
+      // so up front gives both uses of `latest` the same pushed-down
+      // scan, so the hide side can reuse the union side's shuffle
+      val latest = l.filter(col(key).isNotNull)
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col(key)).orderBy(col("_u_seq").desc)))
+        .filter(col("_rn") === 1)
+        .select(base.columns.map(col).toIndexedSeq: _*)
+      val hide = tomb.fold(latest.select(col(key)))(
+        t => latest.select(col(key)).unionByName(t)).distinct()
+      base.join(broadcast(hide), Seq(key), "left_anti")
+        .unionByName(dropTombs(latest))
+    }
   }
 
   /** read ONLY the directory's current data files, by EXPLICIT list —
@@ -1367,22 +1368,22 @@ object LakeSink {
     else rd.option("basePath", dir).parquet(files: _*)
   }
 
-  /** the accumulated tombstone keys of `dir`, if any delete batch has
-    * landed — schema checked by name against the caller's key. */
-  private def tombstoneKeys(spark: SparkSession,
+  /** the accumulated tombstone keys of `dir` — the delete batches
+    * whose name `keep` admits, all by default — if any have landed.
+    * One key column, checked by name against `key` when the caller
+    * names one. */
+  private[graft] def tombstoneKeys(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      key: String): Option[DataFrame] = {
-    val dels = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(dir), "_deletes")
-    val batches = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(dels, "b-*")))
-      .getOrElse(Array.empty).map(_.getPath.toString)
+      key: Option[String],
+      keep: String => Boolean = _ => true): Option[DataFrame] = {
+    val batches = deleteBatches(fs, dir)
+      .filter(st => keep(st.getPath.getName)).map(_.getPath.toString)
     if (batches.isEmpty) None
     else {
       val tomb = spark.read.parquet(batches.toIndexedSeq: _*)
-      require(tomb.columns.toSeq == Seq(key),
+      require(tomb.columns.length == 1 && key.forall(_ == tomb.columns.head),
         s"MOR READ REFUSED: tombstones carry key '${tomb.columns.mkString(",")}', " +
-          s"read asked for '$key'")
+          s"read asked for '${key.getOrElse("one key column")}'")
       Some(tomb)
     }
   }
@@ -1513,7 +1514,7 @@ object LakeSink {
     // wins" ambiguous), and a concurrent delete can no longer land a
     // tombstone between this batch's check and its rename
     withLogClaim(fs, dir, retainMs) {
-      tombstoneKeys(spark, fs, dir, key).foreach { tomb =>
+      tombstoneKeys(spark, fs, dir, Some(key)).foreach { tomb =>
         val nTomb = batch.join(broadcast(tomb), Seq(key), "left_semi").count()
         require(nTomb == 0,
           s"MOR UPSERT REFUSED: $nTomb keys are pending-tombstoned — an " +
@@ -1565,8 +1566,7 @@ object LakeSink {
           out.write(key.getBytes("UTF-8")); out.close()
       }
       // sweep crashed prior attempts' stages (never committed batches)
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(loc, ".tmp-ups-*")))
-        .getOrElse(Array.empty)
+      glob(fs, new org.apache.hadoop.fs.Path(loc, ".tmp-ups-*"))
         .foreach(st => scala.util.Try(fs.delete(st.getPath, true)))
       val stage = new org.apache.hadoop.fs.Path(loc, s".tmp-ups-$tag")
       // column ORDER normalized to the base layout so every log batch
@@ -1622,50 +1622,18 @@ object LakeSink {
 
   /** The MERGE-ON-READ UPSERT view: base data files with the
     * `_updates/` log folded on top and `_deletes/` tombstones applied
-    * last. With an empty log this IS [[morRead]] (zero-cost until the
-    * first upsert). Fold shape: the log is update-sized — latest
-    * version per key resolves in one window over the batches' union
-    * (never the base) — and the base pays exactly one BROADCAST
-    * anti-join against the update∪tombstone key set; tombstones also
-    * anti-join the folded updates (a delete landed after an update
-    * hides it — the refusal in [[softUpsertDir]] makes "after" the
-    * only possibility). */
+    * last, through [[foldMor]]. With an empty log this IS [[morRead]]
+    * (zero-cost until the first upsert). */
   def morReadUpsertDir(spark: SparkSession, dir: String,
       key: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
-    val loc = new org.apache.hadoop.fs.Path(dir)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // explicit file list = rule-proof: with TombstoneApplyRule on, a
-    // single-root read here would be rewritten into the fold AGAIN
-    // (the union side is not idempotent, unlike the delete anti-join)
-    val data = readDataFilesList(spark, dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     updateLogKey(fs, dir).foreach(k0 => require(k0 == key,
       s"MOR READ REFUSED: the update log is keyed on '$k0', " +
         s"read asked for '$key'"))
-    val ups = updateBatches(fs, dir)
-    val tomb = tombstoneKeys(spark, fs, dir, key)
-    if (ups.isEmpty)
-      tomb.fold(data)(t => data.join(broadcast(t), Seq(key), "left_anti"))
-    else {
-      val readBatch = logBatchReader(spark, fs, dir)
-      val log = ups.map { case (seq, p) =>
-        readBatch(p).withColumn("_u_seq", lit(seq))
-      }.reduce(_.unionByName(_))
-      require(log.columns.contains(key),
-        s"MOR READ REFUSED: update log carries no '$key' column")
-      val latest = log
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("_u_seq").desc)))
-        .filter(col("_rn") === 1)
-        .select(data.columns.map(col).toIndexedSeq: _*)
-      val latestKept =
-        tomb.fold(latest)(t => latest.join(broadcast(t), Seq(key), "left_anti"))
-      val hide = tomb.fold(latest.select(col(key)))(
-        t => latest.select(col(key)).unionByName(t)).distinct()
-      data.join(broadcast(hide), Seq(key), "left_anti")
-        .unionByName(latestKept)
-    }
+    foldMor(readDataFilesList(spark, dir), key,
+      taggedLog(spark, fs, dir, updateBatches(fs, dir)),
+      tombstoneKeys(spark, fs, dir, Some(key)))
   }
 
   /** TIME TRAVEL ON THE UPSERT LOG — the view AS OF landing `seq`
@@ -1683,57 +1651,20 @@ object LakeSink {
     * read over them would silently mis-order deletes. */
   def morReadUpsertDirAsOf(spark: SparkSession, dir: String, key: String,
       asOfSeq: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
-    val loc = new org.apache.hadoop.fs.Path(dir)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     updateLogKey(fs, dir).foreach(k0 => require(k0 == key,
       s"MOR READ REFUSED: the update log is keyed on '$k0', " +
         s"read asked for '$key'"))
-    val data = readDataFilesList(spark, dir)
-    val ups = updateBatches(fs, dir).filter(_._1 <= asOfSeq)
-    val delAll = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*")))
-      .getOrElse(Array.empty).toIndexedSeq.map { st =>
-        val n = st.getPath.getName
-        val seq = tombstoneBatchSeq(n).getOrElse(
-          throw new IllegalStateException(
-            s"TIME TRAVEL REFUSED: tombstone batch $n under $dir " +
-              "carries no sequence number (landed before the shared " +
-              "log counter) — it cannot be placed in history; read " +
-              "the live view (morReadUpsertDir), or " +
-              "migrateLegacyTombstones to mint seqs for it"))
-        (seq, st.getPath.toString)
-      }
-    val delPaths = delAll.filter(_._1 <= asOfSeq).map(_._2)
-    val tomb =
-      if (delPaths.isEmpty) None
-      else {
-        val t = spark.read.parquet(delPaths: _*)
-        require(t.columns.toSeq == Seq(key),
-          s"MOR READ REFUSED: tombstones carry key " +
-            s"'${t.columns.mkString(",")}', read asked for '$key'")
-        Some(t)
-      }
-    if (ups.isEmpty)
-      tomb.fold(data)(t => data.join(broadcast(t), Seq(key), "left_anti"))
-    else {
-      val readBatch = logBatchReader(spark, fs, dir)
-      val log = ups.map { case (seq, p) =>
-        readBatch(p).withColumn("_u_seq", lit(seq))
-      }.reduce(_.unionByName(_))
-      val latest = log
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("_u_seq").desc)))
-        .filter(col("_rn") === 1)
-        .select(data.columns.map(col).toIndexedSeq: _*)
-      val latestKept =
-        tomb.fold(latest)(t => latest.join(broadcast(t), Seq(key), "left_anti"))
-      val hide = tomb.fold(latest.select(col(key)))(
-        t => latest.select(col(key)).unionByName(t)).distinct()
-      data.join(broadcast(hide), Seq(key), "left_anti")
-        .unionByName(latestKept)
-    }
+    val tomb = tombstoneKeys(spark, fs, dir, Some(key), n =>
+      tombstoneBatchSeq(n).getOrElse(throw new IllegalStateException(
+        s"TIME TRAVEL REFUSED: tombstone batch $n under $dir " +
+          "carries no sequence number (landed before the shared " +
+          "log counter) — it cannot be placed in history; read " +
+          "the live view (morReadUpsertDir), or " +
+          "migrateLegacyTombstones to mint seqs for it")) <= asOfSeq)
+    foldMor(readDataFilesList(spark, dir), key, taggedLog(spark, fs, dir,
+      updateBatches(fs, dir).filter(_._1 <= asOfSeq)), tomb)
   }
 
   /** CHANGE DATA FEED from the update log (Delta's `table_changes`
@@ -1766,10 +1697,7 @@ object LakeSink {
       return data.limit(0)
         .withColumn("_u_seq", lit(0L)).withColumn("_op", lit(""))
         .select(outCols: _*)
-    val readBatch = logBatchReader(spark, fs, dir)
-    val log = ups.map { case (seq, p) =>
-      readBatch(p).withColumn("_u_seq", lit(seq))
-    }.reduce(_.unionByName(_)).localCheckpoint(true)
+    val log = taggedLog(spark, fs, dir, ups).get.localCheckpoint(true)
     val logKeys = log.select(col(key)).distinct()
     // the ONE base pass: key column only, reduced to the log's keys
     val baseSeen = data.select(col(key))
@@ -1819,10 +1747,7 @@ object LakeSink {
       return data.limit(0).select(data.columns.map(col) ++ beforeCols: _*)
         .withColumn("_u_seq", lit(0L)).withColumn("_op", lit(""))
         .select(outCols: _*)
-    val readBatch = logBatchReader(spark, fs, dir)
-    val log = ups.map { case (seq, p) =>
-      readBatch(p).withColumn("_u_seq", lit(seq))
-    }.reduce(_.unionByName(_)).localCheckpoint(true)
+    val log = taggedLog(spark, fs, dir, ups).get.localCheckpoint(true)
     val logKeys = log.select(col(key)).distinct()
     val baseRows = data.join(broadcast(logKeys), Seq(key), "left_semi")
     val nDupKeyed = baseRows.groupBy(col(key)).agg(count(lit(1)).as("n"))
@@ -1870,9 +1795,8 @@ object LakeSink {
     // files) streams its delete feed the same way — the `_updates`
     // requirement would refuse a table whose only changes are
     // erasures, exactly the GDPR-replication consumer's case
-    val hasDelFeed = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*/_feed")))
-      .exists(_.nonEmpty)
+    val hasDelFeed = glob(fs, new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*/_feed")).nonEmpty
     require(updateLogKey(fs, dir).nonEmpty || hasDelFeed,
       s"FEED STREAM REFUSED: $dir carries no update log " +
         "(_updates/_key) and no committed delete feed — nothing will " +
@@ -1915,9 +1839,9 @@ object LakeSink {
     import org.apache.spark.sql.functions.{col, lit}
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val feeds = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*/_feed")))
-      .getOrElse(Array.empty).map(_.getPath.toString)
+    val feeds = glob(fs, new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*/_feed"))
+      .map(_.getPath.toString)
     if (feeds.nonEmpty)
       spark.read.schema(feedSchemaFor(spark, dir))
         .parquet(feeds.toIndexedSeq: _*)
@@ -1971,9 +1895,7 @@ object LakeSink {
       // pre-feed-persistence batch in the window: recompute (legacy)
       return changeFeed(spark, dir, key)
         .filter(col("batch_seq") > fromSeq && col("batch_seq") <= toSeq)
-    val delFeeds = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(loc, "_deletes"), "b-*")))
-      .getOrElse(Array.empty).toIndexedSeq
+    val delFeeds = deleteBatches(fs, dir).toIndexedSeq
       .filter(st => tombstoneBatchSeq(st.getPath.getName).exists(inWindow))
       .map(st => new org.apache.hadoop.fs.Path(st.getPath, "_feed"))
       .filter(fs.exists)
@@ -2042,9 +1964,7 @@ object LakeSink {
       footerRowCount(fs, new org.apache.hadoop.fs.Path(p))
     val ups = updateBatches(fs, dir)
       .map { case (seq, p) => (seq, "upsert", n(p)) }
-    val dels = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(dir, "_deletes"), "b-*")))
-      .getOrElse(Array.empty).toIndexedSeq
+    val dels = deleteBatches(fs, dir).toIndexedSeq
       .map { st =>
         val seq = tombstoneBatchSeq(st.getPath.getName).getOrElse(
           throw new IllegalStateException(
@@ -2108,15 +2028,12 @@ object LakeSink {
     * migrated. */
   def migrateLegacyTombstones(spark: SparkSession, dir: String,
       retainMs: Long = 600000L): Long = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withLogClaim(fs, dir, retainMs) {
       val dels = new org.apache.hadoop.fs.Path(loc, "_deletes")
-      val legacy = Option(fs.globStatus(
-          new org.apache.hadoop.fs.Path(dels, "b-*")))
-        .getOrElse(Array.empty).toIndexedSeq
+      val legacy = deleteBatches(fs, dir).toIndexedSeq
         .filter(st => tombstoneBatchSeq(st.getPath.getName).isEmpty)
         .sortBy(st => (st.getModificationTime, st.getPath.getName))
       if (legacy.isEmpty) 0L
@@ -2124,27 +2041,12 @@ object LakeSink {
         // the tombstone-free fold (latest version per key across
         // base ∪ update log) — each legacy batch's before-images
         val data = readDataFilesList(spark, dir)
-        val ups = updateBatches(fs, dir)
-        val readBatch = logBatchReader(spark, fs, dir)
         val latestAll =
-          if (ups.isEmpty) data
-          else {
-            val log = ups.map { case (seq, bp) =>
-              readBatch(bp).withColumn("_u_seq", lit(seq))
-            }.reduce(_.unionByName(_))
-            val key0 = updateLogKey(fs, dir).getOrElse(
+          taggedLog(spark, fs, dir, updateBatches(fs, dir)).fold(data)(log =>
+            foldMor(data, updateLogKey(fs, dir).getOrElse(
               throw new IllegalStateException(
                 s"LEGACY MIGRATION REFUSED: $dir carries update " +
-                  "batches but no _updates/_key marker"))
-            val latest = log
-              .withColumn("_rn", row_number().over(
-                Window.partitionBy(col(key0)).orderBy(col("_u_seq").desc)))
-              .filter(col("_rn") === 1)
-              .select(data.columns.map(col).toIndexedSeq: _*)
-            data.join(broadcast(latest.select(col(key0))), Seq(key0),
-                "left_anti")
-              .unionByName(latest)
-          }
+                  "batches but no _updates/_key marker")), Some(log), None))
         var migrated = 0L
         legacy.foreach { st =>
           // the re-landed name carries a literal `mig` segment so it
@@ -2152,8 +2054,8 @@ object LakeSink {
           // legacy tag with no dash of its own would otherwise parse
           // as pre-seq again), and the twin glob keys on it
           val tagTail = st.getPath.getName.stripPrefix("b-")
-          val twin = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-              dels, s"b-*-mig-$tagTail"))).getOrElse(Array.empty)
+          val twin = glob(fs, new org.apache.hadoop.fs.Path(
+            dels, s"b-*-mig-$tagTail"))
           if (twin.nonEmpty) {
             // a prior run committed the re-land and crashed before
             // deleting the original — finish that
@@ -2376,9 +2278,8 @@ object LakeSink {
     * converges from.
     * Compaction ([[compactUpsertsDir]] and the partitioned form)
     * materializes the widened view and retires `_schema` with the
-    * log. NOTE: plain single-root reads under
-    * `spark.graft.morApply.enabled` REFUSE on an evolved table — the
-    * planner fold's scan schema comes from unmerged footers; the
+    * log. NOTE: plain single-root reads REFUSE on an evolved table —
+    * the planner fold's scan schema comes from unmerged footers; the
     * explicit APIs carry the widened schema. Returns
     * (updated, inserted). */
   def evolveUpsertDir(spark: SparkSession, dir: String, batch: DataFrame,
@@ -2618,7 +2519,7 @@ object LakeSink {
       clusterCols: Seq[String], targetRecordsPerFile: Long = 1000000L,
       bits: Int = 16): Long = {
     require(clusterCols.nonEmpty, "ZORDER BY needs ≥1 cluster column")
-    val df0 = spark.read.parquet(dir)
+    val df0 = readDataFilesList(spark, dir)
     val missing = clusterCols.filterNot(df0.columns.contains)
     require(missing.isEmpty,
       s"ZORDER COMPACT REFUSED: cluster columns ${missing.mkString(", ")} " +
@@ -2630,8 +2531,8 @@ object LakeSink {
   /** the retention floor [[vacuumTable]]/[[vacuumDir]] refuse below
     * BY NAME (the repo-wide mid-scan-reader / crashed-writer clock
     * contract: reclaiming younger state could delete a snapshot a
-    * reader is mid-scan on, or a claim grave whose writer is still
-    * deciding). Delta's retentionDurationCheck, with the same
+    * reader is mid-scan on, or a staging copy whose writer is still
+    * working). Delta's retentionDurationCheck, with the same
     * explicit override: `spark.graft.vacuum.retentionCheck.enabled =
     * false` waives the floor for tests and point-in-time cleanup. */
   private val VacuumFloorMs = 600000L
@@ -2661,9 +2562,7 @@ object LakeSink {
     *    age;
     *  - CRASHED half-written copies above the live snapshot — only
     *    once aged (an in-flight publish's fresh partial is never
-    *    touched: it is younger than the floor by construction);
-    *  - aged CLAIM GRAVES (`.…claim.reclaim-*` — dead by the rename
-    *    protocol's construction).
+    *    touched: it is younger than the floor by construction).
     * Inside the window everything is refused (skipped) by the
     * retention contract; the floor itself refuses by name
     * ([[requireVacuumRetention]]). The LIVE generation is never
@@ -2682,11 +2581,9 @@ object LakeSink {
       catalog.getTableMetadata(ident).location)
     val fs = curLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (stem, catGen) = parseGen(curLoc.getName)
-    def glob(p: org.apache.hadoop.fs.Path) =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
     val siblings =
-      (glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
-        glob(new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
+      (glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem + ".g*")) ++
+        glob(fs, new org.apache.hadoop.fs.Path(curLoc.getParent, stem)))
         .filterNot(_.getPath.getName.endsWith(".claim"))
     val deleteGens = siblings
       .filter(st => st.getPath != curLoc && isDeleteGen(fs, st.getPath))
@@ -2708,14 +2605,9 @@ object LakeSink {
         if (isDeleteGen(fs, st.getPath)) g < gen && aged(st)
         else g != catGen && aged(st) && !referencedData.contains(g)
       }
-    val graves = glob(new org.apache.hadoop.fs.Path(curLoc.getParent,
-        s".$stem.g*.claim.reclaim-*"))
-      .filter(aged)
-    if (!dryRun) {
+    if (!dryRun)
       victims.foreach(st => scala.util.Try(fs.delete(st.getPath, true)))
-      graves.foreach(st => scala.util.Try(fs.delete(st.getPath, false)))
-    }
-    victims.length.toLong + graves.length
+    victims.length.toLong
   }
 
   /** `VACUUM` for a path-addressed lake DIRECTORY: reclaims, past
@@ -2725,7 +2617,6 @@ object LakeSink {
     *    `<dir>.compact_tmp` siblings) — each is pre-commit state a
     *    crashed writer abandoned (the live committers sweep their own
     *    kind opportunistically; VACUUM sweeps them all on demand);
-    *  - aged log-claim GRAVES (`.log-claim.reclaim-*`);
     *  - RETIRED schema versions: every `_schema-<n>` below the
     *    current max-pick (and the pre-r17 bare `_schema` once
     *    versioned successors exist) — the committed pick itself is
@@ -2742,17 +2633,14 @@ object LakeSink {
     val now = System.currentTimeMillis()
     def aged(st: org.apache.hadoop.fs.FileStatus) =
       now - st.getModificationTime > retainMs
-    def glob(p: org.apache.hadoop.fs.Path) =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
     withLogClaim(fs, dir, retainMs) {
-      val stages = (glob(new org.apache.hadoop.fs.Path(loc, ".tmp-ups-*")) ++
-        glob(new org.apache.hadoop.fs.Path(loc, ".tmp-del-*")) ++
-        glob(new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(loc, "_updates"), ".tmp-schema-*")) ++
-        glob(new org.apache.hadoop.fs.Path(dir + ".compact_old")) ++
-        glob(new org.apache.hadoop.fs.Path(dir + ".compact_tmp")) ++
-        glob(new org.apache.hadoop.fs.Path(loc, ".log-claim.reclaim-*")))
-        .filter(aged)
+      val stages = Seq(new org.apache.hadoop.fs.Path(loc, ".tmp-ups-*"),
+          new org.apache.hadoop.fs.Path(loc, ".tmp-del-*"),
+          new org.apache.hadoop.fs.Path(
+            new org.apache.hadoop.fs.Path(loc, "_updates"), ".tmp-schema-*"),
+          new org.apache.hadoop.fs.Path(dir + ".compact_old"),
+          new org.apache.hadoop.fs.Path(dir + ".compact_tmp"))
+        .flatMap(p => glob(fs, p)).filter(aged)
       val versions = schemaVersions(fs, dir)
       val retired =
         if (versions.size <= 1) Seq.empty
@@ -2822,9 +2710,8 @@ object LakeSink {
     * publish-time route (`statsCols` on
     * [[compactTable]]/[[optimizeZOrder]]/[[mergeKeyed]]); this is
     * the bootstrap for a generation that predates stats. */
-  def attachStats(spark: SparkSession, dir: String, cols: Seq[String],
-      format: String = "parquet"): Unit =
-    fileStats(spark.read.format(format).load(dir), cols)
+  def attachStats(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
+    fileStats(readDataFilesList(spark, dir), cols)
       .write.mode("overwrite").parquet(s"$dir/_stats")
 
   // ---- per-file BLOOM manifests (equality-lookup skipping) ----------
@@ -2877,9 +2764,8 @@ object LakeSink {
     * manifest inside `dir` (same lifetime argument — it rides the
     * directory's own rename/retention). */
   def attachBlooms(spark: SparkSession, dir: String, c: String,
-      mBits: Int = 1 << 16, k: Int = 3,
-      format: String = "parquet"): Unit =
-    fileBlooms(spark.read.format(format).load(dir), c, mBits, k)
+      mBits: Int = 1 << 16, k: Int = 3): Unit =
+    fileBlooms(readDataFilesList(spark, dir), c, mBits, k)
       .write.mode("overwrite").parquet(s"$dir/_blooms_$c")
 
   /** The files whose bloom says `c = value` MIGHT be present — the
@@ -2981,17 +2867,15 @@ object LakeSink {
         .distinct()
       val baseHits =
         if (survivors.isEmpty)
-          spark.read.parquet(dir).select(col(key)).limit(0)
+          readDataFilesList(spark, dir).select(col(key)).limit(0)
         else spark.read.parquet(survivors.toIndexedSeq: _*)
           .select(col(key))
           .join(broadcast(pk), Seq(key), "left_semi")
-      val readBatch = logBatchReader(spark, fs, dir)
-      val logHits = updateBatches(fs, dir)
-        .map { case (_, p) => readBatch(p).select(col(key)) }
-        .foldLeft(baseHits.limit(0))(_.unionByName(_))
-        .join(broadcast(pk), Seq(key), "left_semi")
-      val hits = baseHits.unionByName(logHits).distinct()
-      tombstoneKeys(spark, fs, dir, key)
+      val hits = taggedLog(spark, fs, dir, updateBatches(fs, dir))
+        .fold(baseHits)(log => baseHits.unionByName(log.select(col(key))
+          .join(broadcast(pk), Seq(key), "left_semi")))
+        .distinct()
+      tombstoneKeys(spark, fs, dir, Some(key))
         .fold(hits)(t => hits.join(broadcast(t), Seq(key), "left_anti"))
         .count()
     }
@@ -3023,7 +2907,7 @@ object LakeSink {
       // every file pruned (or the table is empty): answer the
       // provably-empty result from the directory's own schema —
       // footer reads only, zero data bytes
-      spark.read.parquet(dir).filter(lit(false))
+      readDataFilesList(spark, dir).filter(lit(false))
     else
       spark.read.parquet(keep.toIndexedSeq: _*).filter(col(c) === value)
   }
@@ -3067,9 +2951,8 @@ object LakeSink {
     * (watermark, latest compacted dir if any). */
   private def foldState(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): (Long, Option[org.apache.hadoop.fs.Path]) = {
-    val compacted = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(dir, "compacted-*")))
-      .getOrElse(Array.empty).map(_.getPath)
+    val compacted = glob(fs,
+      new org.apache.hadoop.fs.Path(dir, "compacted-*")).map(_.getPath)
     val latest = if (compacted.isEmpty) None
       else Some(compacted.maxBy(_.getName.stripPrefix("compacted-").toLong))
     val cutoff = math.max(compactedThrough(fs, dir),

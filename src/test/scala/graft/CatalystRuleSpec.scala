@@ -618,7 +618,6 @@ class CatalystRuleSpec extends AnyFunSuite {
       rows.filter(col("day") % 10 === 0).select("k"), "k")
     val live = bitrev(1234L)   // day 1234: survives the delete
     val dead = bitrev(1230L)   // day 1230: tombstoned
-    spark.conf.set("spark.graft.morApply.enabled", "true")
     spark.conf.set("spark.graft.bloomPrune.enabled", "true")
     try {
       // inputFiles spans every relation in the plan, tombstone batch
@@ -637,10 +636,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       val gone = spark.read.parquet(out).filter(col("k") === dead)
       assert(dataFiles(gone) <= 2 && gone.isEmpty,
         "a deleted key must read ~1 file and serve nothing")
-    } finally {
-      spark.conf.unset("spark.graft.morApply.enabled")
-      spark.conf.unset("spark.graft.bloomPrune.enabled")
-    }
+    } finally spark.conf.unset("spark.graft.bloomPrune.enabled")
   }
 
   test("manifest-rule LRU memo: bounded at the cap, coldest evicted first, hit-after-eviction recomputes correctly") {

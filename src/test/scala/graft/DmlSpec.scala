@@ -182,7 +182,6 @@ class DmlSpec extends AnyFunSuite {
       .write.parquet(dir)
     graft.sources.LakeSink.attachBlooms(spark, dir, "id")
     graft.sources.LakeSink.registerKeyDir(spark, dir, "id")
-    spark.conf.set("spark.graft.morApply.enabled", "true")
     spark.conf.set("spark.graft.bloomPrune.enabled", "true")
     try {
       // point UPDATE: lands exactly one row's batch; the view read is
@@ -198,10 +197,7 @@ class DmlSpec extends AnyFunSuite {
       assert(v.filter(col("id") === 4242L).head().getDouble(2) == 9.0)
       assert(v.filter(col("id") === 17L).count() == 0)
       assert(v.count() == 7999L)
-    } finally {
-      spark.conf.unset("spark.graft.morApply.enabled")
-      spark.conf.unset("spark.graft.bloomPrune.enabled")
-    }
+    } finally spark.conf.unset("spark.graft.bloomPrune.enabled")
   }
 
   test("concurrent SQL DML: two writers race statements — the log claim serializes, losers refuse and retry, history converges") {

@@ -749,11 +749,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("merge-on-read deletes: O(|keys|) tombstones, data files untouched; read applies; refusals; compactMor materializes and clears") {
     import spark.implicits._
-    // this test pins the DEFAULT read contract (raw reads stay raw;
-    // only readMor applies tombstones) — pin the planner rule off for
-    // its duration: the shared session may carry the conf from a29's
-    // query or the TombstoneApplyRule test, in any suite order
-    spark.conf.set("spark.graft.morApply.enabled", "false")
     val out = Files.createTempDirectory("graft_mor").toString + "/t"
     val base = (1L to 500L).map(i => (i, i % 7, s"v$i")).toDF("k", "g", "v")
     LakeSink.writeParquet(base.repartition(4), out)
@@ -776,8 +771,12 @@ class LakeSpec extends AnyFunSuite {
     assert(view.filter(col("k") <= 150L).count() == 0L)
     val exp = base.filter(col("k") > 150L)
     assert(view.exceptAll(exp).isEmpty && exp.exceptAll(view).isEmpty)
-    // the raw table read stays raw (tombstones hidden from data scans)
-    assert(spark.table("mor_t").count() == 500L)
+    // the plain table read serves the same view — no session conf
+    // needed (TombstoneApplyRule always folds the log)
+    val plainT = spark.table("mor_t")
+    assert(plainT.count() == 350L &&
+      plainT.exceptAll(view).isEmpty && view.exceptAll(plainT).isEmpty,
+      "plain read must equal readMor")
     // refusals: double delete / never-present / NULL — view unchanged
     val eDouble = intercept[IllegalArgumentException] {
       LakeSink.softDelete(spark, "mor_t", Seq(10L).toDF("k"), "k")
@@ -807,7 +806,7 @@ class LakeSpec extends AnyFunSuite {
       LakeSink.compactTable(spark, "mor_t", targetRecordsPerFile = 200L)
     }
     assert(ePub.getMessage.contains("RESURRECT"), ePub.getMessage)
-    assert(spark.table("mor_t").count() == 500L, "refused publish must not touch the table")
+    assert(spark.table("mor_t").count() == 350L, "refused publish must not touch the table")
     // compactMor: survivors materialize through the standard publish;
     // tombstones cleared; raw read == MOR read afterwards
     val n = LakeSink.compactMor(spark, "mor_t", "k",
@@ -1189,22 +1188,16 @@ class LakeSpec extends AnyFunSuite {
 
   test("TombstoneApplyRule: plain reads over a MOR table hide soft-deleted rows (≡ readMor); travel stays as-published; key-less scans refuse; compactMor clears") {
     import spark.implicits._
-    val FLAG = "spark.graft.morApply.enabled"
-    // pin OFF explicitly: the shared session may carry the conf from
-    // a29's query (QueriesSpec runs the whole registry, any order)
-    spark.conf.set(FLAG, "false")
     val out = Files.createTempDirectory("graft_morsql").toString + "/t"
     val base = (1L to 500L).map(i => (i, i % 7, s"v$i")).toDF("k", "g", "v")
     LakeSink.writeParquet(base.repartition(4), out)
     LakeSink.softDeleteDir(spark, out,
       base.filter(col("k") % 5 === 0).select("k"), "k")
-    // DEFAULT OFF: the documented hole — a plain read resurrects
-    // (this assert is the contract the conf exists to close)
-    assert(spark.read.parquet(out).count() == 500L,
-      "default-off plain read documents the resurrection shape")
-    spark.conf.set(FLAG, "true")
-    try {
-      // ON: plain read ≡ the explicit merge-on-read view
+    // no session conf: the plain read already hides the deletes
+    assert(spark.read.parquet(out).count() == 400L,
+      "a plain read with no conf set must not resurrect deleted rows")
+    locally {
+      // plain read ≡ the explicit merge-on-read view
       val mor = LakeSink.morRead(spark, out, "k")
       val plain = spark.read.parquet(out)
       assert(plain.count() == 400L)
@@ -1236,7 +1229,7 @@ class LakeSpec extends AnyFunSuite {
       }
       assert(e.getMessage != null && e.getMessage.contains("MOR PLAN REFUSED"),
         s"got: ${e.getMessage}")
-      // TIME TRAVEL stays as-published under the flag: a catalog table
+      // TIME TRAVEL stays as-published under the rule: a catalog table
       // with a published delete snapshot still shows gen 0 pre-delete
       val tout = Files.createTempDirectory("graft_morsqltravel")
         .toString + "/t"
@@ -1257,7 +1250,7 @@ class LakeSpec extends AnyFunSuite {
       assert(!p2.contains("LeftAnti"),
         "a compacted table must plan a plain scan, no anti-join")
       spark.sql("DROP TABLE morsql_t"); spark.sql("DROP TABLE morsql_tt")
-    } finally spark.conf.unset(FLAG)
+    }
   }
 
   test("merge-on-read upserts: log lands O(|batch|), latest version wins, data files never rewritten") {
@@ -1528,7 +1521,9 @@ class LakeSpec extends AnyFunSuite {
       s"re-update preimage must be the prior batch's version: ${b2.mkString(",")}")
     // the retraction use case CLOSES: base MV + Σ(after − before) ≡
     // recompute over the final view — what the preimage exists for
-    val baseSum = spark.read.parquet(out).agg(sum("v")).head().getLong(0)
+    // (the base as written: seq 0 — a plain read serves the fold)
+    val baseSum = LakeSink.morReadUpsertDirAsOf(spark, out, "k", 0L)
+      .agg(sum("v")).head().getLong(0)
     val delta = feed.agg(
       sum(col("v") - coalesce(col("before_v"), lit(0L)))).head().getLong(0)
     val viewSum = LakeSink.morReadUpsertDir(spark, out, "k")
@@ -1548,7 +1543,6 @@ class LakeSpec extends AnyFunSuite {
 
   test("planner-applied upsert fold: plain reads serve the folded view (≡ morReadUpsertDir); key-less scans refuse; compaction clears the plan") {
     import spark.implicits._
-    val FLAG = "spark.graft.morApply.enabled"
     val out = Files.createTempDirectory("graft_upssql").toString + "/t"
     val base = (1L to 300L).map(i => (i, 0L, s"n$i")).toDF("k", "v", "note")
     LakeSink.writeParquet(base.repartition(4), out)
@@ -1559,16 +1553,15 @@ class LakeSpec extends AnyFunSuite {
       (1L to 10L).map(k => (k, 2L, "b2")).toDF("k", "v", "note"), "k")
     LakeSink.softDeleteUpsertDir(spark, out,
       ((291L to 295L) :+ 301L).toDF("k"), "k")
-    // the ground truth BEFORE the flag (the explicit API's fold)
+    // the ground truth (the explicit API's fold)
     val expected = LakeSink.morReadUpsertDir(spark, out, "k")
       .localCheckpoint(true)
     assert(expected.count() == 299L)
-    // DEFAULT OFF: the documented hole — plain reads serve STALE rows
-    // (no log inserts, no updates, deletes resurrected)
-    assert(spark.read.parquet(out).count() == 300L,
-      "default-off plain read documents the stale-serve shape")
-    spark.conf.set(FLAG, "true")
-    try {
+    // no session conf: plain reads serve the folded view, never the
+    // stale base (no log inserts, no updates, deletes resurrected)
+    assert(spark.read.parquet(out).count() == 299L,
+      "a plain read with no conf set must serve the folded view")
+    locally {
       val plain = spark.read.parquet(out)
       assert(plain.count() == 299L)
       assert(plain.exceptAll(expected).isEmpty &&
@@ -1583,8 +1576,8 @@ class LakeSpec extends AnyFunSuite {
       val plan = plain.queryExecution.executedPlan.toString
       assert(plan.contains("Union") && plan.contains("LeftAnti"),
         s"expected the fold's union + anti-join in:\n$plan")
-      // the explicit API stays correct under the flag (file-list read
-      // — the fold must never stack twice)
+      // the explicit API stays correct beside the rule (file-list
+      // read — the fold must never stack twice)
       val expl = LakeSink.morReadUpsertDir(spark, out, "k")
       assert(expl.count() == 299L &&
         expl.exceptAll(expected).isEmpty && expected.exceptAll(expl).isEmpty)
@@ -1602,12 +1595,11 @@ class LakeSpec extends AnyFunSuite {
       val plan2 = p2.queryExecution.executedPlan.toString
       assert(!plan2.contains("LeftAnti") && !plan2.contains("Union"),
         "a compacted table must plan a plain scan again")
-    } finally spark.conf.unset(FLAG)
+    }
   }
 
   test("partitioned upsert log: cross-partition moves serve from the log; partition pruning composes under the rule; compact refuses flat rewrite") {
     import spark.implicits._
-    val FLAG = "spark.graft.morApply.enabled"
     val out = Files.createTempDirectory("graft_pups").toString + "/t"
     val base = (1L to 300L).map(i =>
       (i, if (i % 3 == 0) "a" else "b", i * 10L)).toDF("k", "part", "v")
@@ -1626,8 +1618,7 @@ class LakeSpec extends AnyFunSuite {
       moved.head.getAs[String]("part") == "c" &&
       moved.head.getAs[Long]("v") == 333L,
       "a cross-partition move must serve the NEW partition value only")
-    spark.conf.set(FLAG, "true")
-    try {
+    locally {
       // plain read ≡ the explicit view, partition columns included
       val plain = spark.read.parquet(out)
       assert(plain.count() == 301L &&
@@ -1645,7 +1636,7 @@ class LakeSpec extends AnyFunSuite {
         s"partition pruning must survive the fold's marker swap:\n$plan")
       // the explicit API stays rule-proof on partitioned layouts too
       assert(LakeSink.morReadUpsertDir(spark, out, "k").count() == 301L)
-    } finally spark.conf.unset(FLAG)
+    }
     // flat compaction refuses by name (it would drop the layout)
     val e = intercept[IllegalArgumentException] {
       LakeSink.compactUpsertsDir(spark, out, "k", 1000L)

@@ -12,12 +12,20 @@ class QueriesSpec extends AnyFunSuite {
     "t4_fingerprint", "d1_dedup_exact", "d3_dedup_simhash", "s1_knn_brute",
     "m1_blob_meta", "q16_sessionize", "q18_timeagg", "q20_json")
 
+  // a query's plans and answers must not depend on which queries ran
+  // before it, so no query may leave a graft conf changed behind it
+  private def graftConfs: Map[String, String] =
+    spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
+
   Registry.all.foreach { q =>
     test(s"${q.name} runs") {
+      val confs = graftConfs
       val df = q.run(spark, TestSpark.sf)
       assert(df.columns.nonEmpty)
       val n = df.count()
       if (mustHaveRows(q.name)) assert(n > 0, s"${q.name} returned no rows")
+      assert(graftConfs == confs,
+        s"${q.name} leaked session confs: ${graftConfs.toSet diff confs.toSet}")
     }
   }
 

@@ -436,31 +436,36 @@ class UpsertLogSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val claim = new org.apache.hadoop.fs.Path(dir, ".log-claim")
-    fs.create(claim, false).close()
-    // age the crashed claim past the retention window
-    assert(new java.io.File(dir, ".log-claim")
-      .setLastModified(System.currentTimeMillis() - 120000L))
-    val tokens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val refused = new java.util.concurrent.atomic.AtomicInteger(0)
-    val threads = (0 until 8).map { _ =>
-      new Thread(() =>
-        try tokens.add(LakeSink.acquireClaimToken(fs, claim, 60000L))
-        catch { case _: java.io.IOException => refused.incrementAndGet() })
+    // bounded by ROUNDS, not wall time: every round replays the race
+    // from a freshly crashed claim, filesystem only (no Spark job)
+    (1 to 100).foreach { round =>
+      fs.create(claim, false).close()
+      // age the crashed claim past the retention window
+      assert(new java.io.File(dir, ".log-claim")
+        .setLastModified(System.currentTimeMillis() - 120000L))
+      val tokens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val refused = new java.util.concurrent.atomic.AtomicInteger(0)
+      val threads = (0 until 8).map { _ =>
+        new Thread(() =>
+          try tokens.add(LakeSink.acquireClaimToken(fs, claim, 60000L))
+          catch { case _: java.io.IOException => refused.incrementAndGet() })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(tokens.size == 1 && refused.get == 7,
+        s"round $round: ${tokens.size} winners / ${refused.get} refusals " +
+          "— the reclaim race must admit exactly one holder")
+      // the winner's claim is live; no reclaim leftovers remain
+      assert(fs.exists(claim))
+      val graves = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+          dir, ".*.reclaim*"))).getOrElse(Array.empty)
+      assert(graves.isEmpty,
+        s"round $round: leftover graves: ${graves.map(_.getPath).toSeq}")
+      // release is token-gated: a wrong token never deletes the claim
+      LakeSink.releaseClaimToken(fs, claim, "not-the-owner")
+      assert(fs.exists(claim))
+      LakeSink.releaseClaimToken(fs, claim, tokens.peek())
+      assert(!fs.exists(claim))
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(tokens.size == 1 && refused.get == 7,
-      s"${tokens.size} winners / ${refused.get} refusals — the reclaim " +
-        "race must admit exactly one holder")
-    // the winner's claim is live; no reclaim grave files remain
-    assert(fs.exists(claim))
-    val graves = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        dir, ".*.reclaim-*"))).getOrElse(Array.empty)
-    assert(graves.isEmpty, s"leftover graves: ${graves.map(_.getPath).toSeq}")
-    // release is token-gated: a wrong token never deletes the claim
-    LakeSink.releaseClaimToken(fs, claim, "not-the-owner")
-    assert(fs.exists(claim))
-    LakeSink.releaseClaimToken(fs, claim, tokens.peek())
-    assert(!fs.exists(claim))
   }
 
   test("a FRESH claim is never reclaimed: acquisition refuses by name and the claim survives untouched") {
