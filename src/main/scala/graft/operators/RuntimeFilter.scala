@@ -557,8 +557,7 @@ object RuntimeFilter {
     val fs = man.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(man)) return None
     val manifest = spark.read.parquet(man.toString)
-    val manNames = manifest.select("file").collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet
+    val manNames = graft.sources.LakeSink.manifestFileNames(manifest)
     val current = graft.sources.LakeSink.dataFileNames(fs, factDir)
     // stale manifest: a file it never saw could hold a matching key —
     // fall back to the full fact rather than silently skip it

@@ -277,10 +277,8 @@ class BloomPruneRule(spark: SparkSession) extends Rule[LogicalPlan]
             val mtime = fs.getFileStatus(manPath).getModificationTime
             coveringNames(
                 namesMemo.getOrElseUpdate((root.toString, c, mtime)) {
-                  spark.read.parquet(manPath.toString)
-                    .select("file").collect()
-                    .map(row => new org.apache.hadoop.fs.Path(
-                      row.getString(0)).getName).toSet
+                  graft.sources.LakeSink.manifestFileNames(
+                    spark.read.parquet(manPath.toString))
                 }, listing)
               .map(_ => survivors(root.toString, c, values, valueKey, mtime)
                 .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet)

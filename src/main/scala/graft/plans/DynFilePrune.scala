@@ -97,9 +97,7 @@ class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val manPath = new org.apache.hadoop.fs.Path(root, s"_blooms_${fAttr.name}")
     val manifest = spark.read.parquet(manPath.toString)
     val listing = r.location.inputFiles
-    val manNames = manifest.select("file").collect()
-      .map(row => new org.apache.hadoop.fs.Path(row.getString(0)).getName)
-      .toSet
+    val manNames = graft.sources.LakeSink.manifestFileNames(manifest)
     // staleness: a file the manifest never saw could hold a match
     val current = coveringNames(manNames, listing).getOrElse(return None)
     // the BUILD side's distinct keys, evaluated now (plan-time): the

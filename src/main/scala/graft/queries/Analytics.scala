@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Fixture, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1796,27 +1796,9 @@ object Analytics {
   // session-scoped, the directories are not)
   private def ensureAdvisedTables(s: SparkSession, d: String)
       : (String, String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_keystats_$stamp")
-    def ready(sub: String) =
-      new java.io.File(new java.io.File(dir, sub), "_SUCCESS").isFile &&
-        new java.io.File(new java.io.File(dir,
-          s"$sub/_keystats_${if (sub == "fact") "l_partkey" else "p_partkey"}/_files"),
-          "_SUCCESS").isFile
-    if (!ready("fact") || !ready("dim")) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_keystats_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_keystats_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    val dir = Fixture.stamped("keystats", Fixture.stamp(s, d, "lineitem"),
+      Fixture.has(_, "fact/_SUCCESS", "fact/_keystats_l_partkey/_files/_SUCCESS",
+        "dim/_SUCCESS", "dim/_keystats_p_partkey/_files/_SUCCESS")) { build =>
       // file count sized to the machine, not the tiny-SF default: a
       // 60M-row fact behind 4 files throttles every scan of it
       t(s, d, "lineitem")
@@ -1833,10 +1815,8 @@ object Analytics {
         new java.io.File(build, "fact").getPath, "l_partkey")
       graft.operators.RuntimeFilter.attachKeyStats(s,
         new java.io.File(build, "dim").getPath, "p_partkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    (new java.io.File(dir, "fact").getPath, new java.io.File(dir, "dim").getPath)
+    (s"$dir/fact", s"$dir/dim")
   }
 
   /** q57: q53's advised join decided from COMMITTED statistics —
@@ -1883,25 +1863,9 @@ object Analytics {
   // mBits 2^18 ≈ 13 bits/key headroom for ~20k distinct orderkeys per
   // file at sf1; an under-sized bloom at larger SF only raises the FP
   // rate (more files read), never loses a match.
-  private def ensureKeyedLineitem(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_keyedli_$stamp")
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(new java.io.File(dir, "_blooms_l_orderkey"),
-          "_SUCCESS").isFile) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_keyedli_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_keyedli_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureKeyedLineitem(s: SparkSession, d: String): String =
+    Fixture.stamped("keyedli", Fixture.stamp(s, d, "lineitem"),
+      Fixture.has(_, "_SUCCESS", "_blooms_l_orderkey/_SUCCESS")) { build =>
       t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
           col("l_extendedprice"))
@@ -1910,11 +1874,7 @@ object Analytics {
         .write.mode("overwrite").parquet(build.getPath)
       graft.sources.LakeSink.attachBlooms(s, build.getPath,
         "l_orderkey", mBits = 1 << 18)
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** q59: DYNAMIC FILE PRUNING from the join side
     * ([[graft.operators.RuntimeFilter.dynamicFilePrune]] — Delta's
@@ -1981,11 +1941,12 @@ object Analytics {
     // size statistics are real file sizes — the rule's
     // broadcast-eligibility guard reads the same stats the join
     // strategy does
-    val pageDir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_q60_page").getPath
-    t(s, d, "orders").orderBy("o_orderkey").limit(50)
-      .select(col("o_orderkey"))
-      .coalesce(1).write.mode("overwrite").parquet(pageDir)
+    val pageDir = Fixture.stamped("q60_page", Fixture.stamp(s, d, "orders"),
+        Fixture.has(_, "_SUCCESS")) { build =>
+      t(s, d, "orders").orderBy("o_orderkey").limit(50)
+        .select(col("o_orderkey"))
+        .coalesce(1).write.parquet(build.getPath)
+    }
     s.read.parquet(factDir).createOrReplaceTempView("q60_fact")
     s.read.parquet(pageDir).createOrReplaceTempView("q60_page")
     Q.withConfs(s, "spark.graft.dynFilePrune.enabled" -> "true")(s.sql("""

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Fixture, Q, Tables}
 import graft.operators.Migration
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -434,32 +434,14 @@ object Crud {
   }
 
   // range-clustered orders copy for the data-skipping read (a20),
-  // built once per corpus into a stamped tmp dir and published by
-  // atomic rename (Embed.ensureIndex's discipline: concurrent
-  // builders each build privately, the rename loser serves the
-  // winner's identical copy). 8 range partitions on o_orderdate →
+  // built once per corpus ([[graft.Fixture.stamped]]: private build,
+  // one atomic rename). 8 range partitions on o_orderdate →
   // each file covers a narrow, mostly-disjoint date slice — the
   // layout HALF of data skipping (fileStats is the stats half).
-  private def ensureSortedOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_skiplake_$stamp")
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(new java.io.File(dir, "_stats"), "_SUCCESS").isFile ||
-        !new java.io.File(new java.io.File(dir, "_blooms_o_orderkey"),
-          "_SUCCESS").isFile) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_skiplake_")) // incl. a same-stamp pre-_stats copy: it blocks the rename
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_skiplake_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureSortedOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("skiplake", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_SUCCESS", "_stats/_SUCCESS",
+        "_blooms_o_orderkey/_SUCCESS")) { build =>
       t(s, d, "orders")
         .repartitionByRange(8, col("o_orderdate"))
         .sortWithinPartitions("o_orderdate")
@@ -472,11 +454,7 @@ object Crud {
       graft.sources.LakeSink.attachStats(s, build.getPath,
         Seq("o_orderdate", "o_orderkey"))
       graft.sources.LakeSink.attachBlooms(s, build.getPath, "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a20: DATA SKIPPING over file statistics
     * ([[graft.sources.LakeSink.fileStats]] +
@@ -517,24 +495,9 @@ object Crud {
   // (a21): interleaved (custkey, order-day) bits cluster BOTH
   // dimensions at once, so each file's min/max is narrow in each —
   // same stamped-tmp/atomic-rename discipline as ensureSortedOrders
-  private def ensureZOrderedOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_zorder_$stamp")
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(new java.io.File(dir, "_stats"), "_SUCCESS").isFile) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_zorder_")) // incl. a same-stamp pre-_stats copy: it blocks the rename
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_zorder_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureZOrderedOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("zorder", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_SUCCESS", "_stats/_SUCCESS")) { build =>
       val zk = graft.sources.LakeSink.zOrderKey(col("o_custkey"),
         datediff(col("o_orderdate").cast("date"),
           lit("1990-01-01").cast("date")), bits = 20)
@@ -545,11 +508,7 @@ object Crud {
       // manifest committed WITH the copy, under the same rename
       graft.sources.LakeSink.attachStats(s, build.getPath,
         Seq("o_custkey", "o_orderdate"))
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a21: TWO-DIMENSIONAL data skipping over a Z-ORDER layout
     * ([[graft.sources.LakeSink.zOrderKey]] +
@@ -589,24 +548,9 @@ object Crud {
   // the copy AND its two tombstone batches build together and publish
   // under one rename (_deletes globs relative to the dir, so the
   // batches survive the rename like the a20 manifest does)
-  private def ensureMorOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_mor_$stamp")
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(dir, "_deletes").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_mor_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_mor_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureMorOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("mor", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_SUCCESS", "_deletes")) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       // batch 1: a key-mod slice; batch 2 keys must be LIVE when
@@ -619,11 +563,7 @@ object Crud {
           col("o_orderkey") % 7 === 2 && col("o_orderkey") % 11 =!= 3)
           .select("o_orderkey"),
         "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a22: MERGE-ON-READ equality deletes
     * ([[graft.sources.LakeSink.softDeleteDir]] + `morRead`) — the
@@ -791,25 +731,9 @@ object Crud {
   // Layout: <root>/t (data gen 0, catalog location), <root>/t.g1 and
   // <root>/t.g2 (the published delete snapshots, siblings by the
   // generation naming rule).
-  private def ensureTravelOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val root = new java.io.File(tmp, s"graft_travel_$stamp")
-    val ready = new java.io.File(new java.io.File(root, "t"), "_SUCCESS").isFile &&
-      new java.io.File(new java.io.File(root, "t.g2"), "_published_delete").isFile
-    if (!ready) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_travel_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_travel_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureTravelOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("travel", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "t/_SUCCESS", "t.g2/_published_delete")) { build =>
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       base.repartition(4).write.mode("overwrite")
@@ -828,11 +752,7 @@ object Crud {
           .select("o_orderkey"),
         "o_orderkey")
       s.sql("DROP TABLE IF EXISTS a27_travel_build")
-      if (!build.renameTo(root))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    root.getPath
-  }
 
   /** a27: the CHANGE FEED BETWEEN RETAINED SNAPSHOTS, across DELETE
     * generations (r13 — tombstones are commits): each
@@ -1024,24 +944,9 @@ object Crud {
   // files within each) with the `_stats` manifest committed at the
   // root — the most common lake layout; same stamped-build/rename
   // discipline as ensureSortedOrders
-  private def ensurePartitionedOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_partlake_$stamp")
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(new java.io.File(dir, "_stats"), "_SUCCESS").isFile) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_partlake_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_partlake_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensurePartitionedOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("partlake", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_SUCCESS", "_stats/_SUCCESS")) { build =>
       t(s, d, "orders")
         .repartitionByRange(12, col("o_orderstatus"), col("o_orderdate"))
         .sortWithinPartitions("o_orderstatus", "o_orderdate")
@@ -1049,11 +954,7 @@ object Crud {
         .parquet(build.getPath)
       graft.sources.LakeSink.attachStats(s, build.getPath,
         Seq("o_orderdate"))
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a32: PARTITION PRUNING × MANIFEST PRUNING on a hive-partitioned
     * table — the most common lake layout, which the r13 rules bailed
@@ -1093,32 +994,15 @@ object Crud {
   // copy, its two UPDATE-log batches, and the upsert-view delete all
   // build together and publish under one rename (_updates/_deletes
   // glob relative to the dir, so the logs survive the rename)
-  private def ensureUpsertOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_ups_$stamp")
-    // cache validity includes the r15 delete-feed artifact: a fixture
-    // built by an older round carries pre-feed `b-<tag>` batches and
-    // a43's change feed would silently miss its delete events
-    def hasDeleteFeed: Boolean =
-      Option(new java.io.File(dir, "_deletes").listFiles())
-        .getOrElse(Array.empty)
-        .exists(b => b.getName.startsWith("b-") &&
-          new java.io.File(b, "_feed").isDirectory)
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        !new java.io.File(dir, "_updates").isDirectory || !hasDeleteFeed) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_ups_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_ups_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureUpsertOrders(s: SparkSession, d: String): String =
+    // validity includes the r15 delete-feed artifact: a fixture built
+    // by an older round carries pre-feed `b-<tag>` batches and a43's
+    // change feed would silently miss its delete events
+    Fixture.stamped("ups", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.has(dir, "_SUCCESS", "_updates") &&
+        Option(new java.io.File(dir, "_deletes").listFiles())
+          .getOrElse(Array.empty).exists(b => b.getName.startsWith("b-") &&
+            Fixture.has(b, "_feed"))) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val mk = base.agg(max("o_orderkey")).head().getLong(0)
@@ -1149,11 +1033,7 @@ object Crud {
         graft.sources.LakeSink.morReadUpsertDir(s, build.getPath, "o_orderkey")
           .filter(k % 17 === 3).select("o_orderkey"),
         "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a33: MERGE-ON-READ UPSERTS
     * ([[graft.sources.LakeSink.softUpsertDir]] / `morReadUpsertDir` /
@@ -1234,23 +1114,9 @@ object Crud {
     graft.sources.Expect.Rule("price_cap", "o_totalprice < 200000.0"),
     graft.sources.Expect.Rule("status_known", "o_orderstatus IN ('F','O')"))
 
-  private def ensureExpectOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_exp_$stamp")
-    if (!new java.io.File(dir, "_quarantine").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_exp_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_exp_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureExpectOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("exp", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_quarantine")) { build =>
       build.mkdirs()
       val base = t(s, d, "orders")
       // two epochs (key parity) — the gate is a per-batch write, so
@@ -1259,11 +1125,7 @@ object Crud {
         base.filter(col("o_orderkey") % 2 === 0), expectRules)
       graft.sources.Expect.writeExpect(s, build.getPath, 2L,
         base.filter(col("o_orderkey") % 2 === 1), expectRules)
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a34: WRITE-SIDE EXPECTATIONS WITH QUARANTINE
     * ([[graft.sources.Expect.writeExpect]] — Delta Live Tables'
@@ -1319,27 +1181,9 @@ object Crud {
   // the fixture re-registers at ITS dir, the live pointer after the
   // build), gen3 = a deliberate post-restore delete. All built as
   // siblings of build/t so one rename publishes the whole history.
-  private def ensureRestoreOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val root = new java.io.File(tmp, s"graft_restore_$stamp")
-    val ready =
-      new java.io.File(new java.io.File(root, "t.g2"), "_SUCCESS").isFile &&
-      new java.io.File(new java.io.File(root, "t.g3"), "_published_delete")
-        .isFile
-    if (!ready) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_restore_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_restore_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureRestoreOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("restore", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "t.g2/_SUCCESS", "t.g3/_published_delete")) { build =>
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       base.repartition(4).write.mode("overwrite")
@@ -1359,11 +1203,7 @@ object Crud {
           col("o_orderkey") % 7 === 2).select("o_orderkey"),
         "o_orderkey")
       s.sql("DROP TABLE IF EXISTS a35_restore_build")
-      if (!build.renameTo(root))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    root.getPath
-  }
 
   /** a35: RESTORE AS A NEW COMMIT
     * ([[graft.sources.LakeSink.restoreGeneration]] — Delta's
@@ -1442,23 +1282,9 @@ object Crud {
   // that MOVES rows across partitions (status → 'U') plus an
   // upsert-view delete — the layout trap copy-on-write engines pay a
   // directory rewrite for
-  private def ensurePartUpsertOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_pups_$stamp")
-    if (!new java.io.File(dir, "_updates").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_pups_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_pups_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensurePartUpsertOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("pups", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_updates")) { build =>
       val base = t(s, d, "orders")
       graft.sources.LakeSink.writeParquet(base, build.getPath,
         Seq("o_orderstatus"))
@@ -1476,11 +1302,7 @@ object Crud {
           .morReadUpsertDir(s, build.getPath, "o_orderkey")
           .filter(k % 17 === 3).select("o_orderkey"),
         "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a38: PARTITIONED UPSERT LOG THROUGH THE PLANNER (r14 — the
     * composition a36's first cut refused: hive partitioning × the
@@ -1553,23 +1375,9 @@ object Crud {
       .orderBy("batch_seq", "op")
   }
 
-  private def ensureGatedUpsertOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_gups_$stamp")
-    if (!new java.io.File(dir, "_quarantine").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_gups_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_gups_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureGatedUpsertOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("gups", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_quarantine")) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       // the CDC batch: re-status the %13 slice — rows breaking the
@@ -1580,11 +1388,7 @@ object Crud {
         "o_orderkey",
         Seq(graft.sources.Expect.Rule("price_cap",
           "o_totalprice < 150000.0")))
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a40: EXPECTATIONS-GATED UPSERT
     * ([[graft.sources.Expect.upsertExpect]] — a34 × a33, the CDC
@@ -1630,24 +1434,9 @@ object Crud {
       .orderBy("status")
   }
 
-  private def ensureDmlOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_dml_$stamp")
-    if (!new java.io.File(dir, "_updates").isDirectory ||
-        !new java.io.File(dir, "_deletes").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_dml_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_dml_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureDmlOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("dml", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_updates", "_deletes")) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val bp = build.getPath
@@ -1676,11 +1465,7 @@ object Crud {
       // 3. DELETE — keys resolve against the UPSERT view (clones are
       //    deletable too), landing as an O(|keys|) tombstone batch
       s.sql(s"DELETE FROM parquet.`$bp` WHERE o_orderkey % 17 = 3")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a41: SQL DML ROUTED TO THE MERGE-ON-READ LOG
     * ([[graft.plans.GraftSqlParser]] via `injectParser` — the
@@ -1720,23 +1505,9 @@ object Crud {
       .morReadUpsertDir(s, ensureDmlOrders(s, d), "o_orderkey"))
   }
 
-  private def ensurePatchOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_patch_$stamp")
-    if (!new java.io.File(dir, "_updates").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_patch_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_patch_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensurePatchOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("patch", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "_updates")) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val k = col("o_orderkey")
@@ -1755,11 +1526,7 @@ object Crud {
         base.filter(k % 23 === 3)
           .select(k, (col("o_totalprice") + 500.0).as("o_totalprice")),
         "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a42: PATCH (COLUMN-SUBSET) UPSERTS
     * ([[graft.sources.LakeSink.softPatchDir]] — the CDC batch shape
@@ -1896,25 +1663,10 @@ object Crud {
       .morReadUpsertDirAsOf(s, dir, "o_orderkey", asOfSeq = 1L))
   }
 
-  private def ensureInsertOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_ins_$stamp")
-    if (!new java.io.File(new java.io.File(dir, "_updates"), "_key").isFile ||
-        Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).count(_.getName.startsWith("u-")) != 2) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_ins_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_ins_build_${java.util.UUID.randomUUID().toString.take(8)}")
+  private def ensureInsertOrders(s: SparkSession, d: String): String =
+    Fixture.stamped("ins", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.has(dir, "_updates/_key") &&
+        Fixture.count(dir, "_updates", "u-") == 2) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val bp = build.getPath
@@ -1937,11 +1689,7 @@ object Crud {
         .createOrReplaceTempView("a45_src2")
       s.sql(s"INSERT INTO parquet.`$bp` (o_orderkey, o_totalprice, " +
         "o_orderpriority) SELECT ik, ip, io FROM a45_src2")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a45: `INSERT INTO` ROUTED THROUGH THE MERGE-ON-READ LOG
     * ([[graft.plans.GraftDml.runInsert]] — the one write that used to
@@ -2018,28 +1766,12 @@ object Crud {
       GROUP BY o_orderstatus ORDER BY status""")
   }
 
-  private def ensureEvolveOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_evo_$stamp")
+  private def ensureEvolveOrders(s: SparkSession, d: String): String =
     // validity = a COMMITTED schema version (r17: `_schema-<n>`; the
     // pre-r17 bare `_schema` also counts) + all three batches landed
-    if (!Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).exists(_.getName.startsWith("_schema")) ||
-        Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).count(_.getName.startsWith("u-")) != 3) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_evo_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_evo_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    Fixture.stamped("evo", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.count(dir, "_updates", "_schema") > 0 &&
+        Fixture.count(dir, "_updates", "u-") == 3) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val k = col("o_orderkey")
@@ -2060,11 +1792,7 @@ object Crud {
           .withColumn("o_totalprice", col("o_totalprice") + 7.0)
           .withColumn("o_tier", lit("T3")),
         "o_orderkey")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a47: SCHEMA EVOLUTION ON A LOG-CARRYING TABLE
     * ([[graft.sources.LakeSink.evolveUpsertDir]] — the path that used
@@ -2191,29 +1919,14 @@ object Crud {
       "ORDER BY seq")
   }
 
-  private def ensureOptimizeOrders(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    val stamp = java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_opt_$stamp")
+  private def ensureOptimizeOrders(s: SparkSession, d: String): String =
     // validity = the POST-optimize state: data present, log DRAINED
     // (r17: the _key marker survives the swap — drained means no
     // pending u-* batches), tombstones gone
-    if (!new java.io.File(dir, "_SUCCESS").isFile ||
-        Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).exists(_.getName.startsWith("u-")) ||
-        new java.io.File(dir, "_deletes").isDirectory) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_opt_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_opt_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    Fixture.stamped("opt", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.has(dir, "_SUCCESS") &&
+        Fixture.count(dir, "_updates", "u-") == 0 &&
+        !Fixture.has(dir, "_deletes")) { build =>
       val base = t(s, d, "orders")
       base.repartition(4).write.mode("overwrite").parquet(build.getPath)
       val bp = build.getPath
@@ -2222,11 +1935,7 @@ object Crud {
         "o_totalprice = o_totalprice + 1000.0 WHERE o_orderkey % 13 = 1")
       s.sql(s"DELETE FROM parquet.`$bp` WHERE o_orderkey % 17 = 3")
       s.sql(s"OPTIMIZE parquet.`$bp`")
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
-  }
 
   /** a50: `OPTIMIZE` — MAINTENANCE AS SQL ([[graft.plans.GraftDml
     * .runOptimize]], Delta's verb): an UPDATE + DELETE history lands
@@ -2261,45 +1970,10 @@ object Crud {
     upsertViewAgg(s.read.parquet(ensureOptimizeOrders(s, d)))
   }
 
-  private def stampOf(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** the stamped-fixture lifecycle every a-query fixture shares:
-    * `valid(dir)` decides whether the cached build is current (it
-    * must test for the NEWEST on-disk artifact the build writes — a
-    * stale cache silently serves the old layout otherwise), `build`
-    * populates a fresh directory which is then renamed into place. */
-  private def stampedFixture(s: SparkSession, d: String, prefix: String,
-      valid: java.io.File => Boolean)(build: java.io.File => Unit): String = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"${prefix}_${stampOf(s, d)}")
-    if (!valid(dir)) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(prefix + "_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val bld = new java.io.File(tmp,
-        s"${prefix}_build_${java.util.UUID.randomUUID().toString.take(8)}")
-      build(bld)
-      if (!bld.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(bld))
-    }
-    dir.getPath
-  }
-
   private def ensureZOrderOrders(s: SparkSession, d: String): String =
-    stampedFixture(s, d, "graft_zo",
-      dir => new java.io.File(dir, "_stats").isDirectory &&
-        new java.io.File(dir, "_blooms_o_orderkey").isDirectory && // r17 layout
-        !Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).exists(_.getName.startsWith("u-"))) { bld =>
+    Fixture.stamped("zo", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.has(dir, "_stats", "_blooms_o_orderkey") && // r17 layout
+        Fixture.count(dir, "_updates", "u-") == 0) { bld =>
       t(s, d, "orders").repartition(4).write.mode("overwrite")
         .parquet(bld.getPath)
       val bp = bld.getPath
@@ -2341,10 +2015,9 @@ object Crud {
   }
 
   private def ensureVacuumOrders(s: SparkSession, d: String): String =
-    stampedFixture(s, d, "graft_vac",
-      dir => new java.io.File(dir, "t.g2").isDirectory &&
-        !new java.io.File(dir, "t").isDirectory &&
-        !new java.io.File(dir, "t.g1").isDirectory) { bld =>
+    Fixture.stamped("vac", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.has(dir, "t.g2") && !Fixture.has(dir, "t") &&
+        !Fixture.has(dir, "t.g1")) { bld =>
       bld.mkdirs()
       val tp = new java.io.File(bld, "t").getPath
       t(s, d, "orders").repartition(3).write.mode("overwrite").parquet(tp)
@@ -2394,11 +2067,9 @@ object Crud {
   }
 
   private def ensureWidenOrders(s: SparkSession, d: String): String =
-    stampedFixture(s, d, "graft_widen",
-      dir => Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).exists(_.getName.startsWith("_schema-")) &&
-        Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).count(_.getName.startsWith("u-")) == 3) { bld =>
+    Fixture.stamped("widen", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.count(dir, "_updates", "_schema-") > 0 &&
+        Fixture.count(dir, "_updates", "u-") == 3) { bld =>
       val k = col("o_orderkey")
       val base = t(s, d, "orders").select(k, col("o_orderstatus"),
         (k % 997).cast("int").as("o_qty"),
@@ -2475,10 +2146,8 @@ object Crud {
   }
 
   private def ensureHistoryGens(s: SparkSession, d: String): String =
-    stampedFixture(s, d, "graft_genh",
-      dir => new java.io.File(dir, "t.g2").isDirectory &&
-        new java.io.File(new java.io.File(dir, "t.g2"),
-          "_published_delete").isFile) { bld =>
+    Fixture.stamped("genh", Fixture.stamp(s, d, "orders"),
+      Fixture.has(_, "t.g2/_published_delete")) { bld =>
       bld.mkdirs()
       val tp = new java.io.File(bld, "t").getPath
       t(s, d, "orders").repartition(3).write.mode("overwrite").parquet(tp)
@@ -2522,11 +2191,9 @@ object Crud {
   }
 
   private def ensureDbDml(s: SparkSession, d: String): String =
-    stampedFixture(s, d, "graft_dbdml",
-      dir => Option(new java.io.File(dir, "_updates").listFiles())
-          .getOrElse(Array.empty).count(_.getName.startsWith("u-")) == 2 &&
-        Option(new java.io.File(dir, "_deletes").listFiles())
-          .getOrElse(Array.empty).count(_.getName.startsWith("b-")) == 1) { bld =>
+    Fixture.stamped("dbdml", Fixture.stamp(s, d, "orders"), dir =>
+      Fixture.count(dir, "_updates", "u-") == 2 &&
+        Fixture.count(dir, "_deletes", "b-") == 1) { bld =>
       t(s, d, "orders").repartition(4).write.mode("overwrite")
         .parquet(bld.getPath)
       val bp = bld.getPath

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Fixture, Q, Tables}
 import graft.operators.{Dedup => D}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -655,27 +655,12 @@ object Dedup {
   // location (Text.ensureTextIndex's discipline); the timed/checked
   // passes measure index-served probing.
   private[graft] def ensureDedupIndex(s: SparkSession, d: String): String = {
-    val stamp = Text.docsStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_dindex_$stamp").getPath
-    val fresh =
-      try graft.operators.DedupIndex.readMeta(s, dir).stamp == stamp
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!fresh) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_dindex_") &&
-          f.getName != s"graft_dindex_$stamp")
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_dindex_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    val stamp = Fixture.stamp(s, d, "documents")
+    Fixture.stamped("dindex", stamp, Fixture.has(_, "meta/_SUCCESS")) { build =>
       graft.operators.DedupIndex.write(
         t(s, d, "documents").filter(col("doc_id") % 7 =!= 3),
         "doc_id", "text", build.getPath, stamp = stamp)
-      if (!build.renameTo(new java.io.File(dir)))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir
   }
 
   /** d31: batch-vs-corpus near-dup candidates SERVED FROM THE

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Fixture, Q, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -731,58 +731,24 @@ object Embed {
   // warmups pay the build, the timed/checked passes measure the
   // probe-only serving path — exactly the amortization a deployed
   // vector store gets (the bench artifact's s11/s12 lines vs s8/s10
-  // are the measured build-vs-serve gap). The stamp digests the
-  // source table's file listing (name/size/mtime — metadata-only), so
-  // a regenerated corpus rebuilds instead of serving a stale index.
-  private def corpusStamp(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** returns (dir, meta): the freshness check already reads the meta
-    * row, so serving queries reuse it instead of paying a second (and
-    * via probeRerank→probePq a third) meta scan+head job per probe —
-    * the serving paths are scheduling-latency-bound, not compute-bound */
+  // are the measured build-vs-serve gap). [[graft.Fixture.stamped]]
+  // stamps it on the corpus listing, so a regenerated corpus rebuilds
+  // instead of serving a stale index. Returns (dir, meta): serving
+  // queries thread the meta row through instead of paying a meta
+  // scan+head job per probe.
   private[graft] def ensureIndex(s: SparkSession, d: String)
       : (String, graft.operators.VectorIndex.Meta) = {
-    val stamp = corpusStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_vindex_$stamp").getPath
-    val cur =
-      try Some(graft.operators.VectorIndex.readMeta(s, dir))
-        .filter(_.stamp == stamp)
-      catch { case scala.util.control.NonFatal(_) => None }
-    if (cur.isEmpty) {
-      // build into a PROCESS-UNIQUE dir and publish with one atomic
-      // rename: two concurrent harness JVMs over the same corpus each
-      // build privately and the loser of the rename race just serves
-      // the winner's (identical — same stamp ⇒ same inputs ⇒ same
-      // deterministic build) copy, instead of interleaving overwrites
-      // into one directory. Stale stamped dirs of REGENERATED corpora
-      // are pruned here (best-effort: a dir another live JVM still
-      // probes is simply skipped on its next listing).
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_vindex_") &&
-          f.getName != s"graft_vindex_$stamp")
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_vindex_build_${java.util.UUID.randomUUID().toString.take(8)}")
-      val mt = graft.operators.VectorIndex.write(t(s, d, "embeddings"),
+    val stamp = Fixture.stamp(s, d, "embeddings")
+    // SQ8 (s18) is built with the rest, so the published index is
+    // never mutated in place and every copy of it carries `sq8`
+    val dir = Fixture.stamped("vindex", stamp,
+        Fixture.has(_, "meta/_SUCCESS", "sq8quant")) { build =>
+      graft.operators.VectorIndex.write(t(s, d, "embeddings"),
         "vec_id", "embedding", col("vec_id") % 125 === 0, build.getPath,
         stamp = stamp)
-      if (!build.renameTo(new java.io.File(dir)))
-        // a concurrent builder published first — serve its copy (the
-        // returned meta still matches it: same stamp ⇒ same inputs ⇒
-        // same deterministic build)
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
-      (dir, mt)
-    } else (dir, cur.get)
+      graft.operators.VectorIndex.writeSq8(s, build.getPath)
+    }
+    (dir, graft.operators.VectorIndex.readMeta(s, dir))
   }
 
   /** s11: multi-probe IVF served FROM THE PERSISTED INDEX — zero
@@ -1027,10 +993,6 @@ object Embed {
       .orderBy("probe_id", "rn")
   }
 
-  private def ensureSq8(s: SparkSession, dir: String): Unit =
-    if (!graft.operators.VectorIndex.hasSq8(s, dir))
-      graft.operators.VectorIndex.writeSq8(s, dir)
-
   /** s18: SQ8 served FROM THE PERSISTED INDEX
     * ([[graft.operators.VectorIndex.probeSq8]]) — the byte-code band
     * table and frozen quantizer are lake tables; the probe plan fits
@@ -1040,7 +1002,6 @@ object Embed {
     * oracle IS s17's SQL. */
   val s18 = Q("s18_index_sq8", Some(s17OracleSql)) { (s, d) =>
     val (dir, mt) = ensureIndex(s, d)
-    ensureSq8(s, dir)
     graft.operators.VectorIndex.probeSq8(s, dir,
       t(s, d, "embeddings").filter(col("vec_id") % 17 === 0), 5,
       meta = Some(mt))
@@ -1297,29 +1258,14 @@ object Embed {
   // source index's, pinned by the copy), serve from it
   private def ensureSoftDelIndex(s: SparkSession, d: String): String = {
     val (src, _) = ensureIndex(s, d)
-    val stamp = corpusStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_vindexsd_$stamp")
-    val fresh =
-      try graft.operators.VectorIndex.readMeta(s, dir.getPath).stamp == stamp &&
-        new java.io.File(dir, "_deletes").isDirectory
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!fresh) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_vindexsd_"))
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_vindexsd_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    Fixture.stamped("vindexsd", Fixture.stamp(s, d, "embeddings"),
+        Fixture.has(_, "meta/_SUCCESS", "sq8quant", "_deletes")) { build =>
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(src), build)
       graft.operators.VectorIndex.softDelete(s, build.getPath,
         s.read.parquet(s"${build.getPath}/assigned")
           .filter(col("vec_id") % 19 === 4).select("vec_id"))
-      if (!build.renameTo(dir))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir.getPath
   }
 
   /** s24: ANN SERVING UNDER SOFT DELETES

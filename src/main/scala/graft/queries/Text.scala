@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Fixture, Q, Tables}
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -337,26 +337,11 @@ object Text {
   // location and scores from the frozen count tables. Same
   // stamp/atomic-publish discipline as the other three indexes.
   private def ensureLmIndex(s: SparkSession, d: String): String = {
-    val stamp = docsStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_lmindex_$stamp").getPath
-    val fresh =
-      try graft.operators.LmIndex.readMeta(s, dir).stamp == stamp
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!fresh) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_lmindex_") &&
-          f.getName != s"graft_lmindex_$stamp")
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_lmindex_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    val stamp = Fixture.stamp(s, d, "documents")
+    Fixture.stamped("lmindex", stamp, Fixture.has(_, "meta/_SUCCESS")) { build =>
       graft.operators.LmIndex.write(t(s, d, "documents"), "text",
         build.getPath, stamp = stamp)
-      if (!build.renameTo(new java.io.File(dir)))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir
   }
 
   /** t25: the Laplace-bigram perplexity filter SERVED FROM THE
@@ -669,26 +654,11 @@ object Text {
   // trains once into a content-stamped location and encodes from
   // the frozen merges/vocab (same discipline as ensureLmIndex)
   private def ensureBpeIndex(s: SparkSession, d: String): String = {
-    val stamp = docsStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_bpeindex_$stamp").getPath
-    val fresh =
-      try graft.operators.BpeIndex.readMeta(s, dir).stamp == stamp
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!fresh) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_bpeindex_") &&
-          f.getName != s"graft_bpeindex_$stamp")
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_bpeindex_build_${java.util.UUID.randomUUID().toString.take(8)}")
+    val stamp = Fixture.stamp(s, d, "documents")
+    Fixture.stamped("bpeindex", stamp, Fixture.has(_, "meta/_SUCCESS")) { build =>
       graft.operators.BpeIndex.write(t(s, d, "documents"), "doc_id",
         "text", build.getPath, nMerges = 8, stamp = stamp)
-      if (!build.renameTo(new java.io.File(dir)))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
     }
-    dir
   }
 
   /** t26: per-document token counts SERVED FROM THE PERSISTED
@@ -900,46 +870,22 @@ object Text {
   // measure index-only serving (no corpus tokenization in the probe
   // plan — TextIndexSpec pins it). Same stamp/atomic-publish
   // discipline as Embed.ensureIndex.
-  private[queries] def docsStamp(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val items = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(items.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   private[graft] def ensureTextIndex(s: SparkSession, d: String): String =
     ensureTextIndexMeta(s, d)._1
 
-  /** (dir, meta): the freshness check already reads the meta row, so
-    * serving queries reuse it instead of paying further meta scan+head
-    * jobs per probe (the Embed.ensureIndex rule — serving paths are
+  /** (dir, meta): serving queries reuse the meta row instead of
+    * paying further meta scan+head jobs per probe (the
+    * Embed.ensureIndex rule — serving paths are
     * scheduling-latency-bound) */
   private[graft] def ensureTextIndexMeta(s: SparkSession, d: String)
       : (String, graft.operators.TextIndex.Meta) = {
-    val stamp = docsStamp(s, d)
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(tmp, s"graft_tindex_$stamp").getPath
-    val cur =
-      try Some(graft.operators.TextIndex.readMeta(s, dir))
-        .filter(_.stamp == stamp)
-      catch { case scala.util.control.NonFatal(_) => None }
-    if (cur.isEmpty) {
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_tindex_") &&
-          f.getName != s"graft_tindex_$stamp")
-        .foreach(f => scala.util.Try(
-          org.apache.commons.io.FileUtils.deleteDirectory(f)))
-      val build = new java.io.File(tmp,
-        s"graft_tindex_build_${java.util.UUID.randomUUID().toString.take(8)}")
-      val mt = graft.operators.TextIndex.write(t(s, d, "documents"),
+    val stamp = Fixture.stamp(s, d, "documents")
+    val dir = Fixture.stamped("tindex", stamp,
+        Fixture.has(_, "meta/_SUCCESS")) { build =>
+      graft.operators.TextIndex.write(t(s, d, "documents"),
         "doc_id", "text", build.getPath, stamp = stamp)
-      if (!build.renameTo(new java.io.File(dir)))
-        scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(build))
-      (dir, mt)
-    } else (dir, cur.get)
+    }
+    (dir, graft.operators.TextIndex.readMeta(s, dir))
   }
 
   /** BM25 served FROM THE PERSISTED INVERTED INDEX

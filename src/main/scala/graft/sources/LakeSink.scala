@@ -2768,6 +2768,24 @@ object LakeSink {
     fileBlooms(readDataFilesList(spark, dir), c, mBits, k)
       .write.mode("overwrite").parquet(s"$dir/_blooms_$c")
 
+  /** the probe of a manifest row's bloom (`words`) for its `dig`
+    * column: all k positions set, by the build's own position
+    * expressions (manifest-carried mBits/k) */
+  private def bloomHit(mBits: Int, k: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{expr, lit}
+    (0 until k).map { j =>
+      (expr(s"shiftright(coalesce(element_at(words, " +
+        s"cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) / 32 " +
+        s"as bigint)), 0L), cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) % 32 as int))")
+        .bitwiseAND(lit(1L))) === 1L
+    }.reduce(_ && _)
+  }
+
+  /** the data-file names a manifest describes (its `file` column) */
+  private[graft] def manifestFileNames(manifest: DataFrame): Set[String] =
+    manifest.select("file").collect()
+      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet
+
   /** The files whose bloom says `c = value` MIGHT be present — the
     * planning decision, exposed so specs and planners can count what
     * a lookup will read. Probe positions are computed by the SAME
@@ -2776,7 +2794,6 @@ object LakeSink {
     * file-count-sized manifest, like every manifest decision here. */
   def bloomSurvivors(manifest: DataFrame, c: String,
       value: org.apache.spark.sql.Column): Array[String] = {
-    import org.apache.spark.sql.functions._
     // an EMPTY manifest (a 0-row table: parquet scans of empty files
     // emit no rows, so per-file aggregation describes nothing) has
     // no survivors and no m_bits row to size probes from
@@ -2785,13 +2802,7 @@ object LakeSink {
     val head = headRows(0)
     val (mBits, k) = (head.getInt(0), head.getInt(1))
     val probed = manifest.withColumn("dig", value.cast("string"))
-    val hit = (0 until k).map { j =>
-      (expr(s"shiftright(coalesce(element_at(words, " +
-        s"cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) / 32 " +
-        s"as bigint)), 0L), cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) % 32 as int))")
-        .bitwiseAND(lit(1L))) === 1L
-    }.reduce(_ && _)
-    probed.filter(hit).select("file").collect().map(_.getString(0))
+    probed.filter(bloomHit(mBits, k)).select("file").collect().map(_.getString(0))
   }
 
   /** [[bloomSurvivors]] for a KEY SET — the dynamic-file-pruning
@@ -2811,13 +2822,7 @@ object LakeSink {
     val digs = keys.select(col(keys.columns.head).cast("string").as("dig"))
       .filter(col("dig").isNotNull).distinct()
     val probed = digs.crossJoin(broadcast(manifest))
-    val hit = (0 until k).map { j =>
-      (expr(s"shiftright(coalesce(element_at(words, " +
-        s"cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) / 32 " +
-        s"as bigint)), 0L), cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) % 32 as int))")
-        .bitwiseAND(lit(1L))) === 1L
-    }.reduce(_ && _)
-    probed.filter(hit).select("file").distinct()
+    probed.filter(bloomHit(mBits, k)).select("file").distinct()
       .collect().map(_.getString(0))
   }
 
@@ -2839,9 +2844,7 @@ object LakeSink {
     val manPath = new org.apache.hadoop.fs.Path(loc, s"_blooms_$key")
     if (!fs.exists(manPath)) return None
     val manifest = spark.read.parquet(manPath.toString)
-    val manifestNames = manifest.select("file").collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet
-    if (dataFileNames(fs, dir) != manifestNames) return None
+    if (dataFileNames(fs, dir) != manifestFileNames(manifest)) return None
     Some(bloomSurvivorsKeys(manifest, probeKeys).map(f =>
       new org.apache.hadoop.fs.Path(loc,
         new org.apache.hadoop.fs.Path(f).getName).toString))
@@ -2896,9 +2899,7 @@ object LakeSink {
     val manifest = spark.read.parquet(s"$dir/_blooms_$c")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireManifestCurrent(fs, dir,
-      manifest.select("file").collect().map(r =>
-        new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet,
+    requireManifestCurrent(fs, dir, manifestFileNames(manifest),
       s"_blooms_$c")
     def anchored(f: String): String = new org.apache.hadoop.fs.Path(dir,
       new org.apache.hadoop.fs.Path(f).getName).toString
@@ -3178,9 +3179,7 @@ object LakeSink {
     val manifest = spark.read.parquet(s"$dir/_stats")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireManifestCurrent(fs, dir,
-      manifest.select("file").collect().map(r =>
-        new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet,
+    requireManifestCurrent(fs, dir, manifestFileNames(manifest),
       "_stats")
     readPrunedAnchored(spark, manifest, preds, Some(dir))
   }

@@ -173,7 +173,7 @@ class DmlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS dml_cat")
   }
 
-  test("DML composes with the planner: under morApply the predicate scan is a single-root read the prune rules can skip files on; semantics identical either way") {
+  test("DML composes with the planner: the folded predicate scan is a single-root read the prune rules can skip files on; semantics identical either way") {
     val dir = freshDir("dmlprune")
     // key-clustered table with a committed bloom manifest
     spark.range(8000L).select(col("id"),

@@ -431,7 +431,7 @@ class UpsertLogSpec extends AnyFunSuite {
     assert(LakeSink.lastLandedSeq(spark, dir) == 4L)
   }
 
-  test("stale-claim reclaim by rename: N threads race a pre-aged crashed claim — exactly one acquires, no grave left behind") {
+  test("stale-claim reclaim through the exclusive-create mutex: N threads race a pre-aged crashed claim — exactly one acquires, nothing left behind") {
     val dir = mkTable("reclaimrace", 10L)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
