@@ -14,10 +14,6 @@ object GraftSession {
   def builder(cores: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
-      // graft's optimizer rule (conf-gated, default off): the
-      // measured q43 multi-distinct Expand fix as a planner rewrite
-      .withExtensions(_.injectOptimizerRule(_ =>
-        graft.plans.DistinctPairRewrite))
       // bloom-manifest file pruning for equality lookups (conf-gated,
       // default off): the a23 membership manifest consulted by the
       // planner itself — WHERE k = v over a manifest-carrying parquet

@@ -35,7 +35,11 @@ object Verify {
       .getPath
     if (sfDir != tiny && new java.io.File(tiny).isDirectory)
       suite.foreach { case (name, fn) =>
-        try { fn(spark, tiny).count() } catch {
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, tiny).count()
+          System.err.println(f"[verify] tiny-warmup $name ${(System.nanoTime() - t0) / 1e9}%.1f")
+        } catch {
           case scala.util.control.NonFatal(e) => System.err.println(
             s"[verify] tiny-warmup $name failed: ${e.getClass.getName}: ${e.getMessage}")
         }

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics — and therefore the SQL oracles — are IDENTICAL:
   * md5 of the UTF-8 shingle bytes, lexicographic/hex-fold results.
   */
-private[functions] object Md5 {
+private[graft] object Md5 {
   private val local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

@@ -413,8 +413,8 @@ object RuntimeFilter {
       fs: org.apache.hadoop.fs.FileSystem, dataDir: String,
       statsDir: String): Unit = {
     import spark.implicits._
-    graft.sources.LakeSink.dataFileNames(fs, dataDir).toSeq.sorted
-      .toDF("file").coalesce(1).write.mode("overwrite")
+    graft.sources.Manifest.dataFiles(fs, new org.apache.hadoop.fs.Path(dataDir))
+      .map(_.getName).sorted.toDF("file").coalesce(1).write.mode("overwrite")
       .parquet(s"$statsDir/_files")
   }
 
@@ -515,8 +515,7 @@ object RuntimeFilter {
           "re-run attachKeyStats to recommit counts and record together")
       val names = spark.read.parquet(rec.toString)
         .collect().map(_.getString(0)).toSet
-      graft.sources.LakeSink.requireManifestCurrent(fs, dir, names,
-        s"_keystats_$key")
+      graft.sources.Manifest.requireCurrent(fs, dir, names, s"_keystats_$key")
       // the manifest is FEW files (storage-sized, ≤ ~30 MB/2M keys →
       // one split), but its consumers fan out — the CMS build
       // explodes ×depth and the per-side aggregates want the whole
@@ -542,36 +541,20 @@ object RuntimeFilter {
     * Sound by the bloom's no-false-negatives: any file holding ANY
     * dim key survives, so joining the pruned fact ≡ joining the
     * table (false-positive files contribute rows the join drops).
-    * Returns None — caller falls back to the full fact — when the
-    * directory carries no manifest, the manifest is STALE (files the
-    * manifest never saw could hold matches: the coveringNames
-    * argument), or the dim's distinct keys exceed `maxKeys` (the
-    * probe is |files|×|keys| pairs; past the cap the decision costs
-    * more than the skip saves — that regime belongs to
-    * [[bloomReduce]]). Zero survivors return the fact's schema with
-    * a false filter: the provably-empty join, answered from footers. */
+    * Returns None — caller falls back to the full fact — when
+    * [[graft.sources.Manifest.probe]] does: no current manifest, or
+    * more distinct dim keys than `maxKeys`. Zero survivors return the
+    * fact's schema with a false filter: the provably-empty join,
+    * answered from footers. */
   def dynamicFilePrune(spark: org.apache.spark.sql.SparkSession,
       factDir: String, factKey: String, dimKeys: DataFrame,
-      maxKeys: Long = 100000L): Option[DataFrame] = {
-    val man = new org.apache.hadoop.fs.Path(factDir, s"_blooms_$factKey")
-    val fs = man.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(man)) return None
-    val manifest = spark.read.parquet(man.toString)
-    val manNames = graft.sources.LakeSink.manifestFileNames(manifest)
-    val current = graft.sources.LakeSink.dataFileNames(fs, factDir)
-    // stale manifest: a file it never saw could hold a matching key —
-    // fall back to the full fact rather than silently skip it
-    if (!current.subsetOf(manNames)) return None
-    if (dimKeys.distinct().count() > maxKeys) return None
-    val surv = graft.sources.LakeSink.bloomSurvivorsKeys(manifest, dimKeys)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    val keep = (surv & current).toSeq.sorted
-      .map(n => new org.apache.hadoop.fs.Path(factDir, n).toString)
-    Some(
-      if (keep.isEmpty)
-        spark.read.parquet(factDir).filter(lit(false))
-      else spark.read.parquet(keep: _*))
-  }
+      maxKeys: Long = graft.sources.Manifest.MaxProbeKeys): Option[DataFrame] =
+    graft.sources.Manifest.probe(spark, new org.apache.hadoop.fs.Path(factDir),
+        factKey, dimKeys, maxKeys = maxKeys).map { keep =>
+      if (keep.isEmpty) spark.read.parquet(factDir).filter(lit(false))
+      else spark.read.parquet(keep.toSeq.sorted
+        .map(n => new org.apache.hadoop.fs.Path(factDir, n).toString): _*)
+    }
 
   /** The TABLE-LEVEL advisor — [[adviseJoin]] reading COMMITTED
     * statistics: resolve each side's live generation ONCE (manifest

@@ -31,30 +31,20 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * (`spark.graft.dynFilePrune.enabled`); convergence-guarded through
   * the [[ManifestPrune.PrunedFileIndex]] ledger under "dynfile" —
   * and a probe that prunes NOTHING still marks the relation, so the
-  * fixpoint batch never re-executes the build side; staleness-guarded
-  * by manifest-name coverage (files the manifest never saw could
-  * hold matches — bail, never silently skip); CAPPED: the build side
-  * must be statistics-small (≤ autoBroadcastJoinThreshold, or the
-  * rule's own `spark.graft.dynFilePrune.maxBuildBytes` when larger)
-  * and its distinct key count ≤ `spark.graft.dynFilePrune.maxKeys`
-  * (default 100k — past it the |files|×|keys| probe costs more than
-  * the skip saves; that regime belongs to bloomReduce's row-level
-  * filter). Streaming build sides bail (no plan-time evaluation of
-  * an unbounded source). Inner and LEFT SEMI joins only — the shapes
-  * where a fact row without a build match contributes nothing. */
+  * fixpoint batch never re-executes the build side. The probe is
+  * [[graft.sources.Manifest.probe]], the one keyed probe: it falls
+  * back on a stale manifest (files it never saw could hold matches)
+  * or past `Manifest.MaxProbeKeys` distinct keys (that regime belongs
+  * to bloomReduce's row-level filter). The build side must be
+  * statistics-small (≤ autoBroadcastJoinThreshold, or
+  * `Manifest.MinProbeBuildBytes` when larger) and batch: streaming
+  * build sides bail (no plan-time evaluation of an unbounded source).
+  * Inner and LEFT SEMI joins only — the shapes where a fact row
+  * without a build match contributes nothing. */
 class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import ManifestPrune._
 
   val ConfKey = "spark.graft.dynFilePrune.enabled"
-
-  private def maxKeys: Long =
-    spark.conf.get("spark.graft.dynFilePrune.maxKeys", "100000").toLong
-  private def maxBuildBytes: BigInt = {
-    val thr = BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold)
-    val own = BigInt(
-      spark.conf.get("spark.graft.dynFilePrune.maxBuildBytes", "33554432"))
-    thr.max(own)
-  }
 
   /** the single eligible parquet relation reachable through
     * Project/Filter wrappers only — the prune must see the scan the
@@ -89,31 +79,13 @@ class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!buildSide.deterministic) return None
     // broadcast-eligibility by the SAME statistics the join strategy
     // uses — the guard that keeps plan-time evaluation bounded
-    if (buildSide.stats.sizeInBytes > maxBuildBytes) return None
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootMtime = fs.getFileStatus(root).getModificationTime
-    if (!manifestExists(fs, root, rootMtime, s"_blooms_${fAttr.name}"))
-      return None
-    val manPath = new org.apache.hadoop.fs.Path(root, s"_blooms_${fAttr.name}")
-    val manifest = spark.read.parquet(manPath.toString)
-    val listing = r.location.inputFiles
-    val manNames = graft.sources.LakeSink.manifestFileNames(manifest)
-    // staleness: a file the manifest never saw could hold a match
-    val current = coveringNames(manNames, listing).getOrElse(return None)
-    // the BUILD side's distinct keys, evaluated now (plan-time): the
-    // cap is enforced by collecting one row past it
-    val keyRows = GraftBridge.ofRows(spark,
-        Project(Seq(dAttr), buildSide))
-      .distinct().limit((maxKeys + 1).toInt).collect()
-    if (keyRows.length > maxKeys) return None
-    val keysDf = spark.createDataFrame(
-      java.util.Arrays.asList(keyRows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          dAttr.name, dAttr.dataType, dAttr.nullable))))
-    val surv = graft.sources.LakeSink.bloomSurvivorsKeys(manifest, keysDf)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-    val keep = surv & current
+    if (buildSide.stats.sizeInBytes >
+        BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold)
+          .max(graft.sources.Manifest.MinProbeBuildBytes)) return None
+    // the BUILD side's distinct keys, evaluated now (plan-time)
+    val keep = graft.sources.Manifest.probe(spark, root, fAttr.name,
+      GraftBridge.ofRows(spark, Project(Seq(dAttr), buildSide)),
+      r.location.inputFiles.toSeq).getOrElse(return None)
     // mark even a no-op prune ("dynfile" in the ledger): the fixpoint
     // batch must never re-run the build-side evaluation
     val newL = pruneRelation(spark, l, r, root, prunedBy, "dynfile", keep)

@@ -58,11 +58,11 @@ class TombstoneApplyRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val rootMtime = fs.getFileStatus(root).getModificationTime
       val dir = root.toString
-      val hasUps = manifestExists(fs, root, rootMtime, "_updates")
+      val hasUps = graft.sources.Manifest.exists(fs, root, rootMtime, "_updates")
       val ups = if (hasUps) LakeSink.updateBatches(fs, dir) else Nil
       val logKey = if (hasUps) LakeSink.updateLogKey(fs, dir) else None
       val tomb =
-        if (manifestExists(fs, root, rootMtime, "_deletes"))
+        if (graft.sources.Manifest.exists(fs, root, rootMtime, "_deletes"))
           LakeSink.tombstoneKeys(spark, fs, dir, logKey)
         else None
       if (ups.isEmpty && tomb.isEmpty) l

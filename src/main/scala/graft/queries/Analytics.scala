@@ -1872,7 +1872,7 @@ object Analytics {
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions("l_orderkey")
         .write.mode("overwrite").parquet(build.getPath)
-      graft.sources.LakeSink.attachBlooms(s, build.getPath,
+      graft.sources.Manifest.attachBlooms(s, build.getPath,
         "l_orderkey", mBits = 1 << 18)
     }
 

@@ -451,14 +451,14 @@ object Crud {
       // o_orderkey joins the stats manifest so a23's demo lookup keys
       // come from PLANNING metadata, never a table scan; its bloom
       // manifest is the membership surface a23 actually prunes with
-      graft.sources.LakeSink.attachStats(s, build.getPath,
+      graft.sources.Manifest.attachStats(s, build.getPath,
         Seq("o_orderdate", "o_orderkey"))
-      graft.sources.LakeSink.attachBlooms(s, build.getPath, "o_orderkey")
+      graft.sources.Manifest.attachBlooms(s, build.getPath, "o_orderkey")
     }
 
   /** a20: DATA SKIPPING over file statistics
-    * ([[graft.sources.LakeSink.fileStats]] +
-    * [[graft.sources.LakeSink.readPruned]]) — the lakehouse
+    * ([[graft.sources.Manifest.fileStats]] +
+    * [[graft.sources.Manifest.readPruned]]) — the lakehouse
     * min/max-manifest read: a one-quarter range aggregate answered
     * after eliminating, from the MANIFEST alone, every file whose
     * [min, max] o_orderdate interval cannot intersect the predicate
@@ -480,7 +480,7 @@ object Crud {
     GROUP BY o_orderstatus ORDER BY o_orderstatus""")) { (s, d) =>
     // the manifest was committed WITH the sorted copy — planning
     // reads the few-KB _stats, never re-scans the table for stats
-    graft.sources.LakeSink.readPrunedDir(s, ensureSortedOrders(s, d),
+    graft.sources.Manifest.readPrunedDir(s, ensureSortedOrders(s, d),
         Seq(("o_orderdate",
           lit("1995-01-01 00:00:00").cast("timestamp"),
           lit("1995-03-31 23:59:59").cast("timestamp"))))
@@ -506,13 +506,13 @@ object Crud {
         .sortWithinPartitions("__zk").drop("__zk")
         .write.mode("overwrite").parquet(build.getPath)
       // manifest committed WITH the copy, under the same rename
-      graft.sources.LakeSink.attachStats(s, build.getPath,
+      graft.sources.Manifest.attachStats(s, build.getPath,
         Seq("o_custkey", "o_orderdate"))
     }
 
   /** a21: TWO-DIMENSIONAL data skipping over a Z-ORDER layout
     * ([[graft.sources.LakeSink.zOrderKey]] +
-    * [[graft.sources.LakeSink.readPrunedMulti]]) — a20's manifest
+    * [[graft.sources.Manifest.readPrunedMulti]]) — a20's manifest
     * read where the predicate constrains BOTH o_custkey and
     * o_orderdate: the interleaved-bit clustering keeps every file's
     * [min,max] narrow in each dimension simultaneously, so the two
@@ -534,7 +534,7 @@ object Crud {
       AND o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
       AND o_orderdate <= TIMESTAMP '1995-12-31 23:59:59'""")) { (s, d) =>
     // committed manifest (stats-in-the-commit) — same contract as a20
-    graft.sources.LakeSink.readPrunedDir(s, ensureZOrderedOrders(s, d), Seq(
+    graft.sources.Manifest.readPrunedDir(s, ensureZOrderedOrders(s, d), Seq(
         ("o_custkey", lit(100L), lit(400L)),
         ("o_orderdate", lit("1994-01-01 00:00:00").cast("timestamp"),
           lit("1995-12-31 23:59:59").cast("timestamp"))))
@@ -595,7 +595,7 @@ object Crud {
   }
 
   /** a23: BLOOM-MANIFEST POINT LOOKUP
-    * ([[graft.sources.LakeSink.fileBlooms]] / `readBloomLookupDir`) —
+    * ([[graft.sources.Manifest.fileBlooms]] / `readBloomLookupDir`) —
     * the skipping surface a20's min/max stats CANNOT provide: the
     * table is date-clustered, so every file's [min,max] o_orderkey
     * spans the whole key domain and a range manifest keeps all 8
@@ -621,8 +621,8 @@ object Crud {
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
     val (lo, hi) = (st.getLong(0), st.getLong(1))
-    graft.sources.LakeSink.readBloomLookupDir(s, dir, "o_orderkey", lit(lo))
-      .unionByName(graft.sources.LakeSink
+    graft.sources.Manifest.readBloomLookupDir(s, dir, "o_orderkey", lit(lo))
+      .unionByName(graft.sources.Manifest
         .readBloomLookupDir(s, dir, "o_orderkey", lit(hi)))
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
@@ -952,7 +952,7 @@ object Crud {
         .sortWithinPartitions("o_orderstatus", "o_orderdate")
         .write.partitionBy("o_orderstatus").mode("overwrite")
         .parquet(build.getPath)
-      graft.sources.LakeSink.attachStats(s, build.getPath,
+      graft.sources.Manifest.attachStats(s, build.getPath,
         Seq("o_orderdate"))
     }
 

@@ -237,14 +237,14 @@ object LakeSink {
 
   /** OPTIMIZE ... ZORDER for a LIVE catalog table — the lakehouse
     * layout rewrite that turns an already-published table into
-    * [[fileStats]]-prunable form: the live generation is rewritten
+    * [[Manifest.fileStats]]-prunable form: the live generation is rewritten
     * range-partitioned + sorted on [[zOrderKey]] (a, b) and lands
     * through the SAME publishGeneration machinery as compaction and
     * merge — claim CAS, pre-flip count verify, one atomic catalog
     * flip, retention-windowed history (an optimize is time-travel
     * visible like any other generation). Readers mid-scan keep the
     * pre-optimize snapshot; rows are bit-identical, only the file
-    * layout changes — after it, a [[readPrunedMulti]] box predicate
+    * layout changes — after it, a [[Manifest.readPrunedMulti]] box predicate
     * on (a, b) touches ~the intersection files (LakeSpec pins
     * row-identity, pruning gain, and the generation bump). */
   def optimizeZOrder(spark: SparkSession, table: String,
@@ -257,7 +257,7 @@ object LakeSink {
   /** [[optimizeZOrder]] over N ≥ 2 cluster columns
     * ([[zOrderKeyN]]) — same machinery: claim CAS, pre-flip verify,
     * one catalog flip, retention-windowed history, and the cluster
-    * columns' [[fileStats]] manifest committed INSIDE the new
+    * columns' [[Manifest.fileStats]] manifest committed INSIDE the new
     * generation (an optimize exists FOR pruning; extras ride along
     * via `statsCols`). */
   def optimizeZOrderN(spark: SparkSession, table: String,
@@ -483,30 +483,16 @@ object LakeSink {
         s"new generation at $next has $nextCount rows, expected $expected; " +
           "aborting — table location unchanged")
     }
-    // STATS IN THE COMMIT (the Delta/Iceberg rule): the file-stats
-    // manifest lands INSIDE the generation directory, BEFORE the
-    // flip — so the manifest a pruned read resolves is always the
-    // live generation's own (it cannot describe files a later GC
-    // deletes: it is deleted WITH them), and readers never see a
-    // generation whose manifest is still being written. The `_`
-    // prefix keeps data reads from listing it.
-    if (statsCols.nonEmpty)
-      try fileStats(spark.read.format(format).load(next.toString), statsCols)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(next, "_stats").toString)
-      catch { case e: Throwable =>
-        fs.delete(next, true); releaseClaim(); throw e }
-    // bloom manifests ride the same commit (the equality-lookup
-    // twin of the stats rule): one `_blooms_<c>` per named column,
-    // inside the generation, before the flip — a lookup can never
-    // probe a manifest describing deleted files
-    bloomCols.foreach { c =>
-      try fileBlooms(spark.read.format(format).load(next.toString), c)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(next, s"_blooms_$c").toString)
-      catch { case e: Throwable =>
-        fs.delete(next, true); releaseClaim(); throw e }
-    }
+    // MANIFESTS IN THE COMMIT (the Delta/Iceberg rule): `_stats` and
+    // one `_blooms_<c>` per named column land INSIDE the generation
+    // directory, BEFORE the flip — so the manifests a pruned read
+    // resolves are always the live generation's own (deleted WITH its
+    // files by a later GC), and readers never see a generation whose
+    // manifest is still being written
+    try Manifest.commit(spark.read.format(format).load(next.toString),
+      next.toString, statsCols, bloomCols)
+    catch { case e: Throwable =>
+      fs.delete(next, true); releaseClaim(); throw e }
     // ANALYZE rides the commit too: the advisor's per-key count
     // tables (`_keystats_<c>`) land inside the generation before the
     // flip, so every later adviseJoinTables decision reads statistics
@@ -595,7 +581,10 @@ object LakeSink {
   private def readAsPublished(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       format: String): DataFrame = {
-    val files = dataFileNames(fs, dir).toSeq.sorted
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath.getName).sorted
       .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
     if (files.isEmpty) spark.read.format(format).load(dir)
     else spark.read.format(format).load(files: _*)
@@ -661,146 +650,6 @@ object LakeSink {
       .filter(col("__b").isNull || col("__a").isNull || changed)
       .select(col("op") +: col(key) +:
         cols.flatMap(c => Seq(col(s"before_$c"), col(s"after_$c"))): _*)
-  }
-
-  /** Per-FILE column-statistics MANIFEST — the lakehouse
-    * data-skipping surface (what Delta/Iceberg keep in their file
-    * stats): one scan of the table computing, per physical file,
-    * the row count and min/max/null-count of each named column.
-    * Fixed-width output (one row per FILE, not per row), so the
-    * manifest of a 100 TB table is a few MB — small enough that
-    * query planning reads IT instead of the data, which is the
-    * entire point: combined with a sort/z-order layout, a range
-    * predicate eliminates the files whose [min,max] cannot contain
-    * it before a single data byte is read. */
-  def fileStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, sum}
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
-      sum(col(c).isNull.cast("long")).as(s"nulls_$c")))
-    df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-  }
-
-  /** MANIFEST-PRUNED range read: keep only the files whose
-    * [min_c, max_c] interval can intersect [lo, hi], read exactly
-    * those, and apply the residual row filter. The file-list
-    * decision is driver-side over the manifest — file-count-sized,
-    * the same planning read every lakehouse format does — and the
-    * residual filter still pushes down into the surviving files'
-    * row groups. A file of only-NULL `c` has NULL min/max and is
-    * skipped (rows with NULL `c` can never satisfy the range).
-    * Correctness does not depend on the layout — a random layout
-    * just prunes nothing; a range/z-order layout prunes almost
-    * everything. */
-  def readPruned(spark: SparkSession, manifest: DataFrame, c: String,
-      lo: org.apache.spark.sql.Column,
-      hi: org.apache.spark.sql.Column): DataFrame =
-    readPrunedMulti(spark, manifest, Seq((c, lo, hi)))
-
-  /** [[readPruned]] over a CONJUNCTION of range predicates — the
-    * read shape a z-order layout exists for: with the data clustered
-    * on [[zOrderKey]], every predicate column's per-file [min,max]
-    * is narrow, so each predicate independently eliminates files and
-    * the survivors are ~the intersection box. (A single-column sort
-    * gets this for its sort column only; a predicate on any other
-    * column keeps every file — pinned in LakeSpec.) */
-  def readPrunedMulti(spark: SparkSession, manifest: DataFrame,
-      preds: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)])
-      : DataFrame =
-    readPrunedAnchored(spark, manifest, preds, None)
-
-  /** the directory's CURRENT data-file names — what a manifest must
-    * exactly describe for a pruned/bloom read to be sound. `_`- and
-    * `.`-prefixed entries (manifests, tombstones, stages, _SUCCESS)
-    * and subdirectories are not data. */
-  private[graft] def dataFileNames(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Set[String] =
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).toSet
-
-  /** REFUSE BY NAME a manifest that does not exactly describe the
-    * directory's current files — the schema-evolution / late-append
-    * hazard: an [[appendEvolved]] (or any plain write) AFTER the
-    * manifest was committed adds files the manifest has never seen,
-    * and a pruned read would SILENTLY SKIP a matching new file (a
-    * false negative — the one failure mode this whole surface
-    * promises never to have). Extra manifest names (files deleted
-    * since) refuse too: survivors could point at paths that are
-    * gone. The fix is to recommit the manifest with the directory's
-    * current state (attachStats/attachBlooms, or a statsCols/
-    * bloomCols publish). */
-  private[graft] def requireManifestCurrent(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, manifestNames: Set[String], what: String): Unit = {
-    val current = dataFileNames(fs, dir)
-    val unseenAll = current -- manifestNames
-    // a ZERO-ROW parquet file is invisible to every per-file manifest
-    // build (scans of it emit no rows to aggregate over), yet it can
-    // never hold a matching row either — tolerate it instead of
-    // refusing a degenerate-but-valid table. Emptiness is decided
-    // from FOOTER metadata via the Hadoop parquet reader directly:
-    // no Spark job per file, no dependence on SparkSession.active
-    // (which can be another session in a multi-session driver). A
-    // file whose footer won't read (not parquet, torn) counts as
-    // unseen — the conservative direction is to refuse.
-    val unseen =
-      if (unseenAll.isEmpty) unseenAll
-      else unseenAll.filter { n =>
-        val p = new org.apache.hadoop.fs.Path(dir, n)
-        fs.getFileStatus(p).getLen > 0 && scala.util.Try {
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              p, fs.getConf))
-          try rdr.getRecordCount != 0L finally rdr.close()
-        }.getOrElse(true)
-      }
-    val gone = manifestNames -- current
-    require(unseen.isEmpty && gone.isEmpty,
-      s"STALE MANIFEST REFUSED: $what under $dir does not describe the " +
-        s"directory's current files (${unseen.size} files the manifest " +
-        s"has never seen${if (unseen.nonEmpty) s", e.g. ${unseen.take(2).mkString(", ")}" else ""}; " +
-        s"${gone.size} manifest files gone) — a pruned read would " +
-        "silently skip matching rows. Rebuild the manifest " +
-        "(attachStats/attachBlooms or a statsCols/bloomCols publish).")
-  }
-
-  /** `anchor = Some(dir)` re-roots every manifest file path to
-    * `dir/<basename>` — a manifest committed inside its directory
-    * ([[attachStats]] on a staging path, a generation later renamed)
-    * stays valid wherever the directory lands; file NAMES are stable
-    * under rename, absolute paths are not. */
-  private def readPrunedAnchored(spark: SparkSession, manifest: DataFrame,
-      preds: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)],
-      anchor: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    require(preds.nonEmpty, "readPrunedMulti: at least one predicate")
-    def anchored(f: String): String = anchor.fold(f)(dir =>
-      new org.apache.hadoop.fs.Path(dir,
-        new org.apache.hadoop.fs.Path(f).getName).toString)
-    val survive = preds.map { case (c, lo, hi) =>
-      !(col(s"max_$c") < lo || col(s"min_$c") > hi)
-    }.reduce(_ && _)
-    val keep = manifest.filter(survive)
-      .select("file").collect().map(r => anchored(r.getString(0)))
-    val residual = preds.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    if (keep.isEmpty) {
-      // every file pruned: the result is provably empty — answer it
-      // from FOOTERS only (schema), zero data bytes read. Anchored
-      // reads take the directory's own schema (works even when the
-      // manifest is empty — a 0-row table describes no files); the
-      // manifest-only variant needs a file row to resolve a schema.
-      anchor match {
-        case Some(d) => readDataFilesList(spark, d).filter(lit(false))
-        case None =>
-          val any = anchored(manifest.select("file").head().getString(0))
-          spark.read.parquet(any).filter(lit(false))
-      }
-    } else
-      spark.read.parquet(keep.toIndexedSeq: _*).filter(residual)
   }
 
   // ---- MERGE-ON-READ equality deletes --------------------------------
@@ -1350,7 +1199,7 @@ object LakeSink {
     * read stays multi-root, i.e. still rule-proof. An evolved table
     * ([[persistedSchema]]) reads with the committed widened schema —
     * base files null-fill the added columns. */
-  private def readDataFilesList(spark: SparkSession,
+  private[graft] def readDataFilesList(spark: SparkSession,
       dir: String): DataFrame = {
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2392,13 +2241,11 @@ object LakeSink {
         // the KEY BLOOM rides the compaction commit (r17): every
         // compacted keyed table carries `_blooms_<key>` by default, so
         // the hottest statement's duplicate-key probe (SQL INSERT's PK
-        // check, [[pkProbeFiles]]) reads ~the owning files with NO
-        // opt-in confs — the lake's answer to the RDBMS B-tree probe.
-        // Written INSIDE the stage: the swap publishes data and
+        // check, [[Manifest.pkProbeFiles]]) reads ~the owning files
+        // with NO opt-in confs — the lake's answer to the RDBMS B-tree
+        // probe. Written INSIDE the stage: the swap publishes data and
         // manifest atomically (names are rename-stable).
-        fileBlooms(spark.read.parquet(tmp), key)
-          .write.mode("overwrite")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, s"_blooms_$key").toString)
+        Manifest.commit(spark.read.parquet(tmp), tmp, bloomCols = Seq(key))
       },
       source = Some(view))
     // the KEY REGISTRATION SURVIVES compaction (r17): the log retires
@@ -2446,12 +2293,10 @@ object LakeSink {
   /** the Z-ORDER rewrite step [[compactImpl]] runs: the view lands
     * range-partitioned + sorted on [[zOrderKeyN]] over `clusterCols`
     * (ONE column = a plain range sort — interleaving one dimension is
-    * the identity), and the cluster columns' [[fileStats]] manifest
-    * is computed FROM the staged files and written INSIDE the stage —
-    * the swap that publishes the layout publishes its pruning
-    * manifest atomically with it (file NAMES are stable under rename,
-    * so the staged manifest stays valid at the final path — the
-    * [[readPrunedAnchored]] anchoring rule). */
+    * the identity), and the cluster columns' `_stats` manifest is
+    * computed FROM the staged files and committed INSIDE the stage
+    * ([[Manifest.commit]]) — the swap that publishes the layout
+    * publishes its pruning manifest atomically with it. */
   private def zOrderRewrite(spark: SparkSession, clusterCols: Seq[String],
       bits: Int, targetRecordsPerFile: Long,
       bloomCols: Seq[String] = Nil)
@@ -2465,13 +2310,7 @@ object LakeSink {
       .sortWithinPartitions("__zk").drop("__zk")
       .write.option("maxRecordsPerFile", targetRecordsPerFile.toString)
       .mode("overwrite").parquet(tmp)
-    fileStats(spark.read.parquet(tmp), clusterCols)
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "_stats").toString)
-    bloomCols.foreach(c =>
-      fileBlooms(spark.read.parquet(tmp), c)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(tmp, s"_blooms_$c").toString))
+    Manifest.commit(spark.read.parquet(tmp), tmp, clusterCols, bloomCols)
   }
 
   /** [[compactUpsertsDir]] with a Z-ORDER LAYOUT — `OPTIMIZE … ZORDER
@@ -2702,156 +2541,8 @@ object LakeSink {
       catalog.getTableMetadata(ident).location).toString
   }
 
-  /** ATTACH a [[fileStats]] manifest to a directory-addressed table
-    * copy: computed from the files at `dir`, written INSIDE it as
-    * `_stats` (the `_` prefix keeps data reads from listing it) —
-    * the manifest shares the directory's lifetime, so it can never
-    * describe files that are gone. For CATALOG tables prefer the
-    * publish-time route (`statsCols` on
-    * [[compactTable]]/[[optimizeZOrder]]/[[mergeKeyed]]); this is
-    * the bootstrap for a generation that predates stats. */
-  def attachStats(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
-    fileStats(readDataFilesList(spark, dir), cols)
-      .write.mode("overwrite").parquet(s"$dir/_stats")
-
-  // ---- per-file BLOOM manifests (equality-lookup skipping) ----------
-
-  /** Per-file BLOOM manifest — the skipping surface min/max stats
-    * cannot provide: a POINT LOOKUP on a high-cardinality key that is
-    * NOT the layout's sort dimension finds every file's [min,max]
-    * spanning the whole key domain, so [[readPruned]] keeps
-    * everything (LakeSpec pins it). A fixed-size Bloom bitmap per
-    * file ("might this file contain c = v?") prunes by MEMBERSHIP
-    * instead of range — Parquet's optional column bloom filters and
-    * Iceberg's puffin blobs, as an explicit manifest the planner
-    * reads. One table scan builds it (k salted positions per
-    * non-NULL key, OR-folded into 32-bits-per-long words, partial
-    * aggregation — rows never shuffle beyond the per-file word
-    * rollup); output is one row per file with a SPARSE word map
-    * (zero words absent), `mBits`/`k` carried in the row so a probe
-    * can never size its positions differently from the build. No
-    * false negatives ever (a present key always survives — the
-    * lookup stays exact); false-positive files cost one wasted read,
-    * rate set by occupancy (size mBits ≈ 13× the per-file distinct
-    * keys). */
-  def fileBlooms(df: DataFrame, c: String, mBits: Int = 1 << 16,
-      k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(mBits % 32 == 0, "mBits must fill whole 32-bit words")
-    val base = df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"))
-    val pos = df.select(input_file_name().as("file"),
-        col(c).cast("string").as("dig"))
-      .filter(col("dig").isNotNull)
-      .select(col("file"), explode(array((0 until k).map(j =>
-        expr(graft.operators.TextAnalysis.bloomPosSpark(j, mBits))): _*))
-        .as("p"))
-    val words = pos
-      .select(col("file"), (col("p") / 32).cast("long").as("idx"),
-        expr("shiftleft(1L, cast(p % 32 as int))").as("b"))
-      .groupBy(col("file"), col("idx")).agg(bit_or(col("b")).as("w"))
-      .groupBy(col("file"))
-      .agg(expr("map_from_entries(collect_list(struct(idx, w)))")
-        .as("words"))
-    base.join(words, Seq("file"), "left_outer")
-      .select(col("file"), col("n_rows"), lit(mBits).as("m_bits"),
-        lit(k).as("k"),
-        coalesce(col("words"), expr("map()").cast("map<bigint,bigint>"))
-          .as("words"))
-  }
-
-  /** [[attachStats]]'s bloom twin: build and commit the `_blooms`
-    * manifest inside `dir` (same lifetime argument — it rides the
-    * directory's own rename/retention). */
-  def attachBlooms(spark: SparkSession, dir: String, c: String,
-      mBits: Int = 1 << 16, k: Int = 3): Unit =
-    fileBlooms(readDataFilesList(spark, dir), c, mBits, k)
-      .write.mode("overwrite").parquet(s"$dir/_blooms_$c")
-
-  /** the probe of a manifest row's bloom (`words`) for its `dig`
-    * column: all k positions set, by the build's own position
-    * expressions (manifest-carried mBits/k) */
-  private def bloomHit(mBits: Int, k: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    (0 until k).map { j =>
-      (expr(s"shiftright(coalesce(element_at(words, " +
-        s"cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) / 32 " +
-        s"as bigint)), 0L), cast((${graft.operators.TextAnalysis.bloomPosSpark(j, mBits)}) % 32 as int))")
-        .bitwiseAND(lit(1L))) === 1L
-    }.reduce(_ && _)
-  }
-
-  /** the data-file names a manifest describes (its `file` column) */
-  private[graft] def manifestFileNames(manifest: DataFrame): Set[String] =
-    manifest.select("file").collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet
-
-  /** The files whose bloom says `c = value` MIGHT be present — the
-    * planning decision, exposed so specs and planners can count what
-    * a lookup will read. Probe positions are computed by the SAME
-    * expression family as the build (manifest-carried mBits/k), so a
-    * present key's files always survive. Driver-side over the
-    * file-count-sized manifest, like every manifest decision here. */
-  def bloomSurvivors(manifest: DataFrame, c: String,
-      value: org.apache.spark.sql.Column): Array[String] = {
-    // an EMPTY manifest (a 0-row table: parquet scans of empty files
-    // emit no rows, so per-file aggregation describes nothing) has
-    // no survivors and no m_bits row to size probes from
-    val headRows = manifest.select("m_bits", "k").limit(1).collect()
-    if (headRows.isEmpty) return Array.empty
-    val head = headRows(0)
-    val (mBits, k) = (head.getInt(0), head.getInt(1))
-    val probed = manifest.withColumn("dig", value.cast("string"))
-    probed.filter(bloomHit(mBits, k)).select("file").collect().map(_.getString(0))
-  }
-
-  /** [[bloomSurvivors]] for a KEY SET — the dynamic-file-pruning
-    * probe: ONE distributed pass over |files| × |keys| probe pairs
-    * (the manifest is file-count-sized and broadcasts; the caller
-    * caps the key side), returning every file whose bloom admits AT
-    * LEAST ONE key. No false negatives per key ⇒ none for the set:
-    * any file holding any probed key survives, so a join against
-    * exactly these files equals the join against the table. */
-  def bloomSurvivorsKeys(manifest: DataFrame, keys: DataFrame)
-      : Array[String] = {
-    import org.apache.spark.sql.functions._
-    val headRows = manifest.select("m_bits", "k").limit(1).collect()
-    if (headRows.isEmpty) return Array.empty
-    val head = headRows(0)
-    val (mBits, k) = (head.getInt(0), head.getInt(1))
-    val digs = keys.select(col(keys.columns.head).cast("string").as("dig"))
-      .filter(col("dig").isNotNull).distinct()
-    val probed = digs.crossJoin(broadcast(manifest))
-    probed.filter(bloomHit(mBits, k)).select("file").distinct()
-      .collect().map(_.getString(0))
-  }
-
-  /** the PK-probe's pruned BASE file set: Some(files whose bloom
-    * admits ≥1 probe key, directory-anchored) when `dir` carries a
-    * CURRENT `_blooms_<key>` manifest — the scale-default duplicate-
-    * key check for SQL INSERT ([[graft.plans.GraftDml]].runInsert;
-    * r17, closing the three-conf opt-in: the manifest is probed
-    * DIRECTLY, no planner rule required). None = no manifest, or a
-    * manifest that no longer describes the directory's files (base
-    * files only change at compaction — which commits a fresh manifest
-    * in the same swap — so staleness here means an out-of-band
-    * rewrite: fall back to the full probe rather than trust it).
-    * Driver-side over the file-count-sized manifest. */
-  private[graft] def pkProbeFiles(spark: SparkSession, dir: String,
-      key: String, probeKeys: DataFrame): Option[Array[String]] = {
-    val loc = new org.apache.hadoop.fs.Path(dir)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manPath = new org.apache.hadoop.fs.Path(loc, s"_blooms_$key")
-    if (!fs.exists(manPath)) return None
-    val manifest = spark.read.parquet(manPath.toString)
-    if (dataFileNames(fs, dir) != manifestFileNames(manifest)) return None
-    Some(bloomSurvivorsKeys(manifest, probeKeys).map(f =>
-      new org.apache.hadoop.fs.Path(loc,
-        new org.apache.hadoop.fs.Path(f).getName).toString))
-  }
-
   /** the number of `probeKeys` LIVE in `dir`'s upsert view, computed
-    * the SCALE-DEFAULT way when [[pkProbeFiles]] has a current
+    * the SCALE-DEFAULT way when [[Manifest.pkProbeFiles]] has a current
     * manifest: live(k) ⇔ (k ∈ pruned-base ∪ k ∈ any log batch) ∧
     * k ∉ tombstones — exactly the view's key-liveness (a log batch
     * never loses a key short of a tombstone, and every tombstone
@@ -2863,7 +2554,7 @@ object LakeSink {
   private[graft] def liveKeyCount(spark: SparkSession, dir: String,
       key: String, probeKeys: DataFrame): Option[Long] = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    pkProbeFiles(spark, dir, key, probeKeys).map { survivors =>
+    Manifest.pkProbeFiles(spark, dir, key, probeKeys).map { survivors =>
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val pk = probeKeys.select(col(probeKeys.columns.head).as(key))
@@ -2882,35 +2573,6 @@ object LakeSink {
         .fold(hits)(t => hits.join(broadcast(t), Seq(key), "left_anti"))
         .count()
     }
-  }
-
-  /** BLOOM-PRUNED point lookup from a directory carrying an
-    * `_blooms_<c>` manifest: survivors from [[bloomSurvivors]]
-    * (anchored to the directory — file NAMES are rename-stable,
-    * absolute paths are not), read exactly those files, apply the
-    * exact equality as the residual filter (false-positive files
-    * contribute nothing). An absent key prunes every file and
-    * answers from one footer, zero data bytes. This is the 100 TB
-    * shape of the reference's `WHERE order_id = ?` point lookup
-    * (order_rdbms_blob.js:520) against a table no RDBMS holds. */
-  def readBloomLookupDir(spark: SparkSession, dir: String, c: String,
-      value: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val manifest = spark.read.parquet(s"$dir/_blooms_$c")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireManifestCurrent(fs, dir, manifestFileNames(manifest),
-      s"_blooms_$c")
-    def anchored(f: String): String = new org.apache.hadoop.fs.Path(dir,
-      new org.apache.hadoop.fs.Path(f).getName).toString
-    val keep = bloomSurvivors(manifest, c, value).map(anchored)
-    if (keep.isEmpty)
-      // every file pruned (or the table is empty): answer the
-      // provably-empty result from the directory's own schema —
-      // footer reads only, zero data bytes
-      readDataFilesList(spark, dir).filter(lit(false))
-    else
-      spark.read.parquet(keep.toIndexedSeq: _*).filter(col(c) === value)
   }
 
   /** EXACTLY-ONCE streamed append — the idempotent-writes contract
@@ -2966,7 +2628,7 @@ object LakeSink {
     * inputs) plus the live epochs ABOVE the fold watermark (epochs
     * at or below it are folded — their directories, if a crash left
     * them behind, hold rows the fold already contains). */
-  private def committedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def committedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Seq[org.apache.hadoop.fs.Path] = {
     val (cutoff, latest) = foldState(fs, dir)
     val live = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
@@ -3003,7 +2665,8 @@ object LakeSink {
     // rule on the streaming path): built on the STAGE, they share
     // the one atomic rename — a lookup never sees a batch whose
     // manifest is missing or mid-write
-    bloomCols.foreach(c => attachBlooms(spark, stage.toString, c))
+    Manifest.commit(readDataFilesList(spark, stage.toString),
+      stage.toString, bloomCols = bloomCols)
     if (fs.rename(stage, dest)) true
     else { // lost the race to a concurrent retry that committed first
       fs.delete(stage, true)
@@ -3037,7 +2700,7 @@ object LakeSink {
     * leftovers (re-running converges), and a REPLAY of a folded
     * epoch is still a no-op forever ([[appendBatchOnce]] checks the
     * marker before the directory). `bloomCols` re-blooms the folded
-    * set so [[readBloomLookupBatches]] keeps pruning. Returns the
+    * set so [[Manifest.readBloomLookupBatches]] keeps pruning. Returns the
     * folded row count. */
   def compactBatches(spark: SparkSession, dir: String,
       bloomCols: Seq[String] = Nil): Long = {
@@ -3082,7 +2745,8 @@ object LakeSink {
         s"staged fold short: $staged rows, expected $n; aborting — " +
           "batches unchanged")
     }
-    bloomCols.foreach(c => attachBlooms(spark, stage.toString, c))
+    Manifest.commit(readDataFilesList(spark, stage.toString),
+      stage.toString, bloomCols = bloomCols)
     // THE atomic switch: upTo > cutoff, so the destination is fresh —
     // from the instant this rename lands, [[committedBatchDirs]]
     // excludes every folded input (older compacted dir AND batch
@@ -3097,116 +2761,6 @@ object LakeSink {
     olds.filterNot(_ == dest).foreach(p =>
       require(fs.delete(p, true), s"folded batch $p undeletable"))
     n
-  }
-
-  /** BLOOM point lookup over a STREAMED table — the a23 read on an
-    * [[appendBatchOnce]] directory whose batches committed with
-    * `bloomCols`: every committed batch's own `_blooms_<c>` manifest
-    * prunes that batch's files independently (planning reads are
-    * manifest-sized × batches; compaction folds batches when the
-    * count grows), survivors across batches read together, exact
-    * equality as the residual. A batch committed WITHOUT the
-    * manifest refuses by name. */
-  def readBloomLookupBatches(spark: SparkSession, dir: String, c: String,
-      value: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same watermark-filtered listing as [[readBatches]] — a crashed
-    // fold's leftover epochs must not double the lookup's rows either
-    val batches = committedBatchDirs(fs, dir)
-    require(batches.nonEmpty, s"no committed batches under $dir")
-    val keep = batches.flatMap { b =>
-      val man = new org.apache.hadoop.fs.Path(b, s"_blooms_$c")
-      require(fs.exists(man),
-        s"NO BLOOM MANIFEST: batch ${b.getName} committed without " +
-          s"_blooms_$c — append with bloomCols")
-      bloomSurvivors(spark.read.parquet(man.toString), c, value)
-        .map(f => new org.apache.hadoop.fs.Path(b,
-          new org.apache.hadoop.fs.Path(f).getName).toString)
-    }
-    if (keep.isEmpty) readBatches(spark, dir).filter(lit(false)).limit(0)
-    else spark.read.parquet(keep.toIndexedSeq: _*).filter(col(c) === value)
-  }
-
-  /** TABLE-LEVEL bloom lookup — [[readPrunedTable]]'s discipline for
-    * the membership manifest: resolve the live generation ONCE, take
-    * ITS committed `_blooms_<c>` (publish with `bloomCols` on
-    * compactTable/optimizeZOrder/mergeKeyed/compactMor, or bootstrap
-    * with [[attachBlooms]]), prune, read the survivors — manifest,
-    * anchor, and data all from one snapshot directory, so a
-    * concurrent publish cannot mismatch them. REFUSES BY NAME a live
-    * generation without the manifest — a silent full scan would
-    * report pruning that never happened. */
-  def readBloomLookupTable(spark: SparkSession, table: String, c: String,
-      value: org.apache.spark.sql.Column): DataFrame = {
-    val loc = tableLocation(spark, table)
-    val man = new org.apache.hadoop.fs.Path(loc, s"_blooms_$c")
-    val fs = man.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(man),
-      s"NO BLOOM MANIFEST: the live generation of $table ($loc) carries " +
-        s"no _blooms_$c — publish with bloomCols or attachBlooms(dir) first")
-    readBloomLookupDir(spark, loc, c, value)
-  }
-
-  /** The LIVE manifest of a catalog table — resolved from the live
-    * generation's own directory ([[publishGeneration]] commits the
-    * manifest inside it), so manifest and data always describe the
-    * same snapshot. REFUSES BY NAME a table whose live generation
-    * carries no manifest — a silent fall-back to a full scan would
-    * report pruning that never happened. */
-  def tableStats(spark: SparkSession, table: String): DataFrame = {
-    val catalog = spark.sessionState.catalog
-    val ident = tableIdent(table)
-    require(catalog.tableExists(ident), s"unknown table $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      catalog.getTableMetadata(ident).location)
-    val stats = new org.apache.hadoop.fs.Path(loc, "_stats")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(stats),
-      s"NO MANIFEST: the live generation of $table ($loc) carries no " +
-        "_stats — publish with statsCols (compactTable/optimizeZOrder/" +
-        "mergeKeyed) or attachStats(dir) first")
-    spark.read.parquet(stats.toString)
-  }
-
-  /** [[readPrunedMulti]] against a directory whose manifest was
-    * committed WITH it ([[attachStats]] / a statsCols publish):
-    * planning reads the few-KB `_stats`, not the data. */
-  def readPrunedDir(spark: SparkSession, dir: String,
-      preds: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)])
-      : DataFrame = {
-    val manifest = spark.read.parquet(s"$dir/_stats")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireManifestCurrent(fs, dir, manifestFileNames(manifest),
-      "_stats")
-    readPrunedAnchored(spark, manifest, preds, Some(dir))
-  }
-
-  /** The TABLE-LEVEL pruned read: resolve the live generation ONCE,
-    * take ITS committed manifest, prune, read the surviving files —
-    * all against the same snapshot directory, so a concurrent
-    * publish flipping the table mid-call cannot mismatch manifest
-    * and data (the superseded generation, manifest included,
-    * survives the retention window like any in-flight read). */
-  def readPrunedTable(spark: SparkSession, table: String,
-      preds: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)])
-      : DataFrame = {
-    // resolve the live location exactly ONCE — manifest, anchor, and
-    // surviving files all come from that one snapshot directory
-    val catalog = spark.sessionState.catalog
-    val ident = tableIdent(table)
-    require(catalog.tableExists(ident), s"unknown table $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      catalog.getTableMetadata(ident).location).toString
-    val stats = new org.apache.hadoop.fs.Path(loc, "_stats")
-    val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(stats),
-      s"NO MANIFEST: the live generation of $table ($loc) carries no " +
-        "_stats — publish with statsCols (compactTable/optimizeZOrder/" +
-        "mergeKeyed) or attachStats(dir) first")
-    readPrunedDir(spark, loc, preds)
   }
 
   /** INCREMENTAL MATERIALIZED-VIEW deltas — turn a keyed change feed

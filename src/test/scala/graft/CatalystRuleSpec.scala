@@ -1,94 +1,14 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import graft.sources.Manifest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The injected optimizer rule (`graft.plans.DistinctPairRewrite` via
-  * `SparkSessionExtensions.injectOptimizerRule` — GraftSession's
-  * builder): the measured q43 multi-distinct Expand trap (§6,
-  * r = 10.1 → 4.8) generalized as a planner rewrite, conf-gated off
-  * by default. */
+/** graft's injected planner extensions (GraftSession's builder):
+  * the native SQL functions, and the manifest, merge-on-read and
+  * dynamic-file-pruning optimizer rules. */
 class CatalystRuleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  private val FLAG = "spark.graft.distinctPairRewrite"
-
-  private def li = Tables.load(spark, TestSpark.sf, "lineitem")
-
-  private def doubleDistinct = li.groupBy("l_returnflag")
-    .agg(countDistinct("l_partkey").as("np"),
-      countDistinct("l_suppkey").as("ns"))
-
-  private def pairAggs(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.optimizedPlan.collect {
-      case a: Aggregate if a.groupingExpressions.size == 3 => a
-    }
-
-  private def withFlag[A](on: Boolean)(f: => A): A = {
-    spark.conf.set(FLAG, on.toString)
-    try f finally spark.conf.unset(FLAG)
-  }
-
-  test("default off: no pair aggregate appears (the rule must be an explicit choice)") {
-    assert(pairAggs(doubleDistinct).isEmpty,
-      "with the flag unset the plan must be Spark's own")
-    // and the measured trap is really there to fix: the default plan
-    // Expands the scan relation for the multi-distinct
-    assert(doubleDistinct.queryExecution.executedPlan.toString
-      .contains("Expand"))
-  }
-
-  test("enabled: distinct pair aggregate planned below; results identical; fixpoint converges") {
-    val off = doubleDistinct.collect().map(_.toString).sorted.toSeq
-    withFlag(true) {
-      val df = doubleDistinct
-      // exactly ONE pair aggregate — the convergence guard must stop
-      // the fixpoint batch from stacking a second
-      assert(pairAggs(df).size == 1,
-        df.queryExecution.optimizedPlan.toString.take(1500))
-      // the Expand now replicates the pair relation: it sits ABOVE an
-      // Aggregate in the physical plan, not directly above the scan
-      val p = df.queryExecution.executedPlan.toString
-      val iExpand = p.indexOf("Expand")
-      assert(iExpand >= 0 && p.indexOf("HashAggregate", iExpand) >= 0,
-        "the Expand must feed from the pair aggregate:\n" + p.take(1500))
-      assert(df.collect().map(_.toString).sorted.toSeq == off,
-        "the rewrite must be invisible in results")
-    }
-  }
-
-  test("value-set semantics survive: sum/avg distinct + NULLs identical on and off") {
-    import spark.implicits._
-    val df = Seq[(String, java.lang.Long, java.lang.Double)](
-      ("a", 1L, 1.0), ("a", 1L, 1.0), ("a", 2L, null),
-      ("a", null, 3.0), ("b", null, null), ("b", 5L, 2.0))
-      .toDF("g", "x", "y")
-    def q = df.groupBy("g").agg(
-      countDistinct("x").as("nx"), sum_distinct(col("y")).as("sy"),
-      count_distinct(col("y")).as("ny"))
-    val off = q.collect().map(_.toString).sorted.toSeq
-    val on = withFlag(true) {
-      assert(pairAggs(q).size == 1, "three distincts over two args pair up")
-      q.collect().map(_.toString).sorted.toSeq
-    }
-    assert(on == off, s"on=$on off=$off")
-  }
-
-  test("ineligible shapes bail: mixed plain aggregate, single distinct arg") {
-    withFlag(true) {
-      // a plain count(1) would count PAIR rows after the rewrite —
-      // the rule must refuse the whole Aggregate
-      val mixed = li.groupBy("l_returnflag").agg(
-        countDistinct("l_partkey"), countDistinct("l_suppkey"),
-        count(lit(1)))
-      assert(pairAggs(mixed).isEmpty, "mixed distinct+plain must bail")
-      // two distincts over the SAME argument plan no Expand anyway
-      val same = li.groupBy("l_returnflag").agg(
-        countDistinct("l_partkey"), sum_distinct(col("l_partkey")))
-      assert(pairAggs(same).isEmpty, "single distinct argument must bail")
-      assert(mixed.collect().nonEmpty && same.collect().nonEmpty)
-    }
-  }
 
   test("every native is reachable from plain spark.sql and matches its Column-API twin") {
     import spark.implicits._
@@ -143,7 +63,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
+    Manifest.attachBlooms(spark, out, "k")
     val probe = bitrev(2222L)
     def lookup() = spark.read.parquet(out).filter(col("k") === probe)
     // OFF (default): every file read
@@ -205,7 +125,7 @@ class CatalystRuleSpec extends AnyFunSuite {
     assert(rel.location.isInstanceOf[
         org.apache.spark.sql.execution.datasources.CatalogFileIndex],
       s"premise: expected CatalogFileIndex, got ${rel.location.getClass}")
-    LakeSink.attachBlooms(spark, loc, "k")
+    Manifest.attachBlooms(spark, loc, "k")
     spark.catalog.refreshTable("catpart_t")
     val probe = bitrev(2222L)
     def lookup() = spark.table("catpart_t").filter(col("k") === probe)
@@ -248,7 +168,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
+    Manifest.attachBlooms(spark, out, "k")
     val probes = Seq(2L, 777L, 3999L).map(bitrev)
     def q(vals: Seq[Long]) = spark.read.parquet(out)
       .filter(col("k").isin(vals: _*))
@@ -286,8 +206,8 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toString + "/t"
     (0L until 1000L).map(i => (i, s"p$i")).toDF("k", "payload")
       .repartition(4).write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
-    LakeSink.attachStats(spark, out, Seq("k"))
+    Manifest.attachBlooms(spark, out, "k")
+    Manifest.attachStats(spark, out, Seq("k"))
     // MORE data lands AFTER the manifests were committed — the
     // manifests now describe a strict subset of the directory
     (5000L until 5100L).map(i => (i, s"new$i")).toDF("k", "payload")
@@ -324,7 +244,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachStats(spark, out, Seq("day"))
+    Manifest.attachStats(spark, out, Seq("day"))
     // one-eighth range: files 2-3 of 8 can hold it
     def q() = spark.read.parquet(out)
       .filter(col("day") >= 1000L && col("day") < 1500L)
@@ -363,7 +283,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       LakeSink.writeSorted(
         zrows.withColumn("zk", LakeSink.zOrderKey(col("x"), col("y"), 6)),
         zout, "parquet", Seq("zk"), 16)
-      LakeSink.attachStats(spark, zout, Seq("x", "y"))
+      Manifest.attachStats(spark, zout, Seq("x", "y"))
       val box = spark.read.parquet(zout)
         .filter(col("x") >= 8L && col("x") <= 15L &&
           col("y") >= 8L && col("y") <= 15L).drop("zk")
@@ -385,7 +305,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .map(i => (s"key-${i % 997}", i, s"p$i")).toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
+    Manifest.attachBlooms(spark, out, "k")
     spark.conf.set("spark.graft.bloomPrune.enabled", "true")
     try {
       // STRING keys: the bloom digest is the cast-to-string family,
@@ -428,8 +348,8 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
-    LakeSink.attachStats(spark, out, Seq("day"))
+    Manifest.attachBlooms(spark, out, "k")
+    Manifest.attachStats(spark, out, Seq("day"))
     val probe = bitrev(1234L) // day 1234 sits in the [1000, 1499) slice
     def q() = spark.read.parquet(out)
       .filter(col("k") === probe && col("day") >= 1000L && col("day") < 1500L)
@@ -473,8 +393,8 @@ class CatalystRuleSpec extends AnyFunSuite {
         .toDF("k1", "k2", "payload")
         .repartitionByRange(8, col("k1")).sortWithinPartitions("k1")
         .write.parquet(out2)
-      LakeSink.attachBlooms(spark, out2, "k1")
-      LakeSink.attachBlooms(spark, out2, "k2")
+      Manifest.attachBlooms(spark, out2, "k1")
+      Manifest.attachBlooms(spark, out2, "k2")
       val i0 = 2222L
       val pair = spark.read.parquet(out2)
         .filter(col("k1") === i0 && col("k2") === bitrev(i0))
@@ -501,7 +421,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachStats(spark, out, Seq("day"))
+    Manifest.attachStats(spark, out, Seq("day"))
     spark.conf.set("spark.graft.statsPrune.enabled", "true")
     try {
       // three points in three different slices: ≤ 3 of 8 files
@@ -544,7 +464,7 @@ class CatalystRuleSpec extends AnyFunSuite {
         .write.parquet(big)
       Seq((base + 1L, "hi")).toDF("day", "tag").coalesce(1)
         .write.mode("append").parquet(big)
-      LakeSink.attachStats(spark, big, Seq("day"))
+      Manifest.attachStats(spark, big, Seq("day"))
       val atBoundary = spark.read.parquet(big)
         .filter(col("day") === (base + 1L))
       assert(atBoundary.inputFiles.length == 2,
@@ -566,7 +486,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("pt", "day", "payload")
     rows.repartitionByRange(16, col("pt"), col("day"))
       .write.partitionBy("pt").parquet(out)
-    LakeSink.attachStats(spark, out, Seq("day"))
+    Manifest.attachStats(spark, out, Seq("day"))
     def q() = spark.read.parquet(out)
       .filter(col("pt") === 2L && col("day") >= 600L && col("day") <= 800L)
     val expect = q().collect().map(_.toString).sorted.toSeq
@@ -611,7 +531,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachBlooms(spark, out, "k")
+    Manifest.attachBlooms(spark, out, "k")
     // soft-delete a slice AFTER the bloom build: the tombstones are
     // `_`-hidden, so the manifest stays CURRENT for the data files
     LakeSink.softDeleteDir(spark, out,
@@ -640,7 +560,7 @@ class CatalystRuleSpec extends AnyFunSuite {
   }
 
   test("manifest-rule LRU memo: bounded at the cap, coldest evicted first, hit-after-eviction recomputes correctly") {
-    val lru = new graft.plans.ManifestPrune.Lru[Int, String](3)
+    val lru = new Manifest.Lru[Int, String](3)
     var computes = 0
     def get(k: Int): String =
       lru.getOrElseUpdate(k) { computes += 1; s"v$k" }
@@ -669,7 +589,7 @@ class CatalystRuleSpec extends AnyFunSuite {
       .toDF("k", "payload", "grp")
       .repartitionByRange(16, col("k")).sortWithinPartitions("k")
       .write.parquet(fact)
-    LakeSink.attachBlooms(spark, fact, "k")
+    Manifest.attachBlooms(spark, fact, "k")
     // tiny dim owning keys from ONE range
     val dim = s"$root/dim"
     (100L until 140L).map(i => (i, s"d$i")).toDF("k", "name")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Manifest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -180,7 +181,7 @@ class DmlSpec extends AnyFunSuite {
         concat(lit("n"), col("id")).as("name"), lit(1.0).as("price"))
       .repartitionByRange(8, col("id")).sortWithinPartitions("id")
       .write.parquet(dir)
-    graft.sources.LakeSink.attachBlooms(spark, dir, "id")
+    Manifest.attachBlooms(spark, dir, "id")
     graft.sources.LakeSink.registerKeyDir(spark, dir, "id")
     spark.conf.set("spark.graft.bloomPrune.enabled", "true")
     try {
@@ -830,7 +831,7 @@ class DmlSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet"))
     assert(nAll > 4, s"need a multi-file base, got $nAll")
     // the probe prunes the BASE side to ~the owning files
-    val files = graft.sources.LakeSink.pkProbeFiles(spark, dir, "id",
+    val files = Manifest.pkProbeFiles(spark, dir, "id",
       Seq(42L).toDF("id")).get
     assert(files.nonEmpty && files.length < nAll,
       s"probe must read < $nAll files, read ${files.length}")
@@ -857,7 +858,7 @@ class DmlSpec extends AnyFunSuite {
     val f = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     assert(f.renameTo(new java.io.File(dir, "zz-" + f.getName)))
-    assert(graft.sources.LakeSink.pkProbeFiles(spark, dir, "id",
+    assert(Manifest.pkProbeFiles(spark, dir, "id",
       Seq(1L).toDF("id")).isEmpty, "stale manifest → None, never wrong")
   }
 }

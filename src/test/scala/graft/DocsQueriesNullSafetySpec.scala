@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Manifest
 import org.apache.spark.sql.{Row, types => T}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,8 +118,8 @@ class DocsQueriesNullSafetySpec extends AnyFunSuite {
     val bDir = java.nio.file.Files
       .createTempDirectory("graft_bloom_null").toString + "/t"
     docs.write.parquet(bDir)
-    graft.sources.LakeSink.attachBlooms(spark, bDir, "doc_id")
-    assert(graft.sources.LakeSink.readBloomLookupDir(spark, bDir,
+    Manifest.attachBlooms(spark, bDir, "doc_id")
+    assert(Manifest.readBloomLookupDir(spark, bDir,
       "doc_id", lit(null).cast("long")).isEmpty)
     // LmIndex trained on a corpus WITH null docs serves non-null text
     val lmDir = java.nio.file.Files

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Jdbc, LakeSink}
+import graft.sources.{Jdbc, LakeSink, Manifest}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -622,7 +622,7 @@ class LakeSpec extends AnyFunSuite {
     // dimensions, so a box predicate can prune nothing
     LakeSink.writeParquet(grid.repartition(16), out)
     LakeSink.registerExternal(spark, "opt_t", out)
-    val before = LakeSink.fileStats(spark.table("opt_t"), Seq("x", "y"))
+    val before = Manifest.fileStats(spark.table("opt_t"), Seq("x", "y"))
     def keptBox(m: org.apache.spark.sql.DataFrame) = m.filter(
       !(col("max_x") < 0L || col("min_x") > 7L) &&
         !(col("max_y") < 0L || col("min_y") > 7L)).count()
@@ -636,7 +636,7 @@ class LakeSpec extends AnyFunSuite {
     assert(back.exceptAll(grid).isEmpty && grid.exceptAll(back).isEmpty)
     assert(LakeSink.listGenerations(spark, "opt_t") == Seq(0L, 1L))
     // and now the same box prunes to ~the intersection files
-    val after = LakeSink.fileStats(back, Seq("x", "y"))
+    val after = Manifest.fileStats(back, Seq("x", "y"))
     val (nA, keptA) = (after.count(), keptBox(after))
     assert(keptA * 4 <= nA, s"optimized layout must skip: $keptA/$nA")
     spark.sql("DROP TABLE opt_t")
@@ -652,16 +652,16 @@ class LakeSpec extends AnyFunSuite {
     // no manifest yet: the table-level read refuses BY NAME instead
     // of silently full-scanning
     val e0 = intercept[IllegalArgumentException] {
-      LakeSink.readPrunedTable(spark, "st_t",
+      Manifest.readPrunedTable(spark, "st_t",
         Seq(("x", lit(0L), lit(7L))))
     }
     assert(e0.getMessage.contains("NO MANIFEST"), e0.getMessage)
     // optimize commits the cluster columns' manifest with the flip
     LakeSink.optimizeZOrder(spark, "st_t", "x", "y",
       targetRecordsPerFile = 256L, bits = 6)
-    val man = LakeSink.tableStats(spark, "st_t")
+    val man = Manifest.tableStats(spark, "st_t")
     assert(man.columns.contains("min_x") && man.columns.contains("max_y"))
-    val pr = LakeSink.readPrunedTable(spark, "st_t",
+    val pr = Manifest.readPrunedTable(spark, "st_t",
       Seq(("x", lit(0L), lit(7L)), ("y", lit(0L), lit(7L))))
     val exp = grid.filter(col("x").between(0L, 7L) && col("y").between(0L, 7L))
     assert(pr.exceptAll(exp).isEmpty && exp.exceptAll(pr).isEmpty)
@@ -678,13 +678,13 @@ class LakeSpec extends AnyFunSuite {
     // it can never prune against files a later GC deletes
     LakeSink.compactTable(spark, "st_t", targetRecordsPerFile = 4096L)
     val e1 = intercept[IllegalArgumentException] {
-      LakeSink.tableStats(spark, "st_t")
+      Manifest.tableStats(spark, "st_t")
     }
     assert(e1.getMessage.contains("NO MANIFEST"), e1.getMessage)
     // a publish WITH statsCols re-commits a manifest for ITS files
     LakeSink.compactTable(spark, "st_t", targetRecordsPerFile = 512L,
       statsCols = Seq("x", "y"))
-    val man2 = LakeSink.tableStats(spark, "st_t").collect()
+    val man2 = Manifest.tableStats(spark, "st_t").collect()
     // compare PATHS (input_file_name and the catalog print file: URIs
     // in different forms — file:/ vs file:///)
     def p(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
@@ -723,12 +723,12 @@ class LakeSpec extends AnyFunSuite {
     assert(n == 32L * 32L * 32L)
     val back = spark.table("z3_t")
     assert(back.exceptAll(cube).isEmpty && cube.exceptAll(back).isEmpty)
-    val man = LakeSink.tableStats(spark, "z3_t")
+    val man = Manifest.tableStats(spark, "z3_t")
     // (0..3)³ sits inside ONE aligned 8×8×8 morton block — immune to
     // where repartitionByRange's sampled boundaries land (a (0..7)³
     // box straddles up to 3 files at this file sizing, which is
     // still ~8× pruning but flaky against a sharp-ratio assert)
-    val pr = LakeSink.readPrunedTable(spark, "z3_t", Seq(
+    val pr = Manifest.readPrunedTable(spark, "z3_t", Seq(
       ("x", lit(0L), lit(3L)), ("y", lit(0L), lit(3L)),
       ("z", lit(0L), lit(3L))))
     val exp = cube.filter(col("x").between(0L, 3L) &&
@@ -865,12 +865,12 @@ class LakeSpec extends AnyFunSuite {
     val df = (0L until 1024L).map(v => (v, s"p$v")).toDF("v", "payload")
     df.repartitionByRange(8, col("v")).sortWithinPartitions("v")
       .write.parquet(s"$base/build")
-    LakeSink.attachStats(spark, s"$base/build", Seq("v"))
+    Manifest.attachStats(spark, s"$base/build", Seq("v"))
     // the rename every staged publish does — absolute paths recorded
     // at stat time are now stale; file NAMES are not
     assert(new java.io.File(s"$base/build")
       .renameTo(new java.io.File(s"$base/live")))
-    val pr = LakeSink.readPrunedDir(spark, s"$base/live",
+    val pr = Manifest.readPrunedDir(spark, s"$base/live",
       Seq(("v", lit(100L), lit(149L))))
     assert(pr.count() == 50L)
     assert(pr.inputFiles.length * 2 <=
@@ -888,9 +888,9 @@ class LakeSpec extends AnyFunSuite {
       .drop("zk").write.parquet(s"$base/z")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.parquet(s"$base/xs")
-    val mz = LakeSink.fileStats(spark.read.parquet(s"$base/z"), Seq("x", "y"))
+    val mz = Manifest.fileStats(spark.read.parquet(s"$base/z"), Seq("x", "y"))
       .cache()
-    val mx = LakeSink.fileStats(spark.read.parquet(s"$base/xs"), Seq("x", "y"))
+    val mx = Manifest.fileStats(spark.read.parquet(s"$base/xs"), Seq("x", "y"))
       .cache()
     def kept(m: org.apache.spark.sql.DataFrame, c: String, lo: Long, hi: Long) =
       m.filter(!(col(s"max_$c") < lo || col(s"min_$c") > hi)).count()
@@ -902,7 +902,7 @@ class LakeSpec extends AnyFunSuite {
     assert(kept(mz, "y", 0L, 7L) * 2 <= nz,
       s"z-layout prunes the off-sort dimension: ${kept(mz, "y", 0L, 7L)}/$nz")
     // the 2-D box read: correct, and touches ~the intersection files
-    val pr = LakeSink.readPrunedMulti(spark, mz,
+    val pr = Manifest.readPrunedMulti(spark, mz,
       Seq(("x", lit(0L), lit(7L)), ("y", lit(0L), lit(7L))))
     val exp = grid.filter(col("x").between(0L, 7L) && col("y").between(0L, 7L))
     assert(pr.exceptAll(exp).isEmpty && exp.exceptAll(pr).isEmpty,
@@ -922,10 +922,10 @@ class LakeSpec extends AnyFunSuite {
     Seq((None: Option[Long], 0.0)).toDF("v", "pay")
       .coalesce(1).write.mode("append").parquet(out)
     val full = spark.read.parquet(out)
-    val man = LakeSink.fileStats(full, Seq("v")).cache()
+    val man = Manifest.fileStats(full, Seq("v")).cache()
     val nFiles = man.count()
     assert(nFiles >= 6, s"expected >= 6 files, got $nFiles")
-    val pr = LakeSink.readPruned(spark, man, "v", lit(100L), lit(149L))
+    val pr = Manifest.readPruned(spark, man, "v", lit(100L), lit(149L))
     val expect = full.filter(col("v").between(100L, 149L))
     assert(pr.exceptAll(expect).isEmpty && expect.exceptAll(pr).isEmpty,
       "pruned read must lose nothing vs the full filter")
@@ -935,7 +935,7 @@ class LakeSpec extends AnyFunSuite {
     assert(kept < nFiles && pr.inputFiles.length.toLong == kept,
       s"kept $kept of $nFiles files; read touched ${pr.inputFiles.length}")
     // a range beyond every file answers EMPTY from footers alone
-    val e = LakeSink.readPruned(spark, man, "v", lit(5000L), lit(6000L))
+    val e = Manifest.readPruned(spark, man, "v", lit(5000L), lit(6000L))
     assert(e.isEmpty && e.schema.fieldNames.toSeq == full.schema.fieldNames.toSeq)
     man.unpersist()
   }
@@ -953,22 +953,22 @@ class LakeSpec extends AnyFunSuite {
       .toDF("k", "day", "payload")
     rows.repartitionByRange(8, col("day")).sortWithinPartitions("day")
       .write.parquet(out)
-    LakeSink.attachStats(spark, out, Seq("k", "day"))
-    LakeSink.attachBlooms(spark, out, "k")
+    Manifest.attachStats(spark, out, Seq("k", "day"))
+    Manifest.attachBlooms(spark, out, "k")
     val nFiles = spark.read.parquet(s"$out/_blooms_k").count()
     assert(nFiles == 8)
     // the range manifest is useless for this lookup — all 8 survive
     val stats = spark.read.parquet(s"$out/_stats")
     val probe = bitrev(1234L)
-    assert(LakeSink.readPruned(spark, stats, "k", lit(probe), lit(probe))
+    assert(Manifest.readPruned(spark, stats, "k", lit(probe), lit(probe))
       .inputFiles.length == 8,
       "min/max stats must keep every file for an unsorted-key lookup")
     // the bloom manifest prunes to ~1 file (k=3 @ 2^16 bits over 500
     // keys/file: FP ≈ 1e-7 per file) — and the lookup is exact
     val man = spark.read.parquet(s"$out/_blooms_k")
-    assert(LakeSink.bloomSurvivors(man, "k", lit(probe)).length <= 2,
+    assert(Manifest.bloomSurvivors(man, "k", lit(probe)).length <= 2,
       "bloom must prune the non-containing files")
-    val got = LakeSink.readBloomLookupDir(spark, out, "k", lit(probe))
+    val got = Manifest.readBloomLookupDir(spark, out, "k", lit(probe))
     assert(got.collect().map(_.toString).toSeq ==
       rows.filter(col("k") === probe).collect().map(_.toString).toSeq)
     // NO FALSE NEGATIVES: every key of one whole file answers
@@ -976,10 +976,10 @@ class LakeSpec extends AnyFunSuite {
       spark.read.parquet(out).inputFiles.head)
     val keys = oneFile.select("k").collect().map(_.getLong(0))
     val missed = keys.count(kv =>
-      LakeSink.bloomSurvivors(man, "k", lit(kv)).isEmpty)
+      Manifest.bloomSurvivors(man, "k", lit(kv)).isEmpty)
     assert(missed == 0, s"$missed present keys pruned — false negatives")
     // absent key: all files pruned, empty result, schema intact
-    val none = LakeSink.readBloomLookupDir(spark, out, "k", lit(-7L))
+    val none = Manifest.readBloomLookupDir(spark, out, "k", lit(-7L))
     assert(none.isEmpty &&
       none.schema.fieldNames.toSeq == rows.schema.fieldNames.toSeq)
   }
@@ -995,12 +995,12 @@ class LakeSpec extends AnyFunSuite {
         bloomCols = Seq("k")))
     }
     // lookup: only the owning batch's files survive the manifests
-    val got = LakeSink.readBloomLookupBatches(spark, dir, "k", lit(137L))
+    val got = Manifest.readBloomLookupBatches(spark, dir, "k", lit(137L))
     assert(got.collect().map(_.toString).toSeq == Seq("[137,v137]"))
     assert(got.inputFiles.length <= 2,
       s"lookup must prune to ~the owning batch's file: ${got.inputFiles.length}")
     // absent key: empty, nothing read
-    assert(LakeSink.readBloomLookupBatches(spark, dir, "k", lit(-5L))
+    assert(Manifest.readBloomLookupBatches(spark, dir, "k", lit(-5L))
       .isEmpty)
     // a replayed epoch with bloomCols stays a no-op
     assert(!LakeSink.appendBatchOnce(spark, dir, 1L,
@@ -1016,13 +1016,13 @@ class LakeSpec extends AnyFunSuite {
     assert(!LakeSink.appendBatchOnce(spark, dir, 0L,
       Seq((998L, "ghost")).toDF("k", "v"), bloomCols = Seq("k")),
       "a replay of a folded epoch must stay a no-op forever")
-    assert(LakeSink.readBloomLookupBatches(spark, dir, "k", lit(137L))
+    assert(Manifest.readBloomLookupBatches(spark, dir, "k", lit(137L))
       .collect().map(_.toString).toSeq == Seq("[137,v137]"))
     assert(LakeSink.appendBatchOnce(spark, dir, 5L,
       (300L until 320L).map(i => (i, s"v$i")).toDF("k", "v"),
       bloomCols = Seq("k")))
     assert(LakeSink.readBatches(spark, dir).count() == 320L)
-    assert(LakeSink.readBloomLookupBatches(spark, dir, "k", lit(305L))
+    assert(Manifest.readBloomLookupBatches(spark, dir, "k", lit(305L))
       .count() == 1L)
     // a second fold converges (compacted-* folds into compacted-*)
     assert(LakeSink.compactBatches(spark, dir, bloomCols = Seq("k")) == 320L)
@@ -1032,7 +1032,7 @@ class LakeSpec extends AnyFunSuite {
     assert(LakeSink.appendBatchOnce(spark, dir, 7L,
       Seq((400L, "x")).toDF("k", "v")))
     val e = intercept[IllegalArgumentException] {
-      LakeSink.readBloomLookupBatches(spark, dir, "k", lit(137L))
+      Manifest.readBloomLookupBatches(spark, dir, "k", lit(137L))
     }
     assert(e.getMessage.contains("NO BLOOM MANIFEST"))
   }
@@ -1088,12 +1088,12 @@ class LakeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_manevo").toString + "/t"
     val rows = (0L until 1000L).map(i => (i, s"v$i")).toDF("k", "v")
     rows.repartition(4).write.parquet(dir)
-    LakeSink.attachBlooms(spark, dir, "k")
-    LakeSink.attachStats(spark, dir, Seq("k"))
+    Manifest.attachBlooms(spark, dir, "k")
+    Manifest.attachStats(spark, dir, Seq("k"))
     // manifests current: both reads work
-    assert(LakeSink.readBloomLookupDir(spark, dir, "k", lit(42L))
+    assert(Manifest.readBloomLookupDir(spark, dir, "k", lit(42L))
       .count() == 1L)
-    assert(LakeSink.readPrunedDir(spark, dir,
+    assert(Manifest.readPrunedDir(spark, dir,
       Seq(("k", lit(10L), lit(20L)))).count() == 11L)
     // an EVOLVED append lands files the manifests have never seen —
     // a pruned read could silently skip a matching new row, the one
@@ -1101,20 +1101,20 @@ class LakeSpec extends AnyFunSuite {
     LakeSink.appendEvolved(
       Seq((5000L, "n1", 9.9)).toDF("k", "v", "score"), dir)
     val e1 = intercept[IllegalArgumentException] {
-      LakeSink.readBloomLookupDir(spark, dir, "k", lit(5000L))
+      Manifest.readBloomLookupDir(spark, dir, "k", lit(5000L))
     }
     assert(e1.getMessage.contains("STALE MANIFEST REFUSED"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      LakeSink.readPrunedDir(spark, dir, Seq(("k", lit(0L), lit(9000L))))
+      Manifest.readPrunedDir(spark, dir, Seq(("k", lit(0L), lit(9000L))))
     }
     assert(e2.getMessage.contains("STALE MANIFEST REFUSED"), e2.getMessage)
     // recommitting the manifests against the evolved directory heals
     // both reads — and the new file's rows are found
-    LakeSink.attachBlooms(spark, dir, "k")
-    LakeSink.attachStats(spark, dir, Seq("k"))
-    assert(LakeSink.readBloomLookupDir(spark, dir, "k", lit(5000L))
+    Manifest.attachBlooms(spark, dir, "k")
+    Manifest.attachStats(spark, dir, Seq("k"))
+    assert(Manifest.readBloomLookupDir(spark, dir, "k", lit(5000L))
       .count() == 1L)
-    assert(LakeSink.readPrunedDir(spark, dir,
+    assert(Manifest.readPrunedDir(spark, dir,
       Seq(("k", lit(4999L), lit(5001L)))).count() == 1L)
   }
 
@@ -1124,11 +1124,11 @@ class LakeSpec extends AnyFunSuite {
     // files; lookups answer empty from the directory's own schema
     val dir = Files.createTempDirectory("graft_manempty").toString + "/t"
     Seq.empty[(Long, String)].toDF("k", "v").write.parquet(dir)
-    LakeSink.attachBlooms(spark, dir, "k")
-    LakeSink.attachStats(spark, dir, Seq("k"))
-    val got = LakeSink.readBloomLookupDir(spark, dir, "k", lit(5L))
+    Manifest.attachBlooms(spark, dir, "k")
+    Manifest.attachStats(spark, dir, Seq("k"))
+    val got = Manifest.readBloomLookupDir(spark, dir, "k", lit(5L))
     assert(got.isEmpty && got.columns.toSeq == Seq("k", "v"))
-    val pruned = LakeSink.readPrunedDir(spark, dir,
+    val pruned = Manifest.readPrunedDir(spark, dir,
       Seq(("k", lit(0L), lit(10L))))
     assert(pruned.isEmpty && pruned.columns.toSeq == Seq("k", "v"))
     // a LATER zero-row append: the file is invisible to any per-file
@@ -1137,17 +1137,17 @@ class LakeSpec extends AnyFunSuite {
     val dir2 = Files.createTempDirectory("graft_manempty2").toString + "/t"
     (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v")
       .coalesce(2).write.parquet(dir2)
-    LakeSink.attachBlooms(spark, dir2, "k")
+    Manifest.attachBlooms(spark, dir2, "k")
     Seq.empty[(Long, String)].toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(dir2)
-    assert(LakeSink.readBloomLookupDir(spark, dir2, "k", lit(42L))
+    assert(Manifest.readBloomLookupDir(spark, dir2, "k", lit(42L))
       .count() == 1L,
       "a zero-row appended file must not fail the staleness guard")
     // but a row-BEARING post-manifest file still refuses
     Seq((5000L, "late")).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(dir2)
     val e = intercept[IllegalArgumentException] {
-      LakeSink.readBloomLookupDir(spark, dir2, "k", lit(42L))
+      Manifest.readBloomLookupDir(spark, dir2, "k", lit(42L))
     }
     assert(e.getMessage.contains("STALE MANIFEST REFUSED"), e.getMessage)
   }
@@ -1163,7 +1163,7 @@ class LakeSpec extends AnyFunSuite {
     LakeSink.compactTable(spark, "bloomtbl", targetRecordsPerFile = 200L,
       bloomCols = Seq("k"))
     val probe = 3L * 7919L % 1000L
-    val got = LakeSink.readBloomLookupTable(spark, "bloomtbl", "k",
+    val got = Manifest.readBloomLookupTable(spark, "bloomtbl", "k",
       lit(probe)).collect().map(_.toString).sorted.toSeq
     val exp = spark.table("bloomtbl").filter(col("k") === probe)
       .collect().map(_.toString).sorted.toSeq
@@ -1173,14 +1173,14 @@ class LakeSpec extends AnyFunSuite {
     LakeSink.mergeKeyed(spark, "bloomtbl",
       spark.table("bloomtbl").filter(lit(false)), "k",
       deletes = Some(Seq(probe).toDF("k")), bloomCols = Seq("k"))
-    assert(LakeSink.readBloomLookupTable(spark, "bloomtbl", "k",
+    assert(Manifest.readBloomLookupTable(spark, "bloomtbl", "k",
       lit(probe)).isEmpty)
     // a publish WITHOUT bloomCols lands a generation with no
     // manifest — the lookup refuses by name instead of silently
     // scanning (a manifest never outlives its generation)
     LakeSink.compactTable(spark, "bloomtbl", targetRecordsPerFile = 500L)
     val e = intercept[IllegalArgumentException] {
-      LakeSink.readBloomLookupTable(spark, "bloomtbl", "k", lit(probe))
+      Manifest.readBloomLookupTable(spark, "bloomtbl", "k", lit(probe))
     }
     assert(e.getMessage.contains("NO BLOOM MANIFEST"))
     spark.sql("DROP TABLE bloomtbl")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Manifest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -267,7 +268,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       .toDF("fk", "row_id", "fv")
     fact.repartitionByRange(16, col("fk")).sortWithinPartitions("fk")
       .write.parquet(s"$root/fact")
-    LakeSink.attachBlooms(spark, s"$root/fact", "fk", mBits = 1 << 17)
+    Manifest.attachBlooms(spark, s"$root/fact", "fk", mBits = 1 << 17)
     // a 50-key consecutive page (the reference's keyset shape)
     val page = (100L until 150L).toDF("dk")
     val prunedOpt = RuntimeFilter.dynamicFilePrune(spark, s"$root/fact",
@@ -316,7 +317,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       .toString
     fact.repartitionByRange(16, col("fk")).sortWithinPartitions("fk")
       .write.parquet(s"$root2/fact")
-    LakeSink.attachBlooms(spark, s"$root2/fact", "fk", mBits = 1 << 17)
+    Manifest.attachBlooms(spark, s"$root2/fact", "fk", mBits = 1 << 17)
     RuntimeFilter.attachKeyStats(spark, s"$root2/fact", "fk")
     page.withColumn("d_name", concat(lit("d"), col("dk")))
       .write.parquet(s"$root2/dim")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Manifest
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1688,7 +1689,7 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("fk", "row_id", "fv")
       .repartitionByRange(16, col("fk")).sortWithinPartitions("fk")
       .write.parquet(s"$root/fact")
-    LakeSink.attachBlooms(spark, s"$root/fact", "fk", mBits = 1 << 17)
+    Manifest.attachBlooms(spark, s"$root/fact", "fk", mBits = 1 << 17)
     val answered = scala.collection.mutable.ArrayBuffer[String]()
     val filesRead = scala.collection.mutable.ArrayBuffer[Int]()
     val in = MemoryStream[Long]
