@@ -581,13 +581,10 @@ object LakeSink {
   private def readAsPublished(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       format: String): DataFrame = {
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).sorted
-      .map(n => new org.apache.hadoop.fs.Path(dir, n).toString)
+    val files = Manifest.dataFiles(fs, new org.apache.hadoop.fs.Path(dir))
+      .map(_.toString).sorted
     if (files.isEmpty) spark.read.format(format).load(dir)
-    else spark.read.format(format).load(files: _*)
+    else spark.read.format(format).option("basePath", dir).load(files: _*)
   }
 
   private def generationPaths(spark: SparkSession, table: String)
@@ -1203,14 +1200,7 @@ object LakeSink {
       dir: String): DataFrame = {
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toIndexedSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st.getPath)
-      }
-    val files = walk(loc).map(_.toString).sorted
+    val files = Manifest.dataFiles(fs, loc).map(_.toString).sorted
     val rd = persistedSchema(fs, dir)
       .fold(spark.read)(s0 => spark.read.schema(s0))
     if (files.isEmpty) rd.parquet(dir)
@@ -1787,12 +1777,8 @@ object LakeSink {
       math.min(16, files.length))
     try pool.submit(new java.util.concurrent.Callable[Long] {
       override def call(): Long =
-        java.util.Arrays.stream(files).parallel().mapToLong { st =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, fs.getConf))
-          try rdr.getRecordCount finally rdr.close()
-        }.sum()
+        java.util.Arrays.stream(files).parallel()
+          .mapToLong(st => Manifest.footerRows(fs, st.getPath)).sum()
     }).get()
     finally pool.shutdown()
   }

@@ -2,13 +2,17 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow,
+  QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
   BinaryComparison, Cast, EqualTo, EvalMode, Expression, GreaterThan,
-  GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
+  GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal,
+  PredicateHelper, RowOrdering}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
+import scala.collection.concurrent.TrieMap
 
 /** COMMITTED MANIFESTS — the one owner of the per-file metadata that
   * lets a read skip files: the `_stats` manifest (per-file row count
@@ -38,7 +42,7 @@ import org.apache.spark.sql.types._
   * Soundness rests on no false negatives: a file that may hold a
   * match always survives; callers keep the exact predicate as a
   * residual filter, so false positives cost a read, never a row. */
-object Manifest {
+object Manifest extends PredicateHelper {
 
   /** the keyed probe's cap: past this many distinct keys the
     * |files| × |keys| probe costs more than the skip saves */
@@ -127,12 +131,18 @@ object Manifest {
   // ---- read, once, into retained state ------------------------------
 
   /** a manifest as read on the driver: per file (manifest row order)
-    * its recorded path, its (min, max) per stats column, its dense
-    * bloom words */
+    * its recorded path, its (min, max) per stats column as Catalyst
+    * values, and its non-zero bloom words packed `(index << 32) | word`
+    * in index order — the manifest's own sparse map, not a dense
+    * bitmap */
   private[graft] final case class Read(files: IndexedSeq[String],
       stats: Map[String, (DataType, IndexedSeq[(Any, Any)])],
       blooms: IndexedSeq[Array[Long]], mBits: Int, k: Int) {
     val names: IndexedSeq[String] = files.map(new Path(_).getName)
+    /** the driver memory this read retains, estimated: a fixed cost
+      * per entry and per file and bound, 8 bytes per bloom word */
+    def bytes: Long = 1024L + files.length * (256L + 64L * stats.size) +
+      8L * blooms.iterator.map(_.length.toLong).sum
   }
 
   private def parse(man: DataFrame): Read = {
@@ -143,32 +153,40 @@ object Manifest {
     val (mBits, k) = rows.headOption.filter(_ => cols.contains("words"))
       .fold((0, 0))(r => (r.getAs[Int]("m_bits"), r.getAs[Int]("k")))
     Read(rows.map(_.getAs[String]("file")),
-      statCols.map(c => c -> ((man.schema(s"min_$c").dataType,
-        rows.map(r => (r.getAs[Any](s"min_$c"), r.getAs[Any](s"max_$c")))))).toMap,
-      if (mBits == 0) IndexedSeq.empty else rows.map { r =>
-        val w = new Array[Long](mBits / 32)
-        r.getAs[scala.collection.Map[Long, Long]]("words")
-          .foreach { case (i, v) => w(i.toInt) = v }
-        w
-      },
+      statCols.map { c =>
+        val ct = man.schema(s"min_$c").dataType
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(ct)
+        c -> ((ct, rows.map(r => (toCatalyst(r.getAs[Any](s"min_$c")),
+          toCatalyst(r.getAs[Any](s"max_$c"))))))
+      }.toMap,
+      if (mBits == 0) IndexedSeq.empty else rows.map(r =>
+        r.getAs[scala.collection.Map[Long, Long]]("words").iterator
+          .collect { case (i, w) if w != 0L => (i << 32) | (w & 0xffffffffL) }
+          .toArray.sorted),
       mBits, k)
   }
 
-  /** size-bounded LRU (access-ordered): a steady ad-hoc workload past
-    * the cap evicts the COLDEST entry instead of clearing the memo.
-    * Reads happen outside the lock — they are slow, two racing
-    * readers of one key compute the same value. */
-  final class Lru[K, V](cap: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        this.size() > cap
-    }
+  /** LRU bounded by total weight (access-ordered): a steady ad-hoc
+    * workload past the cap evicts the COLDEST entries instead of
+    * clearing the memo; an entry heavier than the cap is returned but
+    * not retained. Reads happen outside the lock — they are slow, two
+    * racing readers of one key compute the same value. */
+  final class Lru[K, V](cap: Long, weight: V => Long = (_: V) => 1L) {
+    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+    private var total = 0L
     def getOrElseUpdate(k: K)(compute: => V): V = {
       val hit = m.synchronized(m.get(k))
       if (hit != null) hit
       else {
         val v = compute
-        m.synchronized(m.put(k, v))
+        m.synchronized {
+          total += weight(v) - Option(m.put(k, v)).fold(0L)(weight)
+          val eldest = m.values.iterator
+          while (total > cap && eldest.hasNext) {
+            total -= weight(eldest.next())
+            eldest.remove()
+          }
+        }
         v
       }
     }
@@ -177,8 +195,8 @@ object Manifest {
 
   /** keyed by the manifest's path, mtime and part files: a recommit
     * (overwrite) writes new part names, so a hit is never a
-    * superseded manifest */
-  private val reads = new Lru[(String, Long, String), Read](64)
+    * superseded manifest. Bounded at 64 MiB of retained reads. */
+  private val reads = new Lru[(String, Long, String), Read](64L << 20, _.bytes)
 
   /** `name` (`_stats`, `_blooms_<c>`) under `dir`, or None when the
     * directory carries no such manifest */
@@ -205,7 +223,8 @@ object Manifest {
   // ---- staleness ----------------------------------------------------
 
   /** the data files under `dir`, recursively: `_`- and `.`-prefixed
-    * entries (manifests, logs, stages, _SUCCESS) are not data */
+    * entries (manifests, logs, stages, _SUCCESS) are not data. Every
+    * listing of a directory's data files goes through here. */
   private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq.flatMap { st =>
       val n = st.getPath.getName
@@ -213,6 +232,13 @@ object Manifest {
       else if (st.isDirectory) dataFiles(fs, st.getPath)
       else Seq(st.getPath)
     }
+
+  /** a parquet file's row count from its footer (no Spark job) */
+  private[graft] def footerRows(fs: FileSystem, p: Path): Long = {
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf))
+    try rdr.getRecordCount finally rdr.close()
+  }
 
   /** why a manifest naming `names` does not describe `files`, or None
     * when it does. Unseen files (written after the manifest — a late
@@ -227,11 +253,7 @@ object Manifest {
     val known = names.toSet
     val unseen = files.filter { p =>
       !known(p.getName) && fs.getFileStatus(p).getLen > 0 &&
-        scala.util.Try {
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf))
-          try rdr.getRecordCount != 0L finally rdr.close()
-        }.getOrElse(true)
+        scala.util.Try(footerRows(fs, p) != 0L).getOrElse(true)
     }
     val gone = known -- files.map(_.getName)
     if (unseen.isEmpty && gone.isEmpty) None
@@ -254,28 +276,55 @@ object Manifest {
     files
   }
 
+  private def missing(name: String, where: String): String =
+    s"NO ${if (name == "_stats") "" else "BLOOM "}MANIFEST: $where carries " +
+      s"no $name — publish with statsCols/bloomCols or attachStats/attachBlooms first"
+
   /** the explicit readers' resolve: the manifest, or a refusal by name
-    * when it is missing (`missing`) or stale */
+    * when it is missing (`where` names the directory) or stale, or
+    * when data files sit in subdirectories (a partitioned layout:
+    * survivors are anchored at `dir/<name>`, which cannot place them) */
   private def readCurrent(spark: SparkSession, dir: String, name: String,
-      missing: => String): Read = {
-    val m = read(spark, new Path(dir), name)
-      .getOrElse(throw new IllegalArgumentException(missing))
-    requireCurrent(new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), dir, m.names, name)
+      where: String): Read = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = read(spark, root, name)
+      .getOrElse(throw new IllegalArgumentException(missing(name, where)))
+    val nested = requireCurrent(fs, dir, m.names, name)
+      .filter(_.getParent != fs.makeQualified(root))
+    require(nested.isEmpty, s"STALE MANIFEST REFUSED: $name under $dir " +
+      s"names files a directory-anchored read cannot place: ${nested.size} " +
+      "data files sit in subdirectories (a partitioned layout) — read it " +
+      "through spark.sql with the manifest rules on.")
     m
   }
 
+  /** per-planning memo: the optimizer applies its rules pass after
+    * pass, and each pass would ask the file system the same question.
+    * Answers live as long as the query's planning tracker; outside a
+    * planning (explicit probes) every call asks afresh. */
+  private val planning = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[QueryPlanningTracker, TrieMap[Any, Any]]())
+
+  private def perPlanning[V](key: Any)(compute: => V): V =
+    QueryPlanningTracker.get.fold(compute)(t => planning
+      .computeIfAbsent(t, _ => TrieMap.empty[Any, Any])
+      .getOrElseUpdate(key, compute).asInstanceOf[V])
+
   /** the rules' and probes' resolve: the manifest when present and
     * current for the directory's files and `listed` (the files a plan
-    * is about to read), else None — fall back, never skip */
+    * is about to read), else None — fall back, never skip. Within one
+    * query's planning the manifest and the directory are read once. */
   private def current(spark: SparkSession, dir: Path, name: String,
-      listed: => Seq[String]): Option[Read] =
-    read(spark, dir, name).filter { m =>
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = (dataFiles(fs, dir) ++ listed.map(new Path(_)))
-        .distinctBy(_.getName)
-      staleness(fs, files, m.names).isEmpty
+      listed: => Seq[String]): Option[Read] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    perPlanning((dir, name))(read(spark, dir, name)).filter { m =>
+      val plan = listed
+      perPlanning((dir, name, plan.toSet))(staleness(fs,
+        (dataFiles(fs, dir) ++ plan.map(new Path(_))).distinctBy(_.getName),
+        m.names).isEmpty)
     }
+  }
 
   // ---- survivors ----------------------------------------------------
 
@@ -296,15 +345,11 @@ object Manifest {
     * NULL-free literal IN-lists */
   private[graft] def constraints(cond: Expression,
       owned: AttributeReference => Boolean): Seq[Constraint] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case other => Seq(other)
-    }
     def lits(vs: Seq[Expression]): Option[Seq[Literal]] =
       if (vs.isEmpty || vs.length > MaxInValues) None
       else Some(vs.collect { case l: Literal if l.value != null => l })
         .filter(_.length == vs.length)
-    conjuncts(cond).flatMap {
+    splitConjunctivePredicates(cond).flatMap {
       case c: BinaryComparison =>
         val (a, v, flipped) = (c.left, c.right) match {
           case (a: AttributeReference, v: Literal) => (a, v, false)
@@ -328,34 +373,35 @@ object Manifest {
     }
   }
 
-  /** numeric compare through Double: SAFE here and only here —
-    * rounding a long into the nearest double is MONOTONIC, so a
-    * boundary that rounds blurs by ≤ 1 ULP in the direction that
-    * KEEPS the file. Values of different classes are incomparable:
-    * 0, never prune on them. CatalystRuleSpec pins the 2^53 boundary. */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Number, y: java.lang.Number) =>
-      java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    case (x: Comparable[_], y) if x.getClass == y.getClass =>
-      x.asInstanceOf[Comparable[Any]].compareTo(y)
-    case _ => 0
+  /** the order min/max were computed in: Spark's own ordering for the
+    * stats column's type (UTF-8 bytes for strings — Java's UTF-16
+    * `compareTo` disagrees on supplementary characters), or None when
+    * the type has none. Numbers compare through Double under Spark's
+    * double order: rounding into the nearest double is MONOTONIC, so a
+    * boundary that rounds blurs by ≤ 1 ULP in the direction that KEEPS
+    * the file (CatalystRuleSpec pins the 2^53 boundary). */
+  private def ordering(ct: DataType): Option[Ordering[Any]] = ct match {
+    case _: NumericType =>
+      Some(Ordering.by[Any, Any] {
+        case d: Decimal => d.toDouble
+        case n => n.asInstanceOf[java.lang.Number].doubleValue()
+      }(TypeUtils.getInterpretedOrdering(DoubleType)))
+    case _ if RowOrdering.isOrderable(ct) => Some(TypeUtils.getInterpretedOrdering(ct))
+    case _ => None
   }
 
   private val datetime = Set[DataType](DateType, TimestampType, TimestampNTZType)
 
   /** a bound in the stats column's own type (a timestamp bound over a
-    * TIMESTAMP_NTZ column, a long over an int), as the Scala value
-    * the manifest rows carry; None when it cannot be compared there
-    * (the constraint then prunes nothing) */
-  private def conform(l: Literal, ct: DataType, tz: String): Option[Any] = {
-    val v =
-      if (l.dataType == ct) l.value
-      else if (l.dataType.isInstanceOf[NumericType] && ct.isInstanceOf[NumericType] ||
-          datetime(l.dataType) && datetime(ct))
-        Cast(l, ct, Some(tz), EvalMode.TRY).eval()
-      else null
-    Option(v).map(CatalystTypeConverters.convertToScala(_, ct))
-  }
+    * TIMESTAMP_NTZ column, a long over an int), as the Catalyst value
+    * the manifest bounds are held in; None when it cannot be compared
+    * there (the constraint then prunes nothing) */
+  private def conform(l: Literal, ct: DataType, tz: String): Option[Any] = Option(
+    if (l.dataType == ct) l.value
+    else if (l.dataType.isInstanceOf[NumericType] && ct.isInstanceOf[NumericType] ||
+        datetime(l.dataType) && datetime(ct))
+      Cast(l, ct, Some(tz), EvalMode.TRY).eval()
+    else null)
 
   /** THE stats-box function: the names of the files whose [min, max]
     * may satisfy every constraint on a column the manifest tracks
@@ -364,18 +410,18 @@ object Manifest {
       tz: String): Option[Set[String]] = {
     val tests = cs.flatMap { c =>
       m.stats.get(c.col).flatMap { case (ct, bounds) =>
-        (c match {
+        ordering(ct).flatMap(ord => (c match {
           case Within(_, lo, hi) =>
             val (l, h) = (lo.flatMap(conform(_, ct, tz)), hi.flatMap(conform(_, ct, tz)))
             if (l.isEmpty && h.isEmpty) None
             else Some((mn: Any, mx: Any) =>
-              l.forall(cmp(mx, _) >= 0) && h.forall(cmp(mn, _) <= 0))
+              l.forall(ord.gteq(mx, _)) && h.forall(ord.lteq(mn, _)))
           case OneOf(_, vs) =>
             val xs = vs.map(conform(_, ct, tz))
             if (xs.exists(_.isEmpty)) None
             else Some((mn: Any, mx: Any) =>
-              xs.flatten.exists(v => cmp(mn, v) <= 0 && cmp(mx, v) >= 0))
-        }).map(admits => (bounds, admits))
+              xs.flatten.exists(v => ord.lteq(mn, v) && ord.gteq(mx, v)))
+        }).map(admits => (bounds, admits)))
       }
     }
     if (tests.isEmpty || m.files.isEmpty) None
@@ -392,6 +438,15 @@ object Manifest {
     (graft.functions.Md5.fold48(graft.functions.Md5.digest(
       s"$j:$dig".getBytes(java.nio.charset.StandardCharsets.UTF_8))) % mBits).toInt
 
+  /** bit `p` of a packed sparse bloom: the word at index p/32 sits
+    * where a search for `(p/32) << 32` would insert (no zero words) */
+  private def bit(words: Array[Long], p: Int): Boolean = {
+    val idx = (p >>> 5).toLong
+    val at = -java.util.Arrays.binarySearch(words, idx << 32) - 1
+    at < words.length && (words(at) >>> 32) == idx &&
+      ((words(at) >>> (p & 31)) & 1L) == 1L
+  }
+
   /** THE bloom function: the names of the files whose bloom admits at
     * least one of `digs` (the probed values' string forms) — one pass
     * over the manifest however many values */
@@ -400,8 +455,7 @@ object Manifest {
     else {
       val probes = digs.map(d => (0 until m.k).map(bloomPos(_, d, m.mBits))).toSeq
       m.names.indices.filter { i =>
-        val w = m.blooms(i)
-        probes.exists(_.forall(p => ((w(p >>> 5) >>> (p & 31)) & 1L) == 1L))
+        probes.exists(_.forall(bit(m.blooms(i), _)))
       }.map(m.names).toSet
     }
 
@@ -445,7 +499,9 @@ object Manifest {
   /** THE KEYED PROBE — the distinct values of `keys`' first column
     * against `dir`'s `_blooms_<c>`: the names of the files that may
     * hold one of them, or None (fall back to every file) when there is
-    * no current manifest or more than `maxKeys` distinct keys. Sound by
+    * no current manifest or more than `maxKeys` distinct keys (the
+    * keys are collected to the driver: at most 100,000 by default,
+    * `Int.MaxValue - 1` however large `maxKeys`). Sound by
     * the bloom's no-false-negatives: a join or key check against
     * exactly these files equals one against the table. */
   private[graft] def probe(spark: SparkSession, dir: Path, c: String,
@@ -453,7 +509,8 @@ object Manifest {
       maxKeys: Long = MaxProbeKeys): Option[Set[String]] =
     current(spark, dir, s"_blooms_$c", listed).flatMap { m =>
       val rows = keys.select(col(keys.columns.head).cast("string"))
-        .distinct().limit((maxKeys + 1).toInt).collect()
+        .distinct().limit(math.min(maxKeys, Int.MaxValue - 1L).toInt + 1)
+        .collect()
       if (rows.length > maxKeys) None
       else Some(bloomSurvivors(m, rows.flatMap(r => Option(r.getString(0)))))
     }
@@ -478,15 +535,16 @@ object Manifest {
     val files = m.files.filter(f => keep(new Path(f).getName))
       .map(f => dir.fold(f)(d => new Path(d, new Path(f).getName).toString))
     if (files.nonEmpty) spark.read.parquet(files: _*).filter(residual)
-    else dir match {
-      case Some(d) => LakeSink.readDataFilesList(spark, d).filter(lit(false))
-      case None => spark.read.parquet(m.files.head).filter(lit(false))
-    }
+    else dir.fold(spark.read.parquet(m.files.head))(
+      LakeSink.readDataFilesList(spark, _)).filter(lit(false))
   }
 
   private def readPrunedWith(spark: SparkSession, m: Read,
       preds: Seq[(String, Column, Column)], dir: Option[String]): DataFrame = {
     require(preds.nonEmpty, "readPrunedMulti: at least one predicate")
+    val untracked = preds.map(_._1).filterNot(m.stats.contains)
+    require(untracked.isEmpty, s"NO MANIFEST COLUMN: _stats tracks no " +
+      s"${untracked.mkString(", ")} — rebuild it with attachStats over it")
     val b = literals(spark, preds.flatMap(p => Seq(p._2, p._3)))
     val cs = preds.indices.map(i =>
       Within(preds(i)._1, Some(b(2 * i)), Some(b(2 * i + 1))))
@@ -516,44 +574,39 @@ object Manifest {
     * paths are not) */
   def readPrunedDir(spark: SparkSession, dir: String,
       preds: Seq[(String, Column, Column)]): DataFrame =
-    readPrunedWith(spark, readCurrent(spark, dir, "_stats",
-      s"NO MANIFEST: $dir carries no _stats — attachStats(dir) first"),
-      preds, Some(dir))
+    readPrunedWith(spark, readCurrent(spark, dir, "_stats", dir), preds, Some(dir))
 
-  private def liveLocation(spark: SparkSession, table: String): String = {
+  /** a table's live generation, and how a refusal names it */
+  private def liveLocation(spark: SparkSession, table: String): (String, String) = {
     val catalog = spark.sessionState.catalog
     val ident = LakeSink.tableIdent(table)
     require(catalog.tableExists(ident), s"unknown table $table")
-    new Path(catalog.getTableMetadata(ident).location).toString
+    val loc = new Path(catalog.getTableMetadata(ident).location).toString
+    (loc, s"the live generation of $table ($loc)")
   }
-  private def noStats(table: String, loc: String) =
-    s"NO MANIFEST: the live generation of $table ($loc) carries no " +
-      "_stats — publish with statsCols (compactTable/optimizeZOrder/" +
-      "mergeKeyed) or attachStats(dir) first"
 
   /** the TABLE-LEVEL pruned read: resolve the live generation ONCE and
     * prune with ITS committed `_stats` — manifest and data from one
     * snapshot directory, so a concurrent publish cannot mismatch them */
   def readPrunedTable(spark: SparkSession, table: String,
       preds: Seq[(String, Column, Column)]): DataFrame = {
-    val loc = liveLocation(spark, table)
-    readPrunedWith(spark, readCurrent(spark, loc, "_stats", noStats(table, loc)),
-      preds, Some(loc))
+    val (loc, where) = liveLocation(spark, table)
+    readPrunedWith(spark, readCurrent(spark, loc, "_stats", where), preds, Some(loc))
   }
 
   /** the live generation's `_stats` as a DataFrame; refuses by name a
     * table whose live generation carries none */
   def tableStats(spark: SparkSession, table: String): DataFrame = {
-    val loc = liveLocation(spark, table)
+    val (loc, where) = liveLocation(spark, table)
     val stats = new Path(loc, "_stats")
     require(stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(stats), noStats(table, loc))
+      .exists(stats), missing("_stats", where))
     spark.read.parquet(stats.toString)
   }
 
   /** the files whose bloom says `c = value` MIGHT be present — the
     * planning decision, exposed so specs can count what a lookup reads */
-  def bloomSurvivors(manifest: DataFrame, c: String, value: Column): Array[String] = {
+  def bloomSurvivors(manifest: DataFrame, value: Column): Array[String] = {
     val m = parse(manifest)
     val keep = bloomSurvivors(m, literals(manifest.sparkSession, Seq(value))
       .flatMap(dig(_, tz(manifest.sparkSession))))
@@ -561,8 +614,8 @@ object Manifest {
   }
 
   private def lookup(spark: SparkSession, dir: String, c: String,
-      value: Column, missing: => String): DataFrame = {
-    val m = readCurrent(spark, dir, s"_blooms_$c", missing)
+      value: Column, where: String): DataFrame = {
+    val m = readCurrent(spark, dir, s"_blooms_$c", where)
     readSurvivors(spark, m, bloomSurvivors(m,
       literals(spark, Seq(value)).flatMap(dig(_, tz(spark)))),
       Some(dir), col(c) === value)
@@ -574,17 +627,14 @@ object Manifest {
     * the reference's `WHERE order_id = ?` (order_rdbms_blob.js:520). */
   def readBloomLookupDir(spark: SparkSession, dir: String, c: String,
       value: Column): DataFrame =
-    lookup(spark, dir, c, value,
-      s"NO BLOOM MANIFEST: $dir carries no _blooms_$c — attachBlooms(dir) first")
+    lookup(spark, dir, c, value, dir)
 
   /** [[readBloomLookupDir]] against a catalog table's live generation,
     * resolved once; refuses by name a generation without the manifest */
   def readBloomLookupTable(spark: SparkSession, table: String, c: String,
       value: Column): DataFrame = {
-    val loc = liveLocation(spark, table)
-    lookup(spark, loc, c, value, s"NO BLOOM MANIFEST: the live generation " +
-      s"of $table ($loc) carries no _blooms_$c — publish with bloomCols " +
-      "or attachBlooms(dir) first")
+    val (loc, where) = liveLocation(spark, table)
+    lookup(spark, loc, c, value, where)
   }
 
   /** BLOOM point lookup over a STREAMED ([[LakeSink.appendBatchOnce]])
@@ -599,9 +649,7 @@ object Manifest {
     require(batches.nonEmpty, s"no committed batches under $dir")
     val digs = literals(spark, Seq(value)).flatMap(dig(_, tz(spark)))
     val keep = batches.flatMap { b =>
-      val m = readCurrent(spark, b.toString, s"_blooms_$c",
-        s"NO BLOOM MANIFEST: batch ${b.getName} committed without " +
-          s"_blooms_$c — append with bloomCols")
+      val m = readCurrent(spark, b.toString, s"_blooms_$c", s"batch ${b.getName}")
       val surv = bloomSurvivors(m, digs)
       m.names.filter(surv).map(n => new Path(b, n).toString)
     }

@@ -577,6 +577,24 @@ class CatalystRuleSpec extends AnyFunSuite {
     assert(get(1) == "v1" && computes == 6, "hot entry evicted — not an LRU")
   }
 
+  test("manifest-read LRU bounded by weight: coldest entries leave until the total fits; an entry over the cap is served but not retained") {
+    val lru = new Manifest.Lru[Int, String](10, _.length.toLong)
+    var computes = 0
+    def get(k: Int, v: String): String =
+      lru.getOrElseUpdate(k) { computes += 1; v }
+    get(1, "aaaa"); get(2, "bbbb")
+    assert(lru.size == 2 && computes == 2)
+    // 4 + 4 + 4 > 10: the coldest (1) leaves
+    get(3, "cccc")
+    assert(lru.size == 2)
+    assert(get(2, "x") == "bbbb" && computes == 3, "warm entry must stay")
+    assert(get(1, "aaaa") == "aaaa" && computes == 4, "cold entry must recompute")
+    // heavier than the whole cap: returned, never retained
+    assert(get(9, "z" * 11) == "z" * 11 && computes == 5)
+    assert(get(9, "z" * 11) == "z" * 11 && computes == 6)
+    assert(lru.size <= 2)
+  }
+
   test("DynamicFilePruneRule: a broadcast-small build side prunes the fact's files at plan time through plain SQL join syntax; off by default; hash-identical") {
     import spark.implicits._
     import graft.sources.LakeSink

@@ -966,7 +966,7 @@ class LakeSpec extends AnyFunSuite {
     // the bloom manifest prunes to ~1 file (k=3 @ 2^16 bits over 500
     // keys/file: FP ≈ 1e-7 per file) — and the lookup is exact
     val man = spark.read.parquet(s"$out/_blooms_k")
-    assert(Manifest.bloomSurvivors(man, "k", lit(probe)).length <= 2,
+    assert(Manifest.bloomSurvivors(man, lit(probe)).length <= 2,
       "bloom must prune the non-containing files")
     val got = Manifest.readBloomLookupDir(spark, out, "k", lit(probe))
     assert(got.collect().map(_.toString).toSeq ==
@@ -976,7 +976,7 @@ class LakeSpec extends AnyFunSuite {
       spark.read.parquet(out).inputFiles.head)
     val keys = oneFile.select("k").collect().map(_.getLong(0))
     val missed = keys.count(kv =>
-      Manifest.bloomSurvivors(man, "k", lit(kv)).isEmpty)
+      Manifest.bloomSurvivors(man, lit(kv)).isEmpty)
     assert(missed == 0, s"$missed present keys pruned — false negatives")
     // absent key: all files pruned, empty result, schema intact
     val none = Manifest.readBloomLookupDir(spark, out, "k", lit(-7L))
@@ -1116,6 +1116,35 @@ class LakeSpec extends AnyFunSuite {
       .count() == 1L)
     assert(Manifest.readPrunedDir(spark, dir,
       Seq(("k", lit(4999L), lit(5001L)))).count() == 1L)
+  }
+
+  test("explicit manifest readers refuse by name a partitioned directory and a column the manifest does not track") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_manpart").toString + "/t"
+    (0L until 200L).map(i => (i, i % 4L, s"v$i")).toDF("k", "p", "v")
+      .write.partitionBy("p").parquet(dir)
+    Manifest.attachStats(spark, dir, Seq("k"))
+    Manifest.attachBlooms(spark, dir, "k")
+    // survivors are anchored at dir/<name>: files under p=…/ cannot be
+    // placed, so the readers refuse instead of failing on a missing path
+    val e1 = intercept[IllegalArgumentException] {
+      Manifest.readPrunedDir(spark, dir, Seq(("k", lit(10L), lit(20L))))
+    }
+    assert(e1.getMessage.contains("STALE MANIFEST REFUSED") &&
+      e1.getMessage.contains("subdirectories"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Manifest.readBloomLookupDir(spark, dir, "k", lit(42L))
+    }
+    assert(e2.getMessage.contains("STALE MANIFEST REFUSED"), e2.getMessage)
+    // a range on a column _stats does not track refuses by name
+    val flat = Files.createTempDirectory("graft_mancol").toString + "/t"
+    (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v")
+      .coalesce(2).write.parquet(flat)
+    Manifest.attachStats(spark, flat, Seq("k"))
+    val e3 = intercept[IllegalArgumentException] {
+      Manifest.readPrunedDir(spark, flat, Seq(("v", lit("v1"), lit("v2"))))
+    }
+    assert(e3.getMessage.contains("NO MANIFEST COLUMN"), e3.getMessage)
   }
 
   test("degenerate tables: empty and zero-row-file-bearing directories serve manifest lookups instead of crashing") {

@@ -11,7 +11,9 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Seeded property check for committed-manifest file skipping: on
-  * tiny generated tables (1–8 files, a long, string or timestamp key,
+  * tiny generated tables (1–8 files, a long, string or timestamp key —
+  * ASCII strings, or fullwidth and emoji strings that Java's UTF-16
+  * order sorts differently from Spark's UTF-8 min/max —
   * sorted or shuffled layout, NULL keys, an optional zero-row file)
   * and generated predicates (`=`, `IN` with absent values, ranges with
   * strict and non-strict bounds in both operand orders), every entry
@@ -28,16 +30,20 @@ class ManifestPropSpec extends AnyFunSuite {
   case object LongKey extends KeyType { val dt = LongType }
   case object StrKey extends KeyType { val dt = StringType }
   case object TsKey extends KeyType { val dt = TimestampType }
+  case object WideStrKey extends KeyType { val dt = StringType }
 
-  /** key domain index `i` as the typed key value (order-preserving) */
+  /** key domain index `i` as the typed key value (order-preserving,
+    * except WideStrKey: its U+FF21 and U+1F600 prefixes alternate, so
+    * most files span both, where UTF-8 and UTF-16 orders disagree) */
   private def keyOf(t: KeyType, i: Int): Any = t match {
     case LongKey => i.toLong * 10L
     case StrKey => f"k$i%03d"
+    case WideStrKey => (if (i % 2 == 0) "\uFF21" else "\uD83D\uDE00") + f"$i%03d"
     case TsKey => new java.sql.Timestamp(1577836800000L + i * 60000L)
   }
   private def sqlLit(t: KeyType, i: Int): String = t match {
     case LongKey => s"${i.toLong * 10L}"
-    case StrKey => s"'${keyOf(t, i)}'"
+    case StrKey | WideStrKey => s"'${keyOf(t, i)}'"
     case TsKey => s"TIMESTAMP '${keyOf(t, i)}'"
   }
 
@@ -70,7 +76,7 @@ class ManifestPropSpec extends AnyFunSuite {
     } yield Range(lo.orElse(if (hi.isEmpty) Some(0) else None), hi, sl, sh, fl))
 
   private val genCase: Gen[Case] = for {
-    kt <- Gen.oneOf(LongKey, StrKey, TsKey)
+    kt <- Gen.oneOf(LongKey, StrKey, TsKey, WideStrKey)
     nFiles <- Gen.choose(1, 8)
     nRows <- Gen.choose(nFiles, nFiles * 6)
     keys <- Gen.listOfN(nRows, Gen.frequency(
