@@ -1145,6 +1145,11 @@ class LakeSpec extends AnyFunSuite {
       Manifest.readPrunedDir(spark, flat, Seq(("v", lit("v1"), lit("v2"))))
     }
     assert(e3.getMessage.contains("NO MANIFEST COLUMN"), e3.getMessage)
+    // an uncapped key probe (maxKeys past Int range) still answers
+    Manifest.attachBlooms(spark, flat, "k")
+    val keep = Manifest.probe(spark, new org.apache.hadoop.fs.Path(flat), "k",
+      Seq(5L, 77L).toDF("dk"), maxKeys = Long.MaxValue)
+    assert(keep.exists(_.nonEmpty), s"uncapped probe must prune, got $keep")
   }
 
   test("degenerate tables: empty and zero-row-file-bearing directories serve manifest lookups instead of crashing") {
