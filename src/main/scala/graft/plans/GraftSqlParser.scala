@@ -69,13 +69,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * statement REFUSES BY NAME — guessing a key would make "latest
   * wins" meaningless.
   *
-  * Scale shape: each statement costs one filtered scan of the MOR
-  * view (predicate and column pruning push into it like any read)
-  * plus a churn-sized log landing — the 100 TB table is never
-  * rewritten; the landing serializes under the directory's log claim
-  * like every other log write. Each statement returns its effect row
-  * (`op, n_updated, n_inserted, n_deleted`) — the reference's lambda
-  * returns affectedRows the same way. */
+  * Scale shape: each statement folds the MOR view once (predicate and
+  * column pruning push into it) and lands a churn-sized batch under
+  * the directory's log claim — the table is never rewritten; a one-row
+  * statement by key runs in about 7–10 Spark jobs, flat in log depth
+  * (DmlSpec pins ≤ 15). Each returns its effect row (`op, n_updated,
+  * n_inserted, n_deleted`), the reference's affectedRows. */
 object GraftDml {
 
   // ---- statement heads (anchored, case-insensitive, dot-all); the
@@ -446,48 +445,42 @@ object GraftDml {
     graft.sources.LakeSink.updateBatches(new org.apache.hadoop.fs.Path(loc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), loc).nonEmpty
 
-  /** the table view a DML predicate scans: a SINGLE-ROOT read — the
-    * planner folds the log ([[TombstoneApplyRule]], value-identical
-    * to the explicit API, a36's hash-proved contract) AND the
-    * manifest prune rules can fire on it, so `DELETE … WHERE k = 42`
-    * over a blooms-carrying table reads ~the owning files instead of
-    * the table (Delta's DELETE does its file skipping exactly here).
-    * An EVOLVED table uses the explicit fold: a single-root read's
-    * footer-inferred schema cannot carry the widened columns (the
-    * planner fold refuses it by name). The landing kernels re-verify
-    * liveness under the log claim either way, so the choice affects
-    * READ cost only. */
+  /** the table view a DML predicate scans: a SINGLE-ROOT read, so the
+    * planner folds the log ([[TombstoneApplyRule]], value-identical to
+    * the explicit API — a36) and the manifest prune rules can skip
+    * files on it (Delta's DELETE skips files exactly here); its schema
+    * is inferred once per listing. An EVOLVED table uses the explicit
+    * fold (a footer-inferred single-root scan cannot carry widened
+    * columns). */
   private def dmlView(spark: SparkSession, loc: String,
       key: String): org.apache.spark.sql.DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(loc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (graft.sources.LakeSink.persistedSchema(fs, loc).isEmpty)
-      spark.read.parquet(loc)
+      graft.sources.LakeSink.readParquet(spark, Seq(loc))
     else graft.sources.LakeSink.morReadUpsertDir(spark, loc, key)
   }
 
   /** Every runner below holds the TARGET DIRECTORY'S LOG CLAIM across
     * its whole read-compute-land ([[graft.sources.LakeSink
-    * .withDirLogClaim]], reentrant through the landing kernels —
-    * softPatchDir's own discipline): the view read, the new-row
-    * computation, and the landing(s) commit as ONE critical section.
-    * Without it, a concurrent landing between the view read and the
-    * landing's own claim acquisition is silently folded over (lost
-    * update) — the exact race class the log claim exists to close;
-    * and a MERGE's upsert + tombstone halves land under one claim, so
-    * no writer interleaves between them. */
+    * .withDirLogClaim]], reentrant through the landing kernels): a
+    * concurrent landing between the view read and the landing would
+    * otherwise be silently folded over (a lost update), and a MERGE's
+    * upsert and tombstone halves land with no writer between them. */
   private[plans] def runDelete(spark: SparkSession, target: String,
       pred: Option[String]): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val (loc, table) = resolveTarget(spark, target)
     val key = resolveKey(spark, loc, table)
     graft.sources.LakeSink.withDirLogClaim(spark, loc) {
-      val view = dmlView(spark, loc, key)
-      val keys = view.filter(pred.map(expr).getOrElse(lit(true)))
-        .select(col(key)).distinct().localCheckpoint(true)
-      if (keys.isEmpty) 0L
-      else if (hasUpdates(spark, loc) || table.isEmpty)
-        graft.sources.LakeSink.softDeleteUpsertDir(spark, loc, keys, key)
+      // one fold: the matching rows are the keys AND the before-images
+      val rows = graft.sources.LakeSink.checkpointSized(
+        dmlView(spark, loc, key).filter(pred.map(expr).getOrElse(lit(true))))
+      val keys = rows.select(col(key)).distinct()
+      if (hasUpdates(spark, loc) || table.isEmpty)
+        graft.sources.LakeSink.landDeleteBatch(spark, loc, keys, key,
+          withLog = true, before = Some(rows), landEmpty = false)
+      else if (keys.isEmpty) 0L
       else
         // log-free catalog table: the richer route — the delete also
         // publishes a time-travel-visible snapshot generation
@@ -520,33 +513,26 @@ object GraftDml {
           byName.get(c.toLowerCase)
             .map(e => expr(e).cast(view.schema(c).dataType).as(c))
             .getOrElse(col(c))): _*)
-        .localCheckpoint(true)
-      if (batch.isEmpty) (0L, 0L)
-      else graft.sources.LakeSink.softUpsertDir(spark, loc, batch, key)
+      graft.sources.LakeSink.landUpsert(spark, loc, batch, key,
+        landEmpty = false)
     }
   }
 
-  /** `INSERT INTO` against a KEYED lake target — routed through the
-    * log so the one write that used to silently side-step
-    * seq/claim/feed/expectations (Spark's delegated insert appends
-    * bare files the change feed can never replay; the reference's
-    * hottest statement is exactly this INSERT,
-    * order_rdbms_blob.js:574) now lands as an ordinary upsert-log
-    * batch: seq from the shared counter, `_feed` rows
-    * (op = 'insert') in the batch's own atomic rename, pending-
-    * tombstone refusal for free. PK SEMANTICS, refused by name: a
-    * key already live in the view is a duplicate-key error (the
-    * reference's RDBMS raises exactly that; an insert that silently
-    * became an update would hide a client bug) — UPDATE or MERGE
-    * INTO to change existing rows. A column list maps the source by
-    * position; omitted table columns NULL-fill (standard SQL), the
-    * key may not be omitted. Returns rows inserted. */
+  /** `INSERT INTO` against a KEYED lake target, landed as an ordinary
+    * upsert-log batch (seq, `_feed` rows with op = 'insert', pending-
+    * tombstone refusal) — the reference's hottest statement
+    * (order_rdbms_blob.js:574), which Spark's delegated insert would
+    * append as bare files no feed replays. PK SEMANTICS, refused by
+    * name: a key already live is a duplicate-key error (the reference's
+    * RDBMS raises exactly that) — UPDATE or MERGE INTO change rows. A
+    * column list maps the source by position; omitted columns NULL-fill,
+    * the key may not be omitted. Returns rows inserted. */
   private[plans] def runInsert(spark: SparkSession, target: String,
       body: String, cols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val (loc, table) = resolveTarget(spark, target)
     val key = resolveKey(spark, loc, table)
-    val src = spark.sql(body).localCheckpoint(true)
+    val src = spark.sql(body)
     graft.sources.LakeSink.withDirLogClaim(spark, loc) {
       val view = dmlView(spark, loc, key)
       val tableCols = view.columns.toIndexedSeq
@@ -573,30 +559,15 @@ object GraftDml {
           case Some(p) => col(p).cast(view.schema(c).dataType).as(c)
           case None => lit(null).cast(view.schema(c).dataType).as(c)
         }
-      }: _*).localCheckpoint(true)
-      // PK liveness, SCALE-DEFAULT (r17): a compacted keyed table
-      // carries `_blooms_<key>` (compactUpsertsDir commits it in the
-      // swap), and the probe consults that manifest DIRECTLY —
-      // base side reads ~the batch keys' owning files, log and
-      // tombstone sides are churn-sized; no opt-in confs (the lake's
-      // answer to the RDBMS's B-tree duplicate probe,
-      // order_rdbms_blob.js:574). Fallback (no/stale manifest): the
-      // view-oriented semi-join — still the orientation the
-      // dynFilePrune rule CAN prune when enabled.
-      val nLive = graft.sources.LakeSink.liveKeyCount(spark, loc, key,
-          batch.select(col(key))).getOrElse {
-        view.select(col(key))
-          .join(org.apache.spark.sql.functions.broadcast(
-            batch.select(col(key))), Seq(key), "left_semi")
-          .select(col(key)).distinct().count()
-      }
-      require(nLive == 0,
-        s"INSERT REFUSED: $nLive keys already live in the view — a " +
-          "keyed lake INSERT carries primary-key semantics (the " +
-          "reference's RDBMS raises duplicate-key here); UPDATE or " +
-          "MERGE INTO to change existing rows")
-      val (u, i) = graft.sources.LakeSink.softUpsertDir(spark, loc,
-        batch, key)
+      }: _*)
+      // PK liveness is the landing's own key-pruned probe (the lake's
+      // B-tree duplicate probe), checked before its other refusals
+      val (u, i) = graft.sources.LakeSink.landUpsert(spark, loc, batch, key,
+        precheck = c => require(c.liveKeys == 0,
+          s"INSERT REFUSED: ${c.liveKeys} keys already live in the view — a " +
+            "keyed lake INSERT carries primary-key semantics (the " +
+            "reference's RDBMS raises duplicate-key here); UPDATE or " +
+            "MERGE INTO to change existing rows"))
       require(u == 0L, s"internal: PK-checked insert updated $u rows")
       i
     }
@@ -754,13 +725,10 @@ object GraftDml {
           // crash can still land the upsert alone, but no concurrent
           // writer ever interleaves between the halves, and the held
           // claim is visible to readers of the crash window
-          val (u, i) =
-            if (upserts.isEmpty) (0L, 0L)
-            else graft.sources.LakeSink.softUpsertDir(spark, loc, upserts, key)
-          val d =
-            if (delKeys.isEmpty) 0L
-            else graft.sources.LakeSink.softDeleteUpsertDir(spark, loc,
-              delKeys, key)
+          val (u, i) = graft.sources.LakeSink.landUpsert(spark, loc,
+            upserts, key, landEmpty = false)
+          val d = graft.sources.LakeSink.landDeleteBatch(spark, loc, delKeys,
+            key, withLog = true, landEmpty = false)
           (u, i, d)
       }
     }

@@ -652,28 +652,19 @@ object LakeSink {
   // ---- MERGE-ON-READ equality deletes --------------------------------
 
   /** MERGE-ON-READ equality delete (Iceberg's equality-delete files /
-    * Delta's deletion vectors, keyed form): land the delete KEYS as
-    * one batch file set under the generation's `_deletes/` —
-    * O(|keys|) I/O, the data files are NEVER rewritten — and have
-    * [[morRead]] apply them as an anti-join. This is the DELETE a
-    * 100 TB table actually wants: a copy-on-write delete (mergeKeyed
-    * with deletes) rewrites the whole table to drop a handful of
-    * rows; here the write cost is the key set and the read pays one
-    * broadcast-small anti-join until [[compactMor]] materializes.
-    *
-    * Refuses BY NAME: NULL keys, and keys not live in the current
-    * MOR view (already-deleted or never-present — a silently-ignored
-    * key would report a removal that never happened, and double
-    * deletes would corrupt the deleted-row accounting). Visibility is
-    * atomic per batch: the key file stages under a dot-prefixed tmp
-    * dir and reaches `_deletes/` with ONE rename — a concurrent
-    * [[morRead]] sees the whole batch or none of it. The `_` prefix
-    * keeps every data read from listing the tombstones. Single-writer
-    * per table, like the rest of the lake. Returns the number of rows
-    * the delete removed from the view. */
+    * Delta's deletion vectors, keyed form): the delete KEYS land as one
+    * batch under the directory's `_deletes/` — O(|keys|) I/O, data
+    * files NEVER rewritten — and [[morRead]] applies them as a
+    * broadcast anti-join until [[compactMor]] materializes (a
+    * copy-on-write delete would rewrite the table for a handful of
+    * rows). Refuses BY NAME NULL keys and keys not live in the MOR view
+    * (a silently-ignored key would report a removal that never
+    * happened). The batch stages under a dot-prefixed dir and reaches
+    * `_deletes/` with ONE rename, so a concurrent reader sees all of it
+    * or none. Returns the rows the delete removed from the view. */
   def softDeleteDir(spark: SparkSession, dir: String, keys: DataFrame,
       key: String): Long =
-    landDeleteBatch(spark, dir, keys, key, morRead(spark, dir, key))
+    landDeleteBatch(spark, dir, keys, key, withLog = false)
 
   /** THE LOG CLAIM — one dir-level mutex (`.log-claim`, atomic
     * create-exclusive, the same CAS [[publishGeneration]] takes on
@@ -817,13 +808,6 @@ object LakeSink {
     withLogClaim(fs, dir, retainMs)(body)
   }
 
-  /** the tombstone-landing kernel shared by [[softDeleteDir]] (liveness
-    * = the base MOR view) and [[softDeleteUpsertDir]] (liveness = the
-    * upsert view — a key inserted through the update log is deletable
-    * too): NULL/not-live refusals, staged batch verified by recount,
-    * ONE rename as the atomic commit into `_deletes/b-*`. The whole
-    * check-then-land runs under the directory's log claim, so it can
-    * never interleave with a concurrent upsert's tombstone check. */
   /** every committed log landing's sequence number — upsert batches
     * (`u-<seq>-…`) AND delete batches (`b-<seq>-…`; pre-r15 `b-<tag>`
     * batches carry none and contribute 0): ONE counter orders the
@@ -854,42 +838,47 @@ object LakeSink {
     updateBatches(fs, dir).map(_._1) ++ delSeqs
   }
 
-  private def landDeleteBatch(spark: SparkSession, dir: String,
-      keys: DataFrame, key: String, live: => DataFrame,
-      retainMs: Long = 600000L): Long = {
+  /** the tombstone-landing kernel of [[softDeleteDir]] (liveness = the
+    * base MOR view) and [[softDeleteUpsertDir]] (`withLog`: the upsert
+    * view): [[tagKeys]]' refusals, the key set staged and verified by
+    * its footers, ONE rename into `_deletes/b-*`, all under the log
+    * claim. `before` = the view's rows of exactly these keys when the
+    * caller read them under the claim (SQL DELETE's one fold). An empty
+    * key set lands nothing unless `landEmpty`. */
+  private[graft] def landDeleteBatch(spark: SparkSession, dir: String,
+      keys: DataFrame, key: String, withLog: Boolean,
+      retainMs: Long = 600000L, before: Option[DataFrame] = None,
+      landEmpty: Boolean = true): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val nNull = keys.filter(col(key).isNull).count()
-    require(nNull == 0,
-      s"MOR DELETE REFUSED: $nNull rows carry a NULL $key")
-    val del = keys.select(col(key)).distinct().localCheckpoint(true)
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withLogClaim(fs, dir, retainMs) {
-      val liveView = live // resolved UNDER the claim: sees every committed batch
-      val nMissing = del.join(liveView.select(col(key)), Seq(key), "left_anti")
-        .count()
-      require(nMissing == 0,
-        s"MOR DELETE REFUSED: $nMissing keys not live in the view " +
+      val (_, tagged, c) = tagKeys(spark, fs, dir, keys.select(col(key)), key,
+        withLog)
+      require(c.nulls == 0,
+        s"MOR DELETE REFUSED: ${c.nulls} rows carry a NULL $key")
+      require(c.notLive == 0,
+        s"MOR DELETE REFUSED: ${c.notLive} keys not live in the view " +
           "(never present, or already deleted) — a silently-ignored key " +
           "would report a removal that never happened")
+      if (c.rows == 0 && !landEmpty) return 0L
       // the rows the anti-join will drop — the delete's BEFORE-IMAGES
-      // (can exceed |keys| when the key is non-unique). Materialized
-      // once: they are the removed count AND the feed's delete events
-      // — churn-sized, the same scan the count alone used to pay.
-      val removedRows = liveView.join(broadcast(del), Seq(key), "left_semi")
-        .localCheckpoint(true)
-      val removed = removedRows.count()
+      // (can exceed |keys| when the key is non-unique): the removed
+      // count AND the feed's delete events
+      val removedRows = before.getOrElse {
+        val view = if (withLog) morReadUpsertDir(spark, dir, key)
+          else morRead(spark, dir, key)
+        view.join(broadcast(tagged.select(col(key))), Seq(key), "left_semi")
+      }
       val tag = java.util.UUID.randomUUID().toString.take(12)
       val stage = new org.apache.hadoop.fs.Path(loc, s".tmp-del-$tag")
-      // multi-file stage: the batch keeps its parallelism (a
-      // churn-sized delete set must not funnel through one task);
-      // the rename below is directory-level either way
-      del.write.mode("overwrite").parquet(stage.toString)
-      val staged = spark.read.parquet(stage.toString).count()
-      if (staged != del.count()) {
+      tagged.select(col(key)).distinct()
+        .write.mode("overwrite").parquet(stage.toString)
+      val staged = footerRowCount(fs, stage)
+      if (staged != c.keys) {
         fs.delete(stage, true)
         throw new java.io.IOException(
-          s"staged delete batch short: $staged of ${del.count()} keys; " +
+          s"staged delete batch short: $staged of ${c.keys} keys; " +
             "aborting — view unchanged")
       }
       // the delete's CHANGE-FEED rows ride the same atomic rename
@@ -898,14 +887,15 @@ object LakeSink {
       // seq claimed from the SHARED log counter so the feed
       // interleaves deletes with upserts in landed order
       val seq = (logSeqs(fs, dir) :+ 0L).max + 1
+      val feed = new org.apache.hadoop.fs.Path(stage, "_feed")
       removedRows
         .select(lit(seq).as("batch_seq") +: lit("delete").as("op") +:
           removedRows.columns.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(stage, "_feed").toString)
+        .write.mode("overwrite").parquet(feed.toString)
       val dels = new org.apache.hadoop.fs.Path(loc, "_deletes")
       fs.mkdirs(dels)
       val dest = new org.apache.hadoop.fs.Path(dels, f"b-$seq%06d-$tag")
+      val removed = footerRowCount(fs, feed)
       require(fs.rename(stage, dest), s"delete publish failed: $stage -> $dest")
       removed
     }
@@ -995,8 +985,7 @@ object LakeSink {
       // the delete history — it must not funnel through one task
       union.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(next, "_tombstones").toString)
-      val staged = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(next, "_tombstones").toString).count()
+      val staged = footerRowCount(fs, new org.apache.hadoop.fs.Path(next, "_tombstones"))
       if (staged != expected) {
         fs.delete(next, true)
         throw new java.io.IOException(
@@ -1141,50 +1130,60 @@ object LakeSink {
       ups: Seq[(Long, String)]): Option[DataFrame] =
     if (ups.isEmpty) None
     else {
-      val rd = persistedSchema(fs, dir)
-        .fold(spark.read)(s0 => spark.read.schema(s0))
+      val evolved = persistedSchema(fs, dir)
       Some(ups.map { case (seq, p) =>
-        rd.parquet(p).withColumn("_u_seq",
-          org.apache.spark.sql.functions.lit(seq))
+        evolved.fold(readParquet(spark, Seq(p)))(spark.read.schema(_).parquet(p))
+          .withColumn("_u_seq", org.apache.spark.sql.functions.lit(seq))
       }.reduce(_.unionByName(_)))
     }
 
   /** THE MERGE-ON-READ FOLD — the one place its policy is written:
     * the latest version per key by landed seq wins (base rows are
-    * version 0; a non-unique base key is replaced as a group); hide
-    * = the latest keys ∪ the tombstones;
-    * `base ⟕̸ hide ∪ latest ⟕̸ tombstones`. The log is update-sized,
-    * so its window never touches the base, and the base pays exactly
-    * one BROADCAST anti-join. Tombstones also hide the folded updates
-    * (a delete landed after an update wins — [[softUpsertDir]]'s
-    * pending-tombstone refusal makes "after" the only possibility).
-    * With no log this is `base ⟕̸ tombstones` ([[morRead]]'s view);
-    * with neither it is `base`. Every reader picks its own batches
-    * (live, as-of, tombstone-free) and folds through here, the
-    * planner rule included. */
+    * version 0; a non-unique base key is replaced as a group), and a
+    * tombstone, entering the log's window at seq `Long.MaxValue`,
+    * outranks every update ([[softUpsertDir]]'s pending-tombstone
+    * refusal makes "after" the only possibility);
+    * `base ⟕̸ window keys ∪ surviving latest`. The window is
+    * update-sized and runs in [[splitTasks]] tasks — one for a small
+    * log, so no shuffle — and the base pays exactly one BROADCAST
+    * anti-join. With no log this is `base ⟕̸ tombstones` ([[morRead]]);
+    * with neither, `base`. Every reader picks its own batches (live,
+    * as-of, tombstone-free) and folds here, the planner rule included. */
   private[graft] def foldMor(base: DataFrame, key: String,
       log: Option[DataFrame], tomb: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, row_number}
-    def dropTombs(df: DataFrame) =
-      tomb.fold(df)(t => df.join(broadcast(t), Seq(key), "left_anti"))
-    log.fold(dropTombs(base)) { l =>
+    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+    log.fold(tomb.fold(base)(t => base.join(broadcast(t), Seq(key), "left_anti"))) { l =>
       require(l.columns.contains(key),
         s"MOR READ REFUSED: update log carries no '$key' column")
-      // log keys are never NULL (softUpsertDir refuses them); saying
-      // so up front gives both uses of `latest` the same pushed-down
-      // scan, so the hide side can reuse the union side's shuffle
-      val latest = l.filter(col(key).isNotNull)
+      val marks = tomb.map(_.select(l.schema.map(f =>
+        if (f.name == key) col(key)
+        else if (f.name == "_u_seq") lit(Long.MaxValue).as(f.name)
+        else lit(null).cast(f.dataType).as(f.name)): _*))
+      // log keys are never NULL (softUpsertDir refuses them); saying so
+      // gives both uses of `latest` the same pushed-down scan
+      val versions = marks.fold(l)(l.unionByName(_)).filter(col(key).isNotNull)
+      val latest = versions.coalesce(splitTasks(versions))
         .withColumn("_rn", row_number().over(
           Window.partitionBy(col(key)).orderBy(col("_u_seq").desc)))
         .filter(col("_rn") === 1)
-        .select(base.columns.map(col).toIndexedSeq: _*)
-      val hide = tomb.fold(latest.select(col(key)))(
-        t => latest.select(col(key)).unionByName(t)).distinct()
-      base.join(broadcast(hide), Seq(key), "left_anti")
-        .unionByName(dropTombs(latest))
+      base.join(broadcast(latest.select(col(key))), Seq(key), "left_anti")
+        .unionByName(latest.filter(col("_u_seq") =!= Long.MaxValue)
+          .select(base.columns.map(col).toIndexedSeq: _*))
     }
   }
+
+  /** the tasks `df`'s estimated bytes need at the scan split size: one
+    * for a statement-sized input, so a grouping over it plans no shuffle */
+  private def splitTasks(df: DataFrame): Int = {
+    val conf = df.sparkSession.sessionState.conf
+    (df.queryExecution.optimizedPlan.stats.sizeInBytes /
+      conf.filesMaxPartitionBytes + 1).min(Int.MaxValue).toInt
+  }
+
+  /** `df` materialized once, read back in [[splitTasks]] partitions */
+  private[graft] def checkpointSized(df: DataFrame): DataFrame =
+    df.localCheckpoint(true).coalesce(splitTasks(df))
 
   /** read ONLY the directory's current data files, by EXPLICIT list —
     * the rule-proof read: [[graft.plans.TombstoneApplyRule]]'s
@@ -1200,11 +1199,46 @@ object LakeSink {
       dir: String): DataFrame = {
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Manifest.dataFiles(fs, loc).map(_.toString).sorted
-    val rd = persistedSchema(fs, dir)
-      .fold(spark.read)(s0 => spark.read.schema(s0))
-    if (files.isEmpty) rd.parquet(dir)
-    else rd.option("basePath", dir).parquet(files: _*)
+    val files = Some(Manifest.dataFiles(fs, loc).map(_.toString).sorted)
+      .filter(_.nonEmpty).getOrElse(Seq(dir))
+    persistedSchema(fs, dir).fold(readParquet(spark, files, Some(dir)))(
+      spark.read.schema(_).option("basePath", dir).parquet(files: _*))
+  }
+
+  /** the Parquet read confs an inferred schema depends on */
+  private val InferConfs = Seq("spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.respectSummaryFiles", "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** schemas inferred for graft's own reads, keyed by a digest of the
+    * exact listing (path, length, mtime), `basePath` and the inference
+    * confs: committed files are never rewritten in place, so a log
+    * batch is inferred at most once in its life */
+  private val inferred = new Manifest.Lru[String,
+    org.apache.spark.sql.types.StructType](8L << 20, 512L + 64L * _.length)
+
+  /** `spark.read.parquet(paths)`, anchored at `basePath` when given,
+    * under the schema Spark infers for them — inferred once per
+    * listing, so a repeat read launches no footer job */
+  private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(paths.head)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing = paths.flatMap(p =>
+        Manifest.dataFileStatuses(fs, new org.apache.hadoop.fs.Path(p)))
+      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+    val rd = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    if (listing.isEmpty) return rd.parquet(paths: _*)
+    val key = org.apache.commons.codec.digest.DigestUtils.md5Hex(
+      (listing.sorted ++ basePath ++ InferConfs.map(spark.conf.getOption(_)
+        .getOrElse(""))).mkString("\n"))
+    var fresh: Option[DataFrame] = None
+    val schema = inferred.getOrElseUpdate(key) {
+      fresh = Some(rd.parquet(paths: _*)); fresh.get.schema
+    }
+    fresh.getOrElse(rd.schema(schema).parquet(paths: _*))
   }
 
   /** the accumulated tombstone keys of `dir` — the delete batches
@@ -1219,7 +1253,7 @@ object LakeSink {
       .filter(st => keep(st.getPath.getName)).map(_.getPath.toString)
     if (batches.isEmpty) None
     else {
-      val tomb = spark.read.parquet(batches.toIndexedSeq: _*)
+      val tomb = readParquet(spark, batches.toIndexedSeq)
       require(tomb.columns.length == 1 && key.forall(_ == tomb.columns.head),
         s"MOR READ REFUSED: tombstones carry key '${tomb.columns.mkString(",")}', " +
           s"read asked for '${key.getOrElse("one key column")}'")
@@ -1251,73 +1285,48 @@ object LakeSink {
   }
 
   /** MERGE-ON-READ UPSERT — the row-UPDATE/INSERT sibling of
-    * [[softDeleteDir]] (the Hudi log-file shape, reference
-    * lambda_fns/order.js:596-650 updates an order's row in place —
-    * this is that UPDATE when the table is a 100 TB lake, not an
-    * RDBMS): the batch lands as FULL ROWS under
-    * `_updates/u-<seq>-<tag>` — O(|batch|) I/O, data files never
-    * rewritten — and [[morReadUpsertDir]] folds the log at read
-    * time: the LATEST landed version of each key wins (base rows are
-    * version 0; non-unique base keys are REPLACED as a group by
-    * their single update row — UPSERT is a key-level statement). At
-    * scale this is the difference between an UPDATE costing
-    * update-sized I/O and rewriting the table for a 1% change; the
-    * read pays one broadcast anti-join against the update∪tombstone
-    * key set — the base never shuffles for its own updates.
-    *
-    * ORDERING CONTRACT: batches are totally ordered by the landed
-    * sequence number (single-writer per table, like every lake
-    * surface here), and updates can never race deletes because an
-    * upsert carrying a pending-tombstoned key REFUSES BY NAME —
-    * resurrecting a deleted key through an update log would undo a
-    * GDPR delete silently; [[compactUpsertsDir]] first, then
-    * re-insert deliberately. So "tombstone wins" needs no cross-log
-    * clock: every tombstone postdates every update of its key.
-    * Further refusals: NULL keys; duplicate keys WITHIN a batch
-    * (which version wins would be undefined); schema drift vs the
-    * base column set ([[appendEvolved]] is the evolution path).
-    * Returns (updated, inserted) counts vs the current upsert view.
-    * Crash contract: the staged batch is verified by recount, then
-    * ONE rename is the atomic commit — a crash before it leaves the
-    * view unchanged and a `.tmp-ups-*` leftover swept on the next
-    * call. */
-  /** `feedPreimages = true` additionally persists one
-    * `op = 'update_preimage'` feed row per UPDATED key — the version
-    * this batch replaces, fetched at land time by one batch-keyed
-    * join against the current view (base scanned once, full width,
-    * output churn-sized) — completing Delta CDF's op set
-    * (insert / update_preimage / update_postimage ≡ 'update' /
-    * delete) in the PERSISTED feed, so [[upsertFeedStream]]
-    * subscribers can retract without a batch-side
-    * [[upsertFeedPreimage]] pass. Opt-in: the default landing pays
-    * only the key-pruned liveness scan it always paid. REFUSES (like
-    * upsertFeedPreimage) an updated key that is non-unique in the
-    * view — no single preimage row exists. */
+    * [[softDeleteDir]] (the Hudi log-file shape; reference
+    * lambda_fns/order.js:596-650 updates an order's row in place): the
+    * batch lands as FULL ROWS under `_updates/u-<seq>-<tag>` —
+    * O(|batch|) I/O, data files never rewritten — and
+    * [[morReadUpsertDir]] folds the log at read time (the latest landed
+    * version of each key wins; non-unique base keys are replaced as a
+    * group). Batches are totally ordered by the shared landed seq, and
+    * an upsert carrying a pending-tombstoned key REFUSES BY NAME
+    * (resurrecting a deleted key would undo a GDPR delete silently;
+    * [[compactUpsertsDir]] first), so every tombstone postdates every
+    * update of its key. Further refusals: NULL keys, keys repeated
+    * within the batch, schema or type drift ([[appendEvolved]] is the
+    * evolution path). `feedPreimages` also persists one
+    * `op = 'update_preimage'` feed row per updated key (Delta CDF's op
+    * set; refuses a key non-unique in the view). Returns (updated,
+    * inserted) against the current view. Crash contract: the stage is
+    * verified by its footers, then ONE rename commits it — a crash
+    * leaves the view unchanged and a `.tmp-ups-*` swept next call. */
   def softUpsertDir(spark: SparkSession, dir: String, batch: DataFrame,
       key: String, onceId: Option[Long] = None,
-      retainMs: Long = 600000L, feedPreimages: Boolean = false): (Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+      retainMs: Long = 600000L, feedPreimages: Boolean = false): (Long, Long) =
+    landUpsert(spark, dir, batch, key, onceId, retainMs, feedPreimages)
+
+  /** [[softUpsertDir]]'s kernel: `precheck` sees the counts before its
+    * refusals; an empty batch lands nothing unless `landEmpty`. */
+  private[graft] def landUpsert(spark: SparkSession, dir: String,
+      batch: DataFrame, key: String, onceId: Option[Long] = None,
+      retainMs: Long = 600000L, feedPreimages: Boolean = false,
+      landEmpty: Boolean = true,
+      precheck: KeyCounts => Unit = _ => ()): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, lit, when}
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // onceId = the caller's DELIVERY identity (a streaming epoch):
-    // a batch directory already carrying `-e<id>` means this delivery
-    // committed — the replay touches nothing (the appendKeyStats
-    // lesson: delivery id, not content digest — identical multisets
-    // from DISTINCT deliveries are distinct batches)
-    // the delivery id is matched against the batch directory NAME
-    // only — a table path that itself contains "-e<N>-" must not turn
-    // every delivery into a false-positive replay (silent batch drop)
-    onceId.foreach { e =>
-      if (updateBatches(fs, dir).exists(b =>
-          new org.apache.hadoop.fs.Path(b._2).getName.contains(s"-e$e-")))
-        return (0L, 0L)
-    }
-    // hive-partitioned layouts work: readDataFilesList walks the
-    // partition subdirectories under a basePath anchor, so partition
-    // columns ride the batch as ordinary data columns — an update
-    // that CHANGES a partition value simply moves the row (the old
-    // version hides by key, the new one serves from the log; no
-    // directory is rewritten until compaction)
+    // onceId = the caller's DELIVERY identity (a streaming epoch), not
+    // a content digest: a batch directory NAME (never the table path)
+    // carrying `-e<id>` means this delivery committed — a replay
+    // touches nothing
+    def replayed = onceId.exists(e => updateBatches(fs, dir).exists(b =>
+      new org.apache.hadoop.fs.Path(b._2).getName.contains(s"-e$e-")))
+    if (replayed) return (0L, 0L)
+    // hive-partitioned layouts work: partition columns ride the batch
+    // as data columns, so an update that changes one moves the row
     val data = readDataFilesList(spark, dir)
     require(batch.columns.sorted.toSeq == data.columns.sorted.toSeq,
       s"MOR UPSERT REFUSED: batch columns [${batch.columns.sorted.mkString(",")}] " +
@@ -1337,40 +1346,30 @@ object LakeSink {
       s"MOR UPSERT REFUSED (type drift): ${drifted.mkString("; ")} — " +
         "cast the batch to the table's types, or evolve the schema " +
         "deliberately through appendEvolved + compaction")
-    val nNull = batch.filter(col(key).isNull).count()
-    require(nNull == 0,
-      s"MOR UPSERT REFUSED: $nNull rows carry a NULL $key")
-    val nDup = batch.groupBy(col(key)).count()
-      .filter(col("count") > 1).count()
-    require(nDup == 0,
-      s"MOR UPSERT REFUSED: $nDup keys appear more than once in the " +
-        "batch — which version wins is undefined; pre-resolve to one " +
-        "row per key")
-    // everything that READS the committed log state (tombstone
-    // refusal, live-key counts, seq assignment) runs UNDER the log
-    // claim — two concurrent upserts can no longer compute the same
-    // seq (both renames used to succeed, tags differ, making "latest
-    // wins" ambiguous), and a concurrent delete can no longer land a
-    // tombstone between this batch's check and its rename
+    // everything that READS the committed log state (liveness,
+    // tombstone refusal, seq assignment) runs UNDER the log claim — two
+    // concurrent upserts can no longer compute the same seq, and a
+    // concurrent delete can no longer land a tombstone between this
+    // batch's check and its rename. Column ORDER is normalized to the
+    // base layout so every log batch unions by position too.
     withLogClaim(fs, dir, retainMs) {
-      tombstoneKeys(spark, fs, dir, Some(key)).foreach { tomb =>
-        val nTomb = batch.join(broadcast(tomb), Seq(key), "left_semi").count()
-        require(nTomb == 0,
-          s"MOR UPSERT REFUSED: $nTomb keys are pending-tombstoned — an " +
-            "update log must never resurrect a deleted key; compactUpsertsDir " +
-            "first, then insert deliberately")
-      }
+      val cols = data.columns.map(col).toIndexedSeq
+      val (tagged, _, c) = tagKeys(spark, fs, dir, batch.select(cols: _*),
+        key, withLog = true)
+      precheck(c)
+      require(c.nulls == 0,
+        s"MOR UPSERT REFUSED: ${c.nulls} rows carry a NULL $key")
+      require(c.dups == 0,
+        s"MOR UPSERT REFUSED: ${c.dups} keys appear more than once in the " +
+          "batch — which version wins is undefined; pre-resolve to one " +
+          "row per key")
+      require(c.tombs == 0,
+        s"MOR UPSERT REFUSED: ${c.tombs} keys are pending-tombstoned — an " +
+          "update log must never resurrect a deleted key; compactUpsertsDir " +
+          "first, then insert deliberately")
       // replay recheck under the claim: a concurrent same-delivery
       // writer may have committed between the entry check and here
-      onceId.foreach { e =>
-        if (updateBatches(fs, dir).exists(b =>
-            new org.apache.hadoop.fs.Path(b._2).getName.contains(s"-e$e-")))
-          return (0L, 0L)
-      }
-      val view = morReadUpsertDir(spark, dir, key)
-      val liveKeys = view.select(col(key)).distinct()
-      val updated = batch.join(liveKeys, Seq(key), "left_semi").count()
-      val inserted = batch.count() - updated
+      if (replayed || (c.rows == 0 && !landEmpty)) return (0L, 0L)
       // update PREIMAGES, fetched BEFORE the landing changes the view
       // (opt-in — one batch-keyed full-width view join, churn-sized
       // output); a non-unique updated key has no single preimage row
@@ -1378,8 +1377,8 @@ object LakeSink {
       val preimages =
         if (!feedPreimages) None
         else {
-          val batchKeys = batch.select(col(key)).distinct()
-          val pre = view.join(batchKeys, Seq(key), "left_semi")
+          val pre = morReadUpsertDir(spark, dir, key)
+            .join(tagged.select(col(key)), Seq(key), "left_semi")
             .localCheckpoint(true)
           val nDupKeyed = pre.groupBy(col(key))
             .agg(fcount(flit(1)).as("n")).filter(col("n") > 1).count()
@@ -1408,46 +1407,31 @@ object LakeSink {
       glob(fs, new org.apache.hadoop.fs.Path(loc, ".tmp-ups-*"))
         .foreach(st => scala.util.Try(fs.delete(st.getPath, true)))
       val stage = new org.apache.hadoop.fs.Path(loc, s".tmp-ups-$tag")
-      // column ORDER normalized to the base layout so every log batch
-      // unions by position too, not just by name. MULTI-FILE stage:
-      // the batch keeps its parallelism — a churn-sized batch (1% of
-      // 100 TB = 1 TB) must not funnel through one task; the rename
-      // below commits the whole directory atomically either way, and
-      // the independent recount still verifies it
-      val normalized = batch.select(data.columns.map(col).toIndexedSeq: _*)
-      normalized.write.mode("overwrite").parquet(stage.toString)
-      val staged = spark.read.parquet(stage.toString).count()
-      if (staged != updated + inserted) {
+      // the stage keeps the batch's parallelism; the rename below
+      // commits the whole directory atomically either way, and the
+      // footer recount (no Spark job) still verifies it
+      tagged.select(cols: _*).write.mode("overwrite").parquet(stage.toString)
+      val staged = footerRowCount(fs, stage)
+      if (staged != c.rows) {
         fs.delete(stage, true)
-        throw new java.io.IOException(
-          s"staged upsert batch short: $staged of ${updated + inserted} " +
-            "rows; aborting — view unchanged")
+        throw new java.io.IOException(s"staged upsert batch short: " +
+          s"$staged of ${c.rows} rows; aborting — view unchanged")
       }
       // seq under the claim (no concurrent writer can mint the same),
       // from the SHARED log counter — deletes take seqs too, so the
       // change feed interleaves both in landed order
       val seq = (logSeqs(fs, dir) :+ 0L).max + 1
       // THE PERSISTED CHANGE FEED (Delta CDF's `_change_data` rule):
-      // the batch's feed rows — (batch_seq, op, full new version) in
-      // [[upsertFeed]]'s exact shape, op decided against the
-      // pre-batch view — are written INSIDE the stage under the
-      // `_`-hidden `_feed/`, so the ONE rename below commits data and
-      // feed atomically: a stream over the feed ([[upsertFeedStream]])
-      // can never see a batch whose change rows are missing or
-      // mid-write. Log-sized write, the price of never recomputing
-      // the feed downstream.
-      import org.apache.spark.sql.functions.{lit, when}
-      val postRows = spark.read.parquet(stage.toString)
-        .join(liveKeys.withColumn("_lv", lit(1)), Seq(key), "left_outer")
-        .withColumn("op",
-          when(col("_lv").isNotNull, "update").otherwise("insert"))
-        .drop("_lv")
-        .select(lit(seq).as("batch_seq") +: col("op") +:
-          data.columns.map(col).toIndexedSeq: _*)
+      // (batch_seq, op by the liveness tag, new version) rows inside the
+      // stage's `_`-hidden `_feed/`, so the ONE rename commits data and
+      // feed together ([[upsertFeedStream]] never sees one without the
+      // other)
+      val postRows = tagged.select(lit(seq).as("batch_seq") +:
+        when(col("_live"), "update").otherwise("insert").as("op") +: cols: _*)
       val feedRows = preimages.fold(postRows)(pre =>
         postRows.unionByName(pre.select(
           lit(seq).as("batch_seq") +: lit("update_preimage").as("op") +:
-            data.columns.map(col).toIndexedSeq: _*)))
+            cols: _*)))
       feedRows.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(stage, "_feed").toString)
       // the delivery id rides the batch NAME (what the replay check
@@ -1455,8 +1439,72 @@ object LakeSink {
       val dest = new org.apache.hadoop.fs.Path(ups,
         onceId.fold(f"u-$seq%06d-$tag")(e => f"u-$seq%06d-e$e-$tag"))
       require(fs.rename(stage, dest), s"upsert publish failed: $stage -> $dest")
-      (updated, inserted)
+      (c.live, c.rows - c.live)
     }
+  }
+
+  /** a landing's counts over its tagged rows: rows, NULL-key rows,
+    * keys seen more than once, tombstoned rows, rows and distinct keys
+    * live in the view, distinct non-NULL keys and those not live */
+  private[graft] final case class KeyCounts(rows: Long, nulls: Long,
+      dups: Long, tombs: Long, live: Long, liveKeys: Long, keys: Long,
+      notLive: Long)
+
+  /** THE LANDING'S ONE PASS over `rows` (a key column, or full rows):
+    * materialized in ONE checkpoint and tagged `_live` (the key is in
+    * the base or — `withLog` — the update log, and not tombstoned:
+    * exactly the folded view's keys) and `_tomb` (pending-tombstoned),
+    * by ONE key-pruned probe: the distinct keys (up to
+    * [[Manifest.MaxProbeKeys]]) collected once, then the base files
+    * their `_blooms_<key>` admits (all of them without a current
+    * manifest), the log and the tombstones in one scan filtered to
+    * them; past the cap, a join against the same unpruned sides. ONE
+    * aggregate gives every refusal's count. Returns the tagged rows in
+    * the batch's own partitions (for its writes), in [[splitTasks]]
+    * partitions (for its groupings), and the counts. */
+  private def tagKeys(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, rows: DataFrame, key: String,
+      withLog: Boolean): (DataFrame, DataFrame, KeyCounts) = {
+    import org.apache.spark.sql.functions._
+    val cp = rows.localCheckpoint(true)
+    val ks = cp.coalesce(splitTasks(rows)).filter(col(key).isNotNull)
+      .select(col(key), col(key).cast("string").as("_dig")).distinct()
+      .limit(Manifest.MaxProbeKeys.toInt + 1).collect()
+    val pruned = ks.length <= Manifest.MaxProbeKeys
+    val data = readDataFilesList(spark, dir)
+    val base = (if (pruned) Manifest.keyFiles(spark,
+        new org.apache.hadoop.fs.Path(dir), key, ks.map(_.getString(1))) else None)
+      .fold(Option(data))(files => Option.when(files.nonEmpty)(spark.read
+        .schema(data.schema).option("basePath", dir).parquet(files.map(_.toString): _*)))
+    val log = if (withLog) taggedLog(spark, fs, dir, updateBatches(fs, dir)) else None
+    val sides = (base ++ log).map(_.select(col(key), lit(false).as("_t"))) ++
+      tombstoneKeys(spark, fs, dir, Some(key)).map(_.select(col(key), lit(true)))
+    val tagged =
+      if (pruned) {
+        val hits = sides.reduceOption(_ union _).filter(_ => ks.nonEmpty)
+          .fold(Array.empty[org.apache.spark.sql.Row])(_.filter(
+            col(key).isin(ks.map(_.get(0)).toIndexedSeq: _*)).collect())
+        def in(t: Boolean) = coalesce(col(key).isin(
+          hits.filter(_.getBoolean(1) == t).map(_.get(0)).toIndexedSeq: _*), lit(false))
+        cp.withColumn("_live", in(false) && !in(true)).withColumn("_tomb", in(true))
+      } else {
+        val h = sides.reduce(_ union _).groupBy(col(key))
+          .agg(max(!col("_t")).as("_d"), max(col("_t")).as("_t"))
+        cp.join(h, Seq(key), "left_outer")
+          .withColumn("_live", coalesce(col("_d") && !col("_t"), lit(false)))
+          .withColumn("_tomb", coalesce(col("_t"), lit(false)))
+          .drop("_d", "_t").localCheckpoint(true)
+      }
+    val nn = col(key).isNotNull
+    val one = tagged.coalesce(splitTasks(rows))
+    val r = one.groupBy(col(key))
+      .agg(count(lit(1)).as("n"), max("_live").as("l"), max("_tomb").as("t"))
+      .agg(sum("n"), sum(when(!nn, col("n"))), count(when(nn && col("n") > 1, 1)),
+        sum(when(col("t"), col("n"))), sum(when(col("l"), col("n"))),
+        count(when(col("l"), 1)), count(when(nn, 1)), count(when(nn && !col("l"), 1)))
+      .head()
+    def at(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    (tagged, one, KeyCounts(at(0), at(1), at(2), at(3), at(4), at(5), at(6), at(7)))
   }
 
   /** The MERGE-ON-READ UPSERT view: base data files with the
@@ -1755,18 +1803,12 @@ object LakeSink {
   }
 
   /** sum of the parquet FOOTER record counts of the data files
-    * directly under `dir` — a DRIVER-SIDE metadata read (one footer
-    * per file, no Spark job): the history TVF plans at SQL-analysis
-    * time, and launching one count job per landing would cost
-    * thousands of scheduler round-trips on a long-lived table before
-    * the query even plans. Footers are read on a BOUNDED PARALLEL
-    * pool: each open is ~10 ms of I/O latency, so a 1500-file
-    * generation read sequentially costs ~18 s at PLAN time (measured,
-    * sf10) — parallel at 16 it is ~1 s, and the work is pure I/O wait
-    * with a deterministic sum, the textbook case for driver-side
-    * parallelism (still zero Spark jobs, spec-pinned). Hidden files
-    * (`_feed/`, checksums, `_SUCCESS`) are skipped like every data
-    * listing. */
+    * directly under `dir` — a DRIVER-SIDE metadata read, no Spark job
+    * (the history TVF plans at SQL-analysis time; landings recount
+    * their stage). Footers are read on a bounded parallel pool: each
+    * open is ~10 ms of I/O latency (a 1500-file generation read
+    * sequentially took ~18 s at plan time, sf10). Hidden files
+    * (`_feed/`, checksums, `_SUCCESS`) are skipped. */
   private def footerRowCount(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Long = {
     val files = fs.listStatus(dir)
@@ -1986,8 +2028,7 @@ object LakeSink {
     * rows removed from the upsert view. */
   def softDeleteUpsertDir(spark: SparkSession, dir: String,
       keys: DataFrame, key: String): Long =
-    landDeleteBatch(spark, dir, keys, key,
-      morReadUpsertDir(spark, dir, key))
+    landDeleteBatch(spark, dir, keys, key, withLog = true)
 
   /** PATCH (column-subset) UPSERT — the CDC shape [[softUpsertDir]]
     * refuses: a change stream that emits `(key, changed columns)`
@@ -2038,27 +2079,21 @@ object LakeSink {
       }
       require(drifted.isEmpty,
         s"PATCH REFUSED (type drift): ${drifted.mkString("; ")}")
-      val nNull = patch.filter(col(key).isNull).count()
-      require(nNull == 0, s"PATCH REFUSED: $nNull rows carry a NULL $key")
-      val nDup = patch.groupBy(col(key)).count()
-        .filter(col("count") > 1).count()
-      require(nDup == 0,
-        s"PATCH REFUSED: $nDup keys appear more than once in the batch")
-      val p = patch.select(col(key) +:
-        valueCols.map(c => col(c).as(s"_p_$c")): _*)
-      val nMissing = p.select(col(key))
-        .join(view.select(col(key)), Seq(key), "left_anti").count()
-      require(nMissing == 0,
-        s"PATCH REFUSED: $nMissing keys not live in the upsert view — " +
+      val (tagged, _, c) = tagKeys(spark, fs, dir, patch, key, withLog = true)
+      require(c.nulls == 0, s"PATCH REFUSED: ${c.nulls} rows carry a NULL $key")
+      require(c.dups == 0,
+        s"PATCH REFUSED: ${c.dups} keys appear more than once in the batch")
+      require(c.notLive == 0,
+        s"PATCH REFUSED: ${c.notLive} keys not live in the upsert view — " +
           "a patch has no values for the uncarried columns; insert " +
           "deliberately with full rows (softUpsertDir)")
       // expand: current row per patched key (the inner join IS the
       // log-sized restriction), carried columns coalesced
-      val expanded = view.join(p, Seq(key))
+      val expanded = view.join(tagged.select(col(key) +:
+          valueCols.map(c => col(c).as(s"_p_$c")): _*), Seq(key))
         .select(view.columns.toIndexedSeq.map(c =>
           if (valueCols.contains(c)) coalesce(col(s"_p_$c"), col(c)).as(c)
           else col(c)): _*)
-        .localCheckpoint(true)
       val (u, i) = softUpsertDir(spark, dir, expanded, key, onceId, retainMs)
       require(i == 0, s"internal: patch expansion inserted $i rows")
       u
@@ -2527,38 +2562,15 @@ object LakeSink {
       catalog.getTableMetadata(ident).location).toString
   }
 
-  /** the number of `probeKeys` LIVE in `dir`'s upsert view, computed
-    * the SCALE-DEFAULT way when [[Manifest.pkProbeFiles]] has a current
-    * manifest: live(k) ⇔ (k ∈ pruned-base ∪ k ∈ any log batch) ∧
-    * k ∉ tombstones — exactly the view's key-liveness (a log batch
-    * never loses a key short of a tombstone, and every tombstone
-    * postdates every update of its key by the upsert refusal), but
-    * the base side reads ONLY the bloom survivors (~the owning files
-    * at any table size; the log and tombstone sides are churn-sized
-    * by construction). None = no current manifest; caller runs the
-    * full view probe. */
+  /** the number of distinct `probeKeys` (first column) LIVE in `dir`'s
+    * upsert view, by the landing's own key-pruned probe ([[tagKeys]]) */
   private[graft] def liveKeyCount(spark: SparkSession, dir: String,
       key: String, probeKeys: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    Manifest.pkProbeFiles(spark, dir, key, probeKeys).map { survivors =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pk = probeKeys.select(col(probeKeys.columns.head).as(key))
-        .distinct()
-      val baseHits =
-        if (survivors.isEmpty)
-          readDataFilesList(spark, dir).select(col(key)).limit(0)
-        else spark.read.parquet(survivors.toIndexedSeq: _*)
-          .select(col(key))
-          .join(broadcast(pk), Seq(key), "left_semi")
-      val hits = taggedLog(spark, fs, dir, updateBatches(fs, dir))
-        .fold(baseHits)(log => baseHits.unionByName(log.select(col(key))
-          .join(broadcast(pk), Seq(key), "left_semi")))
-        .distinct()
-      tombstoneKeys(spark, fs, dir, Some(key))
-        .fold(hits)(t => hits.join(broadcast(t), Seq(key), "left_anti"))
-        .count()
-    }
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Some(tagKeys(spark, fs, dir, probeKeys.select(
+      org.apache.spark.sql.functions.col(probeKeys.columns.head).as(key)),
+      key, withLog = true)._3.liveKeys)
   }
 
   /** EXACTLY-ONCE streamed append — the idempotent-writes contract

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow,
   QueryPlanningTracker}
@@ -209,7 +209,10 @@ object Manifest extends PredicateHelper {
       catch { case _: java.io.FileNotFoundException => return None }
     val key = (p.toString, fs.getFileStatus(p).getModificationTime,
       parts.map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(","))
-    Some(reads.getOrElseUpdate(key)(parse(spark.read.parquet(p.toString))))
+    // the part files: Spark's listing warns it ignores a `_` root
+    val files = parts.map(_.getPath).filterNot(f => hidden(f.getName))
+    Some(reads.getOrElseUpdate(key)(parse(spark.read.parquet(
+      (if (files.isEmpty) Seq(p) else files.toSeq).map(_.toString): _*))))
   }
 
   /** memoized existence probes for planning-time rules, keyed by the
@@ -222,16 +225,22 @@ object Manifest extends PredicateHelper {
 
   // ---- staleness ----------------------------------------------------
 
-  /** the data files under `dir`, recursively: `_`- and `.`-prefixed
-    * entries (manifests, logs, stages, _SUCCESS) are not data. Every
-    * listing of a directory's data files goes through here. */
-  private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** the data files under `dir` (or `dir` itself, a file), recursively:
+    * `_`- and `.`-prefixed entries (manifests, logs, stages, _SUCCESS)
+    * are not data. Every listing of a directory's data files goes
+    * through here. */
+  private[graft] def dataFileStatuses(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Nil
-      else if (st.isDirectory) dataFiles(fs, st.getPath)
-      else Seq(st.getPath)
+      if (hidden(st.getPath.getName)) Nil
+      else if (st.isDirectory) dataFileStatuses(fs, st.getPath)
+      else Seq(st)
     }
+
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    dataFileStatuses(fs, dir).map(_.getPath)
 
   /** a parquet file's row count from its footer (no Spark job) */
   private[graft] def footerRows(fs: FileSystem, p: Path): Long = {
@@ -524,6 +533,17 @@ object Manifest extends PredicateHelper {
       key: String, probeKeys: DataFrame): Option[Array[String]] =
     probe(spark, new Path(dir), key, probeKeys)
       .map(_.toArray.sorted.map(new Path(dir, _).toString))
+
+  /** the landing's key probe: the data files under `dir` (nested ones
+    * included) whose current `_blooms_<key>` admits one of `digs` (the
+    * keys' string forms), or None without a current manifest */
+  private[graft] def keyFiles(spark: SparkSession, dir: Path, key: String,
+      digs: Iterable[String]): Option[Seq[Path]] =
+    current(spark, dir, s"_blooms_$key", Nil).map { m =>
+      val keep = bloomSurvivors(m, digs)
+      dataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+        .filter(p => keep(p.getName))
+    }
 
   // ---- explicit readers (refuse by name) ----------------------------
 

@@ -861,4 +861,97 @@ class DmlSpec extends AnyFunSuite {
     assert(Manifest.pkProbeFiles(spark, dir, "id",
       Seq(1L).toDF("id")).isEmpty, "stale manifest → None, never wrong")
   }
+
+  test("landing refusals fire in order with their counts, and a refused batch lands nothing") {
+    val dir = mkTable("dmlrefuse")
+    spark.sql(s"DELETE FROM parquet.`$dir` WHERE id = 3") // seq 1: a pending tombstone
+    def refusal(body: => Any): String = intercept[Exception](body).getMessage
+    def batch(rows: (Option[Long], String, Double)*) = rows.toDF("id", "name", "price")
+    // NULL keys are counted (two rows) before the duplicate check
+    assert(refusal(graft.sources.LakeSink.softUpsertDir(spark, dir,
+      batch((None, "n1", 1.0), (None, "n2", 1.0), (Some(9L), "a", 1.0),
+        (Some(9L), "b", 1.0)), "id")).contains("2 rows carry a NULL id"))
+    // a duplicated key that is also pending-tombstoned refuses as a duplicate
+    assert(refusal(graft.sources.LakeSink.softUpsertDir(spark, dir,
+      batch((Some(3L), "x", 1.0), (Some(3L), "y", 1.0)), "id"))
+      .contains("1 keys appear more than once"))
+    // one live and one absent key: not live, count 1
+    assert(refusal(graft.sources.LakeSink.softDeleteUpsertDir(spark, dir,
+      Seq(1L, 99L).toDF("id"), "id")).contains("1 keys not live"))
+    // SQL INSERT's primary-key refusal comes before the NULL refusal
+    assert(refusal(spark.sql(s"INSERT INTO parquet.`$dir` VALUES " +
+      "(2, 'dup', 0.0), (NULL, 'n', 0.0)")).contains("1 keys already live"))
+    assert(refusal(spark.sql(s"INSERT INTO parquet.`$dir` VALUES (4, 'dup', 0.0)"))
+      .contains("keys already live"))
+    // nothing landed past the tombstone, and the view is unchanged
+    assert(graft.sources.LakeSink.lastLandedSeq(spark, dir) == 1L)
+    assert(new java.io.File(dir, "_deletes").list().count(_.startsWith("b-")) == 1)
+    assert(!new java.io.File(dir, "_updates").list().exists(_.startsWith("u-")))
+    assert(graft.sources.LakeSink.morReadUpsertDir(spark, dir, "id")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L))
+  }
+
+  /** the serve benchmark's table: 240 rows in 4 range-sorted files
+    * keyed on order_id, with the key bloom committed */
+  private def mkServeTable(prefix: String): String = {
+    val dir = freshDir(prefix)
+    spark.range(1L, 241L).select(col("id").as("order_id"),
+        concat(lit("d"), col("id")).as("description"),
+        concat(lit("blobs/orders/"), col("id")).as("s3_prefix"),
+        (col("id") * 100L).as("nbytes"))
+      .repartitionByRange(4, col("order_id"))
+      .sortWithinPartitions("order_id").write.parquet(dir)
+    graft.sources.LakeSink.registerKeyDir(spark, dir, "order_id")
+    Manifest.attachBlooms(spark, dir, "order_id")
+    dir
+  }
+
+  /** the call sites of the Spark jobs `body` launches, read after the
+    * listener bus drains */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        sites.add(js.stageInfos.lastOption.fold("?")(_.name)); ()
+      }
+    }
+    org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
+  test("one-row DML on the serve-shaped table: ≤ 15 jobs per statement, flat in log depth") {
+    def stmts(t: String): Seq[(String, String)] = Seq(
+      "INSERT" -> s"INSERT INTO $t VALUES (1000, 'new', 'blobs/orders/1000', 7)",
+      "UPDATE" -> s"UPDATE $t SET description = 'upd' WHERE order_id = 10",
+      "DELETE" -> s"DELETE FROM $t WHERE order_id = 20")
+    // log depth 4: one batch of each kind plus a second update, none
+    // touching the measured keys
+    def deepen(t: String): Unit = Seq(
+      s"UPDATE $t SET description = 'x' WHERE order_id = 100",
+      s"DELETE FROM $t WHERE order_id = 110",
+      s"INSERT INTO $t VALUES (2000, 'y', 'blobs/orders/2000', 1)",
+      s"UPDATE $t SET nbytes = 5 WHERE order_id = 2000").foreach(spark.sql)
+    val jobs = for (depth <- Seq(0, 4); (kind, _) <- stmts("")) yield {
+      val dir = mkServeTable(s"dmljobs$depth$kind")
+      val t = s"parquet.`$dir`"
+      if (depth > 0) deepen(t)
+      (kind, depth) -> jobSites(spark.sql(stmts(t).toMap.apply(kind)))
+    }
+    val n = jobs.toMap.map { case (k, sites) => k -> sites.size }
+    info(s"jobs per statement (kind, log depth): $n")
+    jobs.foreach { case ((kind, depth), sites) =>
+      assert(sites.size <= 15, s"one-row $kind at log depth $depth ran " +
+        s"${sites.size} jobs (budget 15): ${sites.mkString("; ")}")
+    }
+    Seq("INSERT", "UPDATE", "DELETE").foreach(k => assert(
+      n((k, 4)) <= n((k, 0)) + 1, s"$k: ${n((k, 0))} jobs at log depth 0, " +
+        s"${n((k, 4))} at depth 4 — the statement must not grow with the log"))
+  }
 }
