@@ -457,7 +457,8 @@ object GraftDml {
     val fs = new org.apache.hadoop.fs.Path(loc)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (graft.sources.LakeSink.persistedSchema(fs, loc).isEmpty)
-      graft.sources.LakeSink.readParquet(spark, Seq(loc))
+      graft.sources.LakeSink.readParquet(spark, Seq(loc), graft.sources.Manifest
+        .dataFileStatuses(fs, new org.apache.hadoop.fs.Path(loc)).map(graft.sources.LakeSink.stamp))
     else graft.sources.LakeSink.morReadUpsertDir(spark, loc, key)
   }
 
@@ -473,9 +474,18 @@ object GraftDml {
     val (loc, table) = resolveTarget(spark, target)
     val key = resolveKey(spark, loc, table)
     graft.sources.LakeSink.withDirLogClaim(spark, loc) {
-      // one fold: the matching rows are the keys AND the before-images
+      // the before-images: every view row of a matching key (a tombstone
+      // hides a non-unique key's whole group; a deterministic predicate
+      // on the key alone matches whole groups already), one checkpoint
+      val view = dmlView(spark, loc, key)
+      val hit = view.filter(pred.map(expr).getOrElse(lit(true)))
+      val whole = hit.queryExecution.analyzed match {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic &&
+          f.condition.references.forall(a => spark.sessionState.conf.resolver(a.name, key))
+        case _ => false
+      }
       val rows = graft.sources.LakeSink.checkpointSized(
-        dmlView(spark, loc, key).filter(pred.map(expr).getOrElse(lit(true))))
+        if (whole) hit else view.join(hit.select(col(key)), Seq(key), "left_semi"))
       val keys = rows.select(col(key)).distinct()
       if (hasUpdates(spark, loc) || table.isEmpty)
         graft.sources.LakeSink.landDeleteBatch(spark, loc, keys, key,

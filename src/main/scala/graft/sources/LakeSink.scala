@@ -842,9 +842,9 @@ object LakeSink {
     * base MOR view) and [[softDeleteUpsertDir]] (`withLog`: the upsert
     * view): [[tagKeys]]' refusals, the key set staged and verified by
     * its footers, ONE rename into `_deletes/b-*`, all under the log
-    * claim. `before` = the view's rows of exactly these keys when the
-    * caller read them under the claim (SQL DELETE's one fold). An empty
-    * key set lands nothing unless `landEmpty`. */
+    * claim. `before` = the view's rows of these keys (whole groups)
+    * when the caller read them under the claim (SQL DELETE's one fold).
+    * An empty key set lands nothing unless `landEmpty`. */
   private[graft] def landDeleteBatch(spark: SparkSession, dir: String,
       keys: DataFrame, key: String, withLog: Boolean,
       retainMs: Long = 600000L, before: Option[DataFrame] = None,
@@ -1131,8 +1131,9 @@ object LakeSink {
     if (ups.isEmpty) None
     else {
       val evolved = persistedSchema(fs, dir)
+      // a committed batch is never rewritten: its tagged path names it
       Some(ups.map { case (seq, p) =>
-        evolved.fold(readParquet(spark, Seq(p)))(spark.read.schema(_).parquet(p))
+        evolved.fold(readParquet(spark, Seq(p), Seq(p)))(spark.read.schema(_).parquet(p))
           .withColumn("_u_seq", org.apache.spark.sql.functions.lit(seq))
       }.reduce(_.unionByName(_)))
     }
@@ -1199,9 +1200,9 @@ object LakeSink {
       dir: String): DataFrame = {
     val loc = new org.apache.hadoop.fs.Path(dir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Some(Manifest.dataFiles(fs, loc).map(_.toString).sorted)
-      .filter(_.nonEmpty).getOrElse(Seq(dir))
-    persistedSchema(fs, dir).fold(readParquet(spark, files, Some(dir)))(
+    val sts = Manifest.dataFileStatuses(fs, loc).sortBy(_.getPath.toString)
+    val files = Some(sts.map(_.getPath.toString)).filter(_.nonEmpty).getOrElse(Seq(dir))
+    persistedSchema(fs, dir).fold(readParquet(spark, files, sts.map(stamp), Some(dir)))(
       spark.read.schema(_).option("basePath", dir).parquet(files: _*))
   }
 
@@ -1213,22 +1214,19 @@ object LakeSink {
     "spark.sql.sources.partitionColumnTypeInference.enabled")
 
   /** schemas inferred for graft's own reads, keyed by a digest of the
-    * exact listing (path, length, mtime), `basePath` and the inference
-    * confs: committed files are never rewritten in place, so a log
-    * batch is inferred at most once in its life */
+    * files' identity, `basePath` and the inference confs (committed
+    * files are never rewritten: a log batch is inferred once in its life) */
   private val inferred = new Manifest.Lru[String,
     org.apache.spark.sql.types.StructType](8L << 20, 512L + 64L * _.length)
 
-  /** `spark.read.parquet(paths)`, anchored at `basePath` when given,
-    * under the schema Spark infers for them — inferred once per
-    * listing, so a repeat read launches no footer job */
+  /** a listed file's identity: path, length, mtime */
+  private[graft] def stamp(st: org.apache.hadoop.fs.FileStatus): String =
+    s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+
+  /** `spark.read.parquet(paths)` (at `basePath` when given) under a
+    * schema inferred once per `listing`, the files' identity */
   private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
-      basePath: Option[String] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(paths.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing = paths.flatMap(p =>
-        Manifest.dataFileStatuses(fs, new org.apache.hadoop.fs.Path(p)))
-      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+      listing: Seq[String], basePath: Option[String] = None): DataFrame = {
     val rd = basePath.fold(spark.read)(spark.read.option("basePath", _))
     if (listing.isEmpty) return rd.parquet(paths: _*)
     val key = org.apache.commons.codec.digest.DigestUtils.md5Hex(
@@ -1249,11 +1247,13 @@ object LakeSink {
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       key: Option[String],
       keep: String => Boolean = _ => true): Option[DataFrame] = {
-    val batches = deleteBatches(fs, dir)
-      .filter(st => keep(st.getPath.getName)).map(_.getPath.toString)
+    val batches = deleteBatches(fs, dir).toIndexedSeq
+      .filter(st => keep(st.getPath.getName))
     if (batches.isEmpty) None
     else {
-      val tomb = readParquet(spark, batches.toIndexedSeq)
+      // committed batches are never rewritten: path and mtime name them
+      val tomb = readParquet(spark, batches.map(_.getPath.toString),
+        batches.map(st => s"${st.getPath}:${st.getModificationTime}"))
       require(tomb.columns.length == 1 && key.forall(_ == tomb.columns.head),
         s"MOR READ REFUSED: tombstones carry key '${tomb.columns.mkString(",")}', " +
           s"read asked for '${key.getOrElse("one key column")}'")
@@ -1450,51 +1450,58 @@ object LakeSink {
       dups: Long, tombs: Long, live: Long, liveKeys: Long, keys: Long,
       notLive: Long)
 
+  /** past this many keys [[tagKeys]] joins its hits, not literal lists */
+  private[graft] val MaxLiteralKeys = 1000
+
   /** THE LANDING'S ONE PASS over `rows` (a key column, or full rows):
-    * materialized in ONE checkpoint and tagged `_live` (the key is in
-    * the base or — `withLog` — the update log, and not tombstoned:
-    * exactly the folded view's keys) and `_tomb` (pending-tombstoned),
-    * by ONE key-pruned probe: the distinct keys (up to
-    * [[Manifest.MaxProbeKeys]]) collected once, then the base files
-    * their `_blooms_<key>` admits (all of them without a current
-    * manifest), the log and the tombstones in one scan filtered to
-    * them; past the cap, a join against the same unpruned sides. ONE
-    * aggregate gives every refusal's count. Returns the tagged rows in
-    * the batch's own partitions (for its writes), in [[splitTasks]]
-    * partitions (for its groupings), and the counts. */
-  private def tagKeys(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+    * ONE checkpoint, tagged `_live` (in the base or — `withLog` — the
+    * log, and not tombstoned: the folded view's keys) and `_tomb` by
+    * ONE probe of the distinct keys (≤ [[Manifest.MaxProbeKeys]]) over
+    * the base files their `_blooms_<key>` admits (all, without a
+    * current manifest or past the cap), the log and the tombstones,
+    * one hit row per key (literal lists up to [[MaxLiteralKeys]] keys,
+    * joined past it). ONE aggregate gives every refusal's count.
+    * Returns the tagged rows in the batch's partitions (for its
+    * writes), in [[splitTasks]] partitions (for its groupings), and
+    * the counts. */
+  private[graft] def tagKeys(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       dir: String, rows: DataFrame, key: String,
       withLog: Boolean): (DataFrame, DataFrame, KeyCounts) = {
     import org.apache.spark.sql.functions._
     val cp = rows.localCheckpoint(true)
-    val ks = cp.coalesce(splitTasks(rows)).filter(col(key).isNotNull)
-      .select(col(key), col(key).cast("string").as("_dig")).distinct()
-      .limit(Manifest.MaxProbeKeys.toInt + 1).collect()
-    val pruned = ks.length <= Manifest.MaxProbeKeys
     val data = readDataFilesList(spark, dir)
-    val base = (if (pruned) Manifest.keyFiles(spark,
+    // digests: the table key type's string forms, as its bloom holds them
+    val ks = cp.coalesce(splitTasks(rows)).filter(col(key).isNotNull).select(col(key),
+      col(key).cast(data.select(col(key)).schema.head.dataType).cast("string"))
+      .distinct().limit(Manifest.MaxProbeKeys.toInt + 1).collect()
+    val small = ks.length <= MaxLiteralKeys
+    val base = (if (ks.length <= Manifest.MaxProbeKeys) Manifest.keyFiles(spark,
         new org.apache.hadoop.fs.Path(dir), key, ks.map(_.getString(1))) else None)
       .fold(Option(data))(files => Option.when(files.nonEmpty)(spark.read
         .schema(data.schema).option("basePath", dir).parquet(files.map(_.toString): _*)))
     val log = if (withLog) taggedLog(spark, fs, dir, updateBatches(fs, dir)) else None
     val sides = (base ++ log).map(_.select(col(key), lit(false).as("_t"))) ++
-      tombstoneKeys(spark, fs, dir, Some(key)).map(_.select(col(key), lit(true)))
-    val tagged =
-      if (pruned) {
-        val hits = sides.reduceOption(_ union _).filter(_ => ks.nonEmpty)
-          .fold(Array.empty[org.apache.spark.sql.Row])(_.filter(
-            col(key).isin(ks.map(_.get(0)).toIndexedSeq: _*)).collect())
-        def in(t: Boolean) = coalesce(col(key).isin(
-          hits.filter(_.getBoolean(1) == t).map(_.get(0)).toIndexedSeq: _*), lit(false))
-        cp.withColumn("_live", in(false) && !in(true)).withColumn("_tomb", in(true))
-      } else {
-        val h = sides.reduce(_ union _).groupBy(col(key))
-          .agg(max(!col("_t")).as("_d"), max(col("_t")).as("_t"))
+      tombstoneKeys(spark, fs, dir, Some(key)).map(_.select(col(key), lit(true).as("_t")))
+    // per key: present in the base or log (`_d`), tombstoned (`_t`)
+    val hits = sides.reduceOption(_ union _).filter(_ => ks.nonEmpty).map { u =>
+      val f = if (small) u.filter(col(key).isin(ks.map(_.get(0)).toIndexedSeq: _*)) else u
+      f.coalesce(splitTasks(f)).groupBy(col(key))
+        .agg(max(!col("_t")).as("_d"), max(col("_t")).as("_t"))
+    }
+    val tagged = hits match {
+      case Some(h) if small =>
+        val got = h.collect()
+        def in(p: org.apache.spark.sql.Row => Boolean) =
+          col(key).isin(got.filter(p).map(_.get(0)).toIndexedSeq: _*)
+        cp.withColumn("_live", coalesce(in(r => r.getBoolean(1) && !r.getBoolean(2)), lit(false)))
+          .withColumn("_tomb", coalesce(in(_.getBoolean(2)), lit(false)))
+      case Some(h) =>
         cp.join(h, Seq(key), "left_outer")
           .withColumn("_live", coalesce(col("_d") && !col("_t"), lit(false)))
           .withColumn("_tomb", coalesce(col("_t"), lit(false)))
           .drop("_d", "_t").localCheckpoint(true)
-      }
+      case None => cp.withColumn("_live", lit(false)).withColumn("_tomb", lit(false))
+    }
     val nn = col(key).isNotNull
     val one = tagged.coalesce(splitTasks(rows))
     val r = one.groupBy(col(key))
@@ -2261,8 +2268,8 @@ object LakeSink {
           .mode("overwrite").parquet(tmp)
         // the KEY BLOOM rides the compaction commit (r17): every
         // compacted keyed table carries `_blooms_<key>` by default, so
-        // the hottest statement's duplicate-key probe (SQL INSERT's PK
-        // check, [[Manifest.pkProbeFiles]]) reads ~the owning files
+        // every landing's key-liveness probe (SQL INSERT's PK check
+        // included, [[Manifest.keyFiles]]) reads ~the owning files
         // with NO opt-in confs — the lake's answer to the RDBMS B-tree
         // probe. Written INSIDE the stage: the swap publishes data and
         // manifest atomically (names are rename-stable).
@@ -2560,17 +2567,6 @@ object LakeSink {
     require(catalog.tableExists(ident), s"unknown table $table")
     new org.apache.hadoop.fs.Path(
       catalog.getTableMetadata(ident).location).toString
-  }
-
-  /** the number of distinct `probeKeys` (first column) LIVE in `dir`'s
-    * upsert view, by the landing's own key-pruned probe ([[tagKeys]]) */
-  private[graft] def liveKeyCount(spark: SparkSession, dir: String,
-      key: String, probeKeys: DataFrame): Option[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Some(tagKeys(spark, fs, dir, probeKeys.select(
-      org.apache.spark.sql.functions.col(probeKeys.columns.head).as(key)),
-      key, withLog = true)._3.liveKeys)
   }
 
   /** EXACTLY-ONCE streamed append — the idempotent-writes contract

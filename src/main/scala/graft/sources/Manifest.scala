@@ -524,19 +524,12 @@ object Manifest extends PredicateHelper {
       else Some(bloomSurvivors(m, rows.flatMap(r => Option(r.getString(0)))))
     }
 
-  /** the PK probe's pruned BASE files (directory-anchored) for SQL
-    * INSERT's duplicate-key check ([[LakeSink.liveKeyCount]]): the
-    * files whose `_blooms_<key>` admits a probe key, or None (full
-    * probe) when the manifest is absent or stale — base files change
-    * only at compaction, which recommits the manifest in its swap */
-  private[graft] def pkProbeFiles(spark: SparkSession, dir: String,
-      key: String, probeKeys: DataFrame): Option[Array[String]] =
-    probe(spark, new Path(dir), key, probeKeys)
-      .map(_.toArray.sorted.map(new Path(dir, _).toString))
-
-  /** the landing's key probe: the data files under `dir` (nested ones
-    * included) whose current `_blooms_<key>` admits one of `digs` (the
-    * keys' string forms), or None without a current manifest */
+  /** THE LANDING'S KEY PROBE (every upsert's and delete's liveness,
+    * SQL INSERT's duplicate-key check included): the data files under
+    * `dir` (nested ones included) whose current `_blooms_<key>` admits
+    * one of `digs` (the keys' string forms), or None (probe every file)
+    * when the manifest is absent or stale — base files change only at
+    * compaction, which recommits the manifest in its swap */
   private[graft] def keyFiles(spark: SparkSession, dir: Path, key: String,
       digs: Iterable[String]): Option[Seq[Path]] =
     current(spark, dir, s"_blooms_$key", Nil).map { m =>

@@ -831,16 +831,17 @@ class DmlSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet"))
     assert(nAll > 4, s"need a multi-file base, got $nAll")
     // the probe prunes the BASE side to ~the owning files
-    val files = Manifest.pkProbeFiles(spark, dir, "id",
-      Seq(42L).toDF("id")).get
+    val files = Manifest.keyFiles(spark, new org.apache.hadoop.fs.Path(dir),
+      "id", Seq("42")).get
     assert(files.nonEmpty && files.length < nAll,
       s"probe must read < $nAll files, read ${files.length}")
     // probe semantics ≡ view liveness: live, absent, then tombstoned
-    assert(graft.sources.LakeSink.liveKeyCount(spark, dir, "id",
-      Seq(42L, 99999999L).toDF("id")).contains(1L))
+    def liveKeys(ks: Seq[Long]) = graft.sources.LakeSink.tagKeys(spark,
+      new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      dir, ks.toDF("id"), "id", withLog = true)._3.liveKeys
+    assert(liveKeys(Seq(42L, 99999999L)) == 1L)
     spark.sql(s"DELETE FROM parquet.`$dir` WHERE id = 42")
-    assert(graft.sources.LakeSink.liveKeyCount(spark, dir, "id",
-      Seq(42L).toDF("id")).contains(0L),
+    assert(liveKeys(Seq(42L)) == 0L,
       "a tombstoned key is not live (the probe honors tombstones)")
     // end to end through SQL: fresh key lands, live key refuses —
     // including a key live only in the LOG (the churn-side branch)
@@ -858,8 +859,8 @@ class DmlSpec extends AnyFunSuite {
     val f = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     assert(f.renameTo(new java.io.File(dir, "zz-" + f.getName)))
-    assert(Manifest.pkProbeFiles(spark, dir, "id",
-      Seq(1L).toDF("id")).isEmpty, "stale manifest → None, never wrong")
+    assert(Manifest.keyFiles(spark, new org.apache.hadoop.fs.Path(dir), "id",
+      Seq("1")).isEmpty, "stale manifest → None, never wrong")
   }
 
   test("landing refusals fire in order with their counts, and a refused batch lands nothing") {
@@ -889,6 +890,28 @@ class DmlSpec extends AnyFunSuite {
     assert(!new java.io.File(dir, "_updates").list().exists(_.startsWith("u-")))
     assert(graft.sources.LakeSink.morReadUpsertDir(spark, dir, "id")
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L))
+  }
+
+  test("SQL DELETE matching part of a non-unique key's group removes, counts and feeds the whole group, as softDeleteUpsertDir does") {
+    def mk(prefix: String): String = {
+      val dir = freshDir(prefix)
+      Seq((5L, "a", 5.0), (5L, "b", 20.0), (6L, "c", 30.0))
+        .toDF("id", "name", "price").repartition(2).write.parquet(dir)
+      graft.sources.LakeSink.registerKeyDir(spark, dir, "id")
+      dir
+    }
+    val (sqlDir, apiDir) = (mk("dmlnu_sql"), mk("dmlnu_api"))
+    val n = spark.sql(s"DELETE FROM parquet.`$sqlDir` WHERE id = 5 AND price > 10")
+      .head().getLong(3)
+    val nApi = graft.sources.LakeSink.softDeleteUpsertDir(spark, apiDir,
+      Seq(5L).toDF("id"), "id")
+    assert(n == nApi && n == 2L, s"SQL DELETE removed $n rows, the API $nApi")
+    def feed(dir: String) = graft.sources.LakeSink.deleteFeed(spark, dir)
+      .select("op", "id", "name", "price").collect().map(_.toString).sorted.toSeq
+    assert(feed(sqlDir) == feed(apiDir) && feed(sqlDir).size == 2,
+      s"delete feed ${feed(sqlDir)}, the API's ${feed(apiDir)}")
+    assert(graft.sources.LakeSink.morReadUpsertDir(spark, sqlDir, "id")
+      .select("id").as[Long].collect().toSeq == Seq(6L))
   }
 
   /** the serve benchmark's table: 240 rows in 4 range-sorted files

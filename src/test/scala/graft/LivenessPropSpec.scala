@@ -60,9 +60,10 @@ class LivenessPropSpec extends AnyFunSuite {
     val probe = Seq(c.logKey, c.baseKey, c.goneKey, c.newKey)
     val live = probe.filter(k => before.contains(k.toLong))
     val fails = Seq.newBuilder[String]
-    if (LakeSink.liveKeyCount(spark, dir, "k", rows(probe, "").select("k"))
-        != Some(live.size.toLong))
-      fails += s"liveKeyCount differs from the fold's ${live.size}"
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (LakeSink.tagKeys(spark, fs, dir, rows(probe, "").select("k"), "k", withLog = true)
+        ._3.liveKeys != live.size.toLong)
+      fails += s"the probe's live keys differ from the fold's ${live.size}"
     val batch = rows(probe, "new")
     val got = LakeSink.softUpsertDir(spark, dir, batch, "k")
     if (got != ((live.size.toLong, probe.size.toLong - live.size)))
@@ -80,6 +81,72 @@ class LivenessPropSpec extends AnyFunSuite {
     if (after != want) fails += s"view after the batch differs from the fold's " +
       s"(${(after.toSet diff want.toSet).take(3)} vs ${(want.toSet diff after.toSet).take(3)})"
     fails.result()
+  }
+
+  /** a batch of `n` keys on a keyed table with `_blooms_k`: 10 keys
+    * tombstoned and compacted away, 490 live in the base, 10 live only
+    * in the log, the rest new; 10 more base keys pending-tombstoned
+    * (not live to a delete, refused by an upsert).
+    * The refusal counts, (updated, inserted), the `_feed` ops and the
+    * view after the landing must match the full fold's. */
+  private def checkLarge(n: Int, dir: String): Seq[String] = {
+    import org.apache.spark.sql.functions.lit
+    def keyed(ks: org.apache.spark.sql.Dataset[_], v: String) =
+      ks.select(col("id").as("k"), lit(v).as("v"), (col("id") % 3).cast("int").as("p"))
+    keyed(spark.range(0, 600), "base").repartition(4).write.parquet(dir)
+    LakeSink.registerKeyDir(spark, dir, "k")
+    LakeSink.softDeleteUpsertDir(spark, dir, spark.range(0, 10).toDF("k"), "k")
+    LakeSink.compactUpsertsDir(spark, dir, "k", 200L)
+    LakeSink.softUpsertDir(spark, dir, keyed(spark.range(5000, 5010), "log"), "k")
+    LakeSink.softDeleteUpsertDir(spark, dir, spark.range(590, 600).toDF("k"), "k")
+    val fails = Seq.newBuilder[String]
+    if (!new java.io.File(dir, "_blooms_k").isDirectory) fails += "no _blooms_k"
+    val ids = spark.range(0, 500).union(spark.range(5000, 5010))
+      .union(spark.range(10000, 10000L + n - 510))
+    val batch = keyed(ids, "new")
+    val before = LakeSink.morReadUpsertDir(spark, dir, "k").select("k")
+      .collect().map(_.getLong(0)).toSet
+    val live = batch.collect().count(r => before(r.getLong(0))).toLong
+    val seq0 = LakeSink.lastLandedSeq(spark, dir)
+    def refusal(body: => Any): String =
+      try { body; "landed" } catch { case e: Exception => e.getMessage }
+    val refusals = Seq(
+      refusal(LakeSink.softUpsertDir(spark, dir,
+        batch.union(keyed(spark.range(590, 600), "new")), "k")) ->
+        "10 keys are pending-tombstoned",
+      refusal(LakeSink.softUpsertDir(spark, dir,
+        batch.union(keyed(spark.range(10, 11), "dup")), "k")) ->
+        "1 keys appear more than once",
+      refusal(LakeSink.softDeleteUpsertDir(spark, dir,
+        ids.union(spark.range(590, 600)).toDF("k"), "k")) ->
+        s"${n + 10 - live} keys not live")
+    refusals.foreach { case (got, want) =>
+      if (!got.contains(want)) fails += s"refusal '$got', the fold says '$want'" }
+    if (LakeSink.lastLandedSeq(spark, dir) != seq0) fails += "a refused batch landed"
+    val got = LakeSink.softUpsertDir(spark, dir, batch, "k")
+    if (got != ((live, n - live)))
+      fails += s"(updated, inserted) = $got, the fold says $live live of $n"
+    val last = new java.io.File(dir, "_updates").listFiles()
+      .filter(_.getName.startsWith("u-")).maxBy(_.getName)
+    val ops = spark.read.parquet(new java.io.File(last, "_feed").getPath)
+      .select(col("k"), col("op")).collect().map(r => r.getLong(0) -> r.getString(1))
+    val wrongOps = ops.filter { case (k, op) => op != (if (before(k)) "update" else "insert") }
+    if (ops.length != n || wrongOps.nonEmpty)
+      fails += s"${ops.length} feed rows, ops against the fold ${wrongOps.take(3).toSeq}"
+    val after = LakeSink.morReadUpsertDir(spark, dir, "k")
+    val nNew = after.filter(col("v") === "new").count()
+    if (after.count() != before.size + n - live || nNew != n)
+      fails += s"view after: ${after.count()} rows ($nNew new), the fold says " +
+        s"${before.size + n - live} ($n new)"
+    fails.result()
+  }
+
+  test("landing liveness past the literal-key cap (joined hits) and past the probe cap (unpruned base) ≡ the full fold") {
+    val root = java.nio.file.Files.createTempDirectory("graft_lbig").toString
+    try Seq(LakeSink.MaxLiteralKeys + 1, Manifest.MaxProbeKeys.toInt + 1).foreach { n =>
+      val fails = checkLarge(n, s"$root/t$n")
+      assert(fails.isEmpty, s"$n keys: ${fails.mkString("; ")}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("landing liveness: the key-pruned probe ≡ the full fold, with and without blooms, flat and partitioned") {

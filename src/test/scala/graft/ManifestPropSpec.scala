@@ -163,6 +163,11 @@ class ManifestPropSpec extends AnyFunSuite {
 
   private def name(f: String): String = new Path(f).getName
 
+  /** the keys' string forms, as the landing hands them to the probe */
+  private def digs(keys: DataFrame): Seq[String] =
+    keys.select(col(keys.columns.head).cast("string")).collect()
+      .flatMap(r => Option(r.getString(0))).toSeq
+
   /** (k, id) rows as a sorted multiset; two of them equal iff
     * `exceptAll` is empty both ways */
   private def rows(df: DataFrame): Seq[String] =
@@ -248,9 +253,9 @@ class ManifestPropSpec extends AnyFunSuite {
       agrees("dynamicFilePrune", pruned.join(ptKeys, col("k") === col("dk")),
         pruned.inputFiles.map(name).toSet, ptWant)
     }
-    Manifest.pkProbeFiles(spark, dir, "k", ptKeys).foreach { files =>
-      val missed = ptWant._2 -- files.map(name).toSet
-      if (missed.nonEmpty) fails += s"pkProbeFiles: skipped $missed holding a match"
+    Manifest.keyFiles(spark, new Path(dir), "k", digs(ptKeys)).foreach { files =>
+      val missed = ptWant._2 -- files.map(_.getName).toSet
+      if (missed.nonEmpty) fails += s"keyFiles: skipped $missed holding a match"
     }
     withRules(DynKey) {
       val got = spark.sql(joinSql)
@@ -283,8 +288,8 @@ class ManifestPropSpec extends AnyFunSuite {
     }
     if (RuntimeFilter.dynamicFilePrune(spark, dir, "k", ptKeys).nonEmpty)
       fails += "dynamicFilePrune: stale manifest not fallen back"
-    if (Manifest.pkProbeFiles(spark, dir, "k", ptKeys).nonEmpty)
-      fails += "pkProbeFiles: stale manifest not fallen back"
+    if (Manifest.keyFiles(spark, new Path(dir), "k", digs(ptKeys)).nonEmpty)
+      fails += "keyFiles: stale manifest not fallen back"
     fails.result()
   }
 
