@@ -14,16 +14,16 @@ object GraftSession {
   def builder(cores: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
-      // bloom-manifest file pruning for equality lookups (conf-gated,
-      // default off): the a23 membership manifest consulted by the
-      // planner itself — WHERE k = v over a manifest-carrying parquet
-      // dir reads ~1 file with no special read API
+      // bloom-manifest file pruning for equality lookups (always on):
+      // the a23 membership manifest consulted by the planner itself —
+      // WHERE k = v over a manifest-carrying parquet dir reads ~1 file
+      // with no special read API
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.BloomPruneRule(s)))
-      // min/max-stats file pruning for range predicates (conf-gated,
-      // default off): the a20 data-skipping manifest consulted by the
-      // planner — WHERE k BETWEEN a AND b over a sorted/z-ordered dir
-      // touches ~the overlapping files through plain spark.sql
+      // min/max-stats file pruning for range predicates (always on):
+      // the a20 data-skipping manifest consulted by the planner —
+      // WHERE k BETWEEN a AND b over a sorted/z-ordered dir touches
+      // ~the overlapping files through plain spark.sql
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.StatsPruneRule(s)))
       // merge-on-read applied by the planner (always on): plain
@@ -32,10 +32,10 @@ object GraftSession {
       // resurrecting soft-deleted rows or serving stale ones
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.TombstoneApplyRule(s)))
-      // dynamic file pruning from the join side (conf-gated, default
-      // off): a broadcast-small build side's distinct keys probe the
-      // fact's `_blooms_<key>` manifest at plan time — the q59 move
-      // fired by the planner on plain spark.sql join syntax
+      // dynamic file pruning from the join side (always on): a
+      // broadcast-small build side's distinct keys probe the fact's
+      // `_blooms_<key>` manifest at plan time — the q59 move fired by
+      // the planner on plain spark.sql join syntax
       .withExtensions(_.injectOptimizerRule(s =>
         new graft.plans.DynamicFilePruneRule(s)))
       // SQL DML for the lake: INSERT INTO (keyed targets) / DELETE

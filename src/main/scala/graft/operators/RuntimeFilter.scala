@@ -455,7 +455,7 @@ object RuntimeFilter {
     // of the live directory, which would re-mark legitimately-stale
     // stats as current and defeat the staleness refusal
     if (fs.exists(applied)) return false
-    val old = spark.read.parquet(man.toString)
+    val old = graft.sources.Manifest.readHidden(spark, man.toString)
     val oldTotal = old.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
     val bRows = batch.count()
     val merged = old.unionByName(
@@ -468,7 +468,7 @@ object RuntimeFilter {
     val nFiles = math.max(1L, cardinality / 2000000L).toInt
     graft.sources.LakeSink.writeSorted(merged,
       s"$stage/_keystats_$key", "parquet", Seq(key), nFiles)
-    val staged = spark.read.parquet(s"$stage/_keystats_$key")
+    val staged = graft.sources.Manifest.readHidden(spark, s"$stage/_keystats_$key")
       .agg(coalesce(sum(col("n")), lit(0L)), count(lit(1))).head()
     if (staged.getLong(0) != oldTotal + bRows ||
         staged.getLong(1) != cardinality) {
@@ -513,7 +513,7 @@ object RuntimeFilter {
         s"STALE MANIFEST REFUSED: _keystats_$key under $dir carries no " +
           "_files record (a pre-record build, or a torn copy) — " +
           "re-run attachKeyStats to recommit counts and record together")
-      val names = spark.read.parquet(rec.toString)
+      val names = graft.sources.Manifest.readHidden(spark, rec.toString)
         .collect().map(_.getString(0)).toSet
       graft.sources.Manifest.requireCurrent(fs, dir, names, s"_keystats_$key")
       // the manifest is FEW files (storage-sized, ≤ ~30 MB/2M keys →
@@ -522,7 +522,7 @@ object RuntimeFilter {
       // machine: a 2M-key stats table read as ONE task was measured
       // costing seconds at the sf10 decade. Re-spread on read: the
       // shuffle moves cardinality-sized rows once, never the corpus.
-      Some(spark.read.parquet(man.toString)
+      Some(graft.sources.Manifest.readHidden(spark, man.toString)
         .repartition(spark.sparkContext.defaultParallelism))
     }
   }

@@ -130,14 +130,11 @@ private[graft] object ManifestPrune {
   * `_blooms_<k>` keeps the files whose bloom admits one of its values
   * (the whole IN-list in ONE in-process pass over the cached
   * manifest); across conjuncts the survivors intersect
-  * ([[graft.sources.Manifest.bloomKeep]]). Conf-gated OFF by default
-  * (`spark.graft.bloomPrune.enabled`); a stale manifest prunes
-  * nothing. */
+  * ([[graft.sources.Manifest.bloomKeep]]). Always on, in every
+  * session; a stale manifest prunes nothing. */
 class BloomPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.bloomPrune.enabled"
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get(ConfKey, "false").toBoolean) plan
-    else ManifestPrune.pruneFilters(spark, plan, "bloom")(
+    ManifestPrune.pruneFilters(spark, plan, "bloom")(
       (root, listed, cs) => graft.sources.Manifest.bloomKeep(spark, root, listed(), cs))
 }
 
@@ -150,13 +147,10 @@ class BloomPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   * read API. Range conjuncts (`>= > <= < =`, both operand orders) and
   * IN-lists over tracked columns keep the files whose [min, max] may
   * satisfy every one of them
-  * ([[graft.sources.Manifest.statsSurvivors]]). Conf-gated OFF by
-  * default (`spark.graft.statsPrune.enabled`); a stale manifest prunes
-  * nothing. */
+  * ([[graft.sources.Manifest.statsSurvivors]]). Always on, in every
+  * session; a stale manifest prunes nothing. */
 class StatsPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.statsPrune.enabled"
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get(ConfKey, "false").toBoolean) plan
-    else ManifestPrune.pruneFilters(spark, plan, "stats")(
+    ManifestPrune.pruneFilters(spark, plan, "stats")(
       (root, listed, cs) => graft.sources.Manifest.statsKeep(spark, root, listed(), cs))
 }

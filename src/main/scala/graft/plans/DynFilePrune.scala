@@ -27,9 +27,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * ANY build key survives, so the pruned join ≡ the full join
   * (false-positive files contribute rows the join condition drops).
   *
-  * Discipline ([[BloomPruneRule]]'s): conf-gated OFF by default
-  * (`spark.graft.dynFilePrune.enabled`); convergence-guarded through
-  * the [[ManifestPrune.PrunedFileIndex]] ledger under "dynfile" —
+  * Discipline ([[BloomPruneRule]]'s): always on; convergence-guarded
+  * through the [[ManifestPrune.PrunedFileIndex]] ledger under "dynfile" —
   * and a probe that prunes NOTHING still marks the relation, so the
   * fixpoint batch never re-executes the build side. The probe is
   * [[graft.sources.Manifest.probe]], the one keyed probe: it falls
@@ -43,8 +42,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * without a build match contributes nothing. */
 class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import ManifestPrune._
-
-  val ConfKey = "spark.graft.dynFilePrune.enabled"
 
   /** the single eligible parquet relation reachable through
     * Project/Filter wrappers only — the prune must see the scan the
@@ -92,8 +89,7 @@ class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     Some(factSide.transformUp { case rel: LogicalRelation if rel eq l => newL })
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get(ConfKey, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, jt, Some(EqualTo(a: AttributeReference,
           b: AttributeReference)), _) if jt == Inner || jt == LeftSemi =>
@@ -104,5 +100,4 @@ class DynamicFilePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           else None)
           .getOrElse(j)
     }
-  }
 }

@@ -1949,13 +1949,13 @@ object Analytics {
     }
     s.read.parquet(factDir).createOrReplaceTempView("q60_fact")
     s.read.parquet(pageDir).createOrReplaceTempView("q60_page")
-    Q.withConfs(s, "spark.graft.dynFilePrune.enabled" -> "true")(s.sql("""
+    s.sql("""
       SELECT o_orderkey, count(*) AS n_items,
         CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT))
           AS sum_cents
       FROM q60_fact JOIN q60_page ON l_orderkey = o_orderkey
-      GROUP BY o_orderkey ORDER BY o_orderkey"""))
+      GROUP BY o_orderkey ORDER BY o_orderkey""")
   }
 
   val qs: Seq[Q] = Seq(q1, q2, q3, q4, q5, q6, q7, q8, q9, q10,

@@ -617,7 +617,7 @@ object Crud {
        OR o_orderkey = (SELECT max(o_orderkey) FROM orders)
     ORDER BY o_orderkey""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    val st = s.read.parquet(s"$dir/_stats")
+    val st = graft.sources.Manifest.readHidden(s, s"$dir/_stats")
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
     val (lo, hi) = (st.getLong(0), st.getLong(1))
@@ -631,16 +631,15 @@ object Crud {
   }
 
   /** a24: the SAME point lookups as a23 through PLAIN
-    * `spark.read.parquet(dir).filter(k = v)` with
-    * [[graft.plans.BloomPruneRule]] enabled — no special read API:
-    * the conf-gated optimizer rule sees the equality over the
+    * `spark.read.parquet(dir).filter(k = v)` — no special read API:
+    * [[graft.plans.BloomPruneRule]] sees the equality over the
     * manifest-carrying directory and swaps the relation's file index
     * for the bloom survivors (residual Filter untouched — false
     * positives die on the very predicate that fired the prune, so
     * the rewrite is correctness-neutral BY CONSTRUCTION, which is
     * what sharing a23's oracle hash-proves). CatalystRuleSpec pins
-    * the pruning itself (8 files → ≤2), default-off, the spark.sql
-    * path, and the no-manifest bail. */
+    * the pruning itself (8 files → ≤2), the spark.sql path, and the
+    * no-manifest bail. */
   val a24 = Q("a24_bloom_prune_rule", Some("""
     SELECT o_orderkey, o_custkey, o_orderstatus,
       CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS price_cents
@@ -649,18 +648,16 @@ object Crud {
        OR o_orderkey = (SELECT max(o_orderkey) FROM orders)
     ORDER BY o_orderkey""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    val st = s.read.parquet(s"$dir/_stats")
+    val st = graft.sources.Manifest.readHidden(s, s"$dir/_stats")
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
-    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true") {
-      s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(0))
-        .unionByName(
-          s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(1)))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-            .as("price_cents"))
-        .orderBy("o_orderkey")
-    }
+    s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(0))
+      .unionByName(
+        s.read.parquet(dir).filter(col("o_orderkey") === st.getLong(1)))
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+          .as("price_cents"))
+      .orderBy("o_orderkey")
   }
 
   /** a25: PAGED point lookups — `o_orderkey IN (k1, k2, …)` through
@@ -681,25 +678,22 @@ object Crud {
                          (SELECT max(o_orderkey) FROM orders), -1)
     ORDER BY o_orderkey""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    val st = s.read.parquet(s"$dir/_stats")
+    val st = graft.sources.Manifest.readHidden(s, s"$dir/_stats")
       .agg(min("min_o_orderkey").as("lo"), max("max_o_orderkey").as("hi"))
       .head()
-    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true") {
-      s.read.parquet(dir)
-        .filter(col("o_orderkey").isin(st.getLong(0), st.getLong(1), -1L))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-            .as("price_cents"))
-        .orderBy("o_orderkey")
-    }
+    s.read.parquet(dir)
+      .filter(col("o_orderkey").isin(st.getLong(0), st.getLong(1), -1L))
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+          .as("price_cents"))
+      .orderBy("o_orderkey")
   }
 
-  /** a26: a20's RANGE skipping through PLAIN `spark.sql` with
-    * [[graft.plans.StatsPruneRule]] enabled — no special read API:
-    * the planner folds the two date conjuncts into one interval box,
-    * reads the committed `_stats` manifest (file-count-sized,
-    * LRU-memoized), and keeps only the files whose [min, max]
-    * o_orderdate can intersect — on the range-clustered copy ~1 of 8
+  /** a26: a20's RANGE skipping through PLAIN `spark.sql` — no
+    * special read API: [[graft.plans.StatsPruneRule]] folds the two
+    * date conjuncts into one interval box, reads the committed
+    * `_stats` manifest (file-count-sized, LRU-memoized), and keeps
+    * only the files whose [min, max] o_orderdate can intersect — on the range-clustered copy ~1 of 8
     * files, decided before a data byte moves. The residual Filter
     * stays, so the rewrite is correctness-neutral by construction —
     * sharing a20's oracle hash-proves it (explicit readPrunedDir ≡
@@ -713,16 +707,14 @@ object Crud {
       AND o_orderdate <= TIMESTAMP '1995-03-31 23:59:59'
     GROUP BY o_orderstatus ORDER BY o_orderstatus""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
-      s.read.parquet(dir)
-        .filter(col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp") &&
-          col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-            .as("sum_cents"))
-        .orderBy("o_orderstatus")
-    }
+    s.read.parquet(dir)
+      .filter(col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp") &&
+        col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp"))
+      .groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("n_orders"),
+        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+          .as("sum_cents"))
+      .orderBy("o_orderstatus")
   }
 
   // table copy with TWO delete-snapshot generations (r13: softDelete
@@ -803,7 +795,7 @@ object Crud {
   /** a28: the LAKEHOUSE HEADLINE COMPOSED — z-order layout ×
     * planner stats pruning, through PLAIN `spark.sql`: a21's box
     * predicate (both z-order dimensions at once) over the z-ordered
-    * copy with [[graft.plans.StatsPruneRule]] enabled folds BOTH
+    * copy under [[graft.plans.StatsPruneRule]] folds BOTH
     * range conjuncts into one per-column interval box and keeps ~the
     * intersection files — `readPrunedMulti`'s two-dimensional
     * decision made by the optimizer, no special read API. This is
@@ -822,16 +814,14 @@ object Crud {
       AND o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
       AND o_orderdate <= TIMESTAMP '1995-12-31 23:59:59'""")) { (s, d) =>
     val dir = ensureZOrderedOrders(s, d)
-    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
-      s.read.parquet(dir)
-        .filter(col("o_custkey") >= 100L && col("o_custkey") <= 400L &&
-          col("o_orderdate") >= lit("1994-01-01 00:00:00").cast("timestamp") &&
-          col("o_orderdate") <= lit("1995-12-31 23:59:59").cast("timestamp"))
-        .agg(count(lit(1)).as("n_orders"),
-          count_distinct(col("o_custkey")).as("n_custs"),
-          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-            .as("sum_cents"))
-    }
+    s.read.parquet(dir)
+      .filter(col("o_custkey") >= 100L && col("o_custkey") <= 400L &&
+        col("o_orderdate") >= lit("1994-01-01 00:00:00").cast("timestamp") &&
+        col("o_orderdate") <= lit("1995-12-31 23:59:59").cast("timestamp"))
+      .agg(count(lit(1)).as("n_orders"),
+        count_distinct(col("o_custkey")).as("n_custs"),
+        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+          .as("sum_cents"))
   }
 
   /** a29: a22's MERGE-ON-READ view through PLAIN `spark.read.parquet`
@@ -865,10 +855,9 @@ object Crud {
   }
 
   /** a30: COMPOSED manifest pruning — ONE plain scan carrying BOTH a
-    * bloom-equality conjunct and a stats-range conjunct, with both
-    * planner rules on: the optimizer intersects the `_blooms_o_orderkey`
-    * survivors with the `_stats` o_orderdate survivors on the same
-    * relation (the r13 rules were mutually exclusive per scan — the
+    * bloom-equality conjunct and a stats-range conjunct: the optimizer
+    * intersects the `_blooms_o_orderkey` survivors with the `_stats`
+    * o_orderdate survivors on the same relation (the r13 rules were mutually exclusive per scan — the
     * marker now carries a per-rule ledger, so `WHERE k = v AND dt
     * BETWEEN a AND b` reads ≤ min(both dimensions) files). The probe
     * key comes from planning metadata (a23's discipline) and the date
@@ -888,24 +877,21 @@ object Crud {
       AND o_orderdate <= t.d0 + INTERVAL 15 DAY
     ORDER BY o_orderkey""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    val mk = s.read.parquet(s"$dir/_stats")
+    val mk = graft.sources.Manifest.readHidden(s, s"$dir/_stats")
       .agg(min("min_o_orderkey")).head().getLong(0)
-    Q.withConfs(s, "spark.graft.bloomPrune.enabled" -> "true",
-        "spark.graft.statsPrune.enabled" -> "true") {
-      // the row's own date through the bloom-pruned point lookup
-      // (TIMESTAMP_NTZ column — the tables' uniform timestamp type)
-      val d0 = s.read.parquet(dir).filter(col("o_orderkey") === mk)
-        .agg(min("o_orderdate")).head()
-        .getAs[java.time.LocalDateTime](0)
-      val (lo, hi) = (d0.minusDays(15), d0.plusDays(15))
-      s.read.parquet(dir)
-        .filter(col("o_orderkey") === mk &&
-          col("o_orderdate") >= lit(lo) && col("o_orderdate") <= lit(hi))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
-            .as("price_cents"))
-        .orderBy("o_orderkey")
-    }
+    // the row's own date through the bloom-pruned point lookup
+    // (TIMESTAMP_NTZ column — the tables' uniform timestamp type)
+    val d0 = s.read.parquet(dir).filter(col("o_orderkey") === mk)
+      .agg(min("o_orderdate")).head()
+      .getAs[java.time.LocalDateTime](0)
+    val (lo, hi) = (d0.minusDays(15), d0.plusDays(15))
+    s.read.parquet(dir)
+      .filter(col("o_orderkey") === mk &&
+        col("o_orderdate") >= lit(lo) && col("o_orderdate") <= lit(hi))
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        floor(col("o_totalprice") * 100.0 + 0.5).cast("long")
+          .as("price_cents"))
+      .orderBy("o_orderkey")
   }
 
   /** a31: IN-list skipping WITHOUT a bloom — [[graft.plans
@@ -926,18 +912,16 @@ object Crud {
                           (SELECT max(o_orderdate) FROM orders))
     GROUP BY 1 ORDER BY 1""")) { (s, d) =>
     val dir = ensureSortedOrders(s, d)
-    val st = s.read.parquet(s"$dir/_stats")
+    val st = graft.sources.Manifest.readHidden(s, s"$dir/_stats")
       .agg(min("min_o_orderdate").as("lo"), max("max_o_orderdate").as("hi"))
       .head()
-    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
-      s.read.parquet(dir)
-        .filter(col("o_orderdate").isin(st.getAs[Any](0), st.getAs[Any](1)))
-        .groupBy(col("o_orderdate").cast("date").as("odate"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-            .as("sum_cents"))
-        .orderBy("odate")
-    }
+    s.read.parquet(dir)
+      .filter(col("o_orderdate").isin(st.getAs[Any](0), st.getAs[Any](1)))
+      .groupBy(col("o_orderdate").cast("date").as("odate"))
+      .agg(count(lit(1)).as("n_orders"),
+        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+          .as("sum_cents"))
+      .orderBy("odate")
   }
 
   // HIVE-PARTITIONED copy of orders (o_orderstatus dirs, date-sliced
@@ -960,8 +944,8 @@ object Crud {
     * table — the most common lake layout, which the r13 rules bailed
     * on entirely (`partitionSchema.isEmpty`): a status-partitioned,
     * date-sliced copy answers `status = 'F' AND date BETWEEN …`
-    * through plain reads with [[graft.plans.StatsPruneRule]] on —
-    * the marker index carries the partition SPEC, so the swapped
+    * through plain reads under [[graft.plans.StatsPruneRule]] — the
+    * marker index carries the partition SPEC, so the swapped
     * file list keeps its partition values and the scan's own
     * partition pruning composes on top: files actually read ≈
     * (partition survivors ∩ `_stats` date survivors), each decided
@@ -978,16 +962,14 @@ object Crud {
       AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
       AND o_orderdate <= TIMESTAMP '1995-03-31 23:59:59'""")) { (s, d) =>
     val dir = ensurePartitionedOrders(s, d)
-    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true") {
-      s.read.parquet(dir)
-        .filter(col("o_orderstatus") === "F" &&
-          col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp_ntz") &&
-          col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp_ntz"))
-        .agg(count(lit(1)).as("n_orders"),
-          count_distinct(col("o_custkey")).as("n_custs"),
-          sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
-            .as("sum_cents"))
-    }
+    s.read.parquet(dir)
+      .filter(col("o_orderstatus") === "F" &&
+        col("o_orderdate") >= lit("1995-01-01 00:00:00").cast("timestamp_ntz") &&
+        col("o_orderdate") <= lit("1995-03-31 23:59:59").cast("timestamp_ntz"))
+      .agg(count(lit(1)).as("n_orders"),
+        count_distinct(col("o_custkey")).as("n_custs"),
+        sum(floor(col("o_totalprice") * 100.0 + 0.5).cast("long"))
+          .as("sum_cents"))
   }
 
   // same stamped-tmp/atomic-rename discipline as ensureMorOrders: the
@@ -2006,12 +1988,12 @@ object Crud {
       CAST(max(o_orderkey) AS BIGINT) AS max_k
     FROM v WHERE o_custkey BETWEEN 100 AND 220""")) { (s, d) =>
     val dir = ensureZOrderOrders(s, d)
-    Q.withConfs(s, "spark.graft.statsPrune.enabled" -> "true")(s.sql(s"""
+    s.sql(s"""
       SELECT count(*) AS n_orders,
         CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
           AS BIGINT) AS sum_cents,
         min(o_orderkey) AS min_k, max(o_orderkey) AS max_k
-      FROM parquet.`$dir` WHERE o_custkey BETWEEN 100 AND 220"""))
+      FROM parquet.`$dir` WHERE o_custkey BETWEEN 100 AND 220""")
   }
 
   private def ensureVacuumOrders(s: SparkSession, d: String): String =

@@ -561,7 +561,7 @@ object LakeSink {
           s"TIME TRAVEL REFUSED: delete snapshot $gen of $table " +
             s"resolves through data generation $dataGen, which is no " +
             s"longer retained (retained: ${gens.map(_._1).mkString(", ")})."))
-      val tomb = spark.read.parquet(
+      val tomb = Manifest.readHidden(spark,
         new org.apache.hadoop.fs.Path(p, "_tombstones").toString)
       readAsPublished(spark, fs, data._2, format)
         .join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
@@ -1956,7 +1956,7 @@ object LakeSink {
             val stage = new org.apache.hadoop.fs.Path(loc,
               s".tmp-mig-$tagTail")
             keys.write.mode("overwrite").parquet(stage.toString)
-            val staged = spark.read.parquet(stage.toString).count()
+            val staged = footerRowCount(fs, stage)
             if (staged != expected) {
               fs.delete(stage, true)
               throw new java.io.IOException(
@@ -2648,7 +2648,7 @@ object LakeSink {
     fs.delete(stage, true) // a crashed prior attempt's leftovers
     val expected = df.count()
     df.write.mode("overwrite").parquet(stage.toString)
-    val staged = spark.read.parquet(stage.toString).count()
+    val staged = footerRowCount(fs, stage)
     if (staged != expected) {
       fs.delete(stage, true)
       throw new java.io.IOException(
@@ -2724,7 +2724,7 @@ object LakeSink {
     require(olds.nonEmpty, s"no committed batches under $dir")
     val fresh = olds.filter(_.getName.startsWith("batch-"))
     if (fresh.isEmpty) // nothing above the watermark: already converged
-      return spark.read.parquet(latest.get.toString).count()
+      return footerRowCount(fs, latest.get)
     val upTo = fresh.map(_.getName.stripPrefix("batch-").toLong).max
     val all = spark.read.parquet(olds.map(_.toString).toIndexedSeq: _*)
       .localCheckpoint(true)
@@ -2732,7 +2732,7 @@ object LakeSink {
     val stage = new org.apache.hadoop.fs.Path(dir, s".stage-compact-$upTo")
     fs.delete(stage, true)
     all.write.parquet(stage.toString)
-    val staged = spark.read.parquet(stage.toString).count()
+    val staged = footerRowCount(fs, stage)
     if (staged != n) {
       fs.delete(stage, true)
       throw new java.io.IOException(

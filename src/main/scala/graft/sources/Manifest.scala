@@ -209,10 +209,18 @@ object Manifest extends PredicateHelper {
       catch { case _: java.io.FileNotFoundException => return None }
     val key = (p.toString, fs.getFileStatus(p).getModificationTime,
       parts.map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(","))
-    // the part files: Spark's listing warns it ignores a `_` root
-    val files = parts.map(_.getPath).filterNot(f => hidden(f.getName))
-    Some(reads.getOrElseUpdate(key)(parse(spark.read.parquet(
-      (if (files.isEmpty) Seq(p) else files.toSeq).map(_.toString): _*))))
+    Some(reads.getOrElseUpdate(key)(parse(readHidden(spark, p.toString))))
+  }
+
+  /** a `_`-prefixed table (`_stats`, `_blooms_<c>`, `_keystats_<k>` and
+    * its `_files` record) read through its part files: handed the
+    * directory itself, Spark's listing warns that it ignores a `_` root */
+  def readHidden(spark: SparkSession, dir: String): DataFrame = {
+    val p = new Path(dir)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).map(_.getPath).filterNot(f => hidden(f.getName))
+    spark.read.parquet(
+      (if (files.isEmpty) Seq(p) else files.toSeq).map(_.toString): _*)
   }
 
   /** memoized existence probes for planning-time rules, keyed by the
@@ -304,7 +312,7 @@ object Manifest extends PredicateHelper {
     require(nested.isEmpty, s"STALE MANIFEST REFUSED: $name under $dir " +
       s"names files a directory-anchored read cannot place: ${nested.size} " +
       "data files sit in subdirectories (a partitioned layout) — read it " +
-      "through spark.sql with the manifest rules on.")
+      "through plain spark.sql, whose manifest rules prune it.")
     m
   }
 
@@ -614,7 +622,7 @@ object Manifest extends PredicateHelper {
     val stats = new Path(loc, "_stats")
     require(stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(stats), missing("_stats", where))
-    spark.read.parquet(stats.toString)
+    readHidden(spark, stats.toString)
   }
 
   /** the files whose bloom says `c = value` MIGHT be present — the

@@ -183,22 +183,19 @@ class DmlSpec extends AnyFunSuite {
       .write.parquet(dir)
     Manifest.attachBlooms(spark, dir, "id")
     graft.sources.LakeSink.registerKeyDir(spark, dir, "id")
-    spark.conf.set("spark.graft.bloomPrune.enabled", "true")
-    try {
-      // point UPDATE: lands exactly one row's batch; the view read is
-      // single-root so the bloom rule can decide files at plan time
-      val r = spark.sql(
-        s"UPDATE parquet.`$dir` SET price = 9.0 WHERE id = 4242").collect()
-      assert(r.head.getLong(1) == 1L)
-      // point DELETE through the same composition
-      val r2 = spark.sql(
-        s"DELETE FROM parquet.`$dir` WHERE id = 17").collect()
-      assert(r2.head.getLong(3) == 1L)
-      val v = graft.sources.LakeSink.morReadUpsertDir(spark, dir, "id")
-      assert(v.filter(col("id") === 4242L).head().getDouble(2) == 9.0)
-      assert(v.filter(col("id") === 17L).count() == 0)
-      assert(v.count() == 7999L)
-    } finally spark.conf.unset("spark.graft.bloomPrune.enabled")
+    // point UPDATE: lands exactly one row's batch; the view read is
+    // single-root so the bloom rule can decide files at plan time
+    val r = spark.sql(
+      s"UPDATE parquet.`$dir` SET price = 9.0 WHERE id = 4242").collect()
+    assert(r.head.getLong(1) == 1L)
+    // point DELETE through the same composition
+    val r2 = spark.sql(
+      s"DELETE FROM parquet.`$dir` WHERE id = 17").collect()
+    assert(r2.head.getLong(3) == 1L)
+    val v = graft.sources.LakeSink.morReadUpsertDir(spark, dir, "id")
+    assert(v.filter(col("id") === 4242L).head().getDouble(2) == 9.0)
+    assert(v.filter(col("id") === 17L).count() == 0)
+    assert(v.count() == 7999L)
   }
 
   test("concurrent SQL DML: two writers race statements — the log claim serializes, losers refuse and retry, history converges") {
@@ -708,17 +705,14 @@ class DmlSpec extends AnyFunSuite {
       "the cluster columns' manifest committed with the layout")
     // the NEXT plain spark.sql range query prunes through the
     // manifest — no API call, no rebuild step in between
-    spark.conf.set("spark.graft.statsPrune.enabled", "true")
-    try {
-      val q = spark.sql(
-        s"SELECT sum(price) AS s FROM parquet.`$dir` WHERE id BETWEEN 100 AND 220")
-      val nAll = new java.io.File(dir).listFiles()
-        .count(f => f.getName.endsWith(".parquet"))
-      val files = q.inputFiles.length
-      assert(files < nAll,
-        s"pruned read must touch < $nAll files, read $files of $nAll")
-      assert(math.abs(q.head().getDouble(0) - 121.0) < 1e-9)
-    } finally spark.conf.unset("spark.graft.statsPrune.enabled")
+    val q = spark.sql(
+      s"SELECT sum(price) AS s FROM parquet.`$dir` WHERE id BETWEEN 100 AND 220")
+    val nAll = new java.io.File(dir).listFiles()
+      .count(f => f.getName.endsWith(".parquet"))
+    val files = q.inputFiles.length
+    assert(files < nAll,
+      s"pruned read must touch < $nAll files, read $files of $nAll")
+    assert(math.abs(q.head().getDouble(0) - 121.0) < 1e-9)
     // the updated row survived the clustered fold
     assert(spark.read.parquet(dir).filter(col("id") === 7777L)
       .head().getDouble(3) == 9.0)

@@ -187,14 +187,6 @@ class ManifestPropSpec extends AnyFunSuite {
     }
   }
 
-  private def withRules[A](keys: String*)(f: => A): A = {
-    keys.foreach(spark.conf.set(_, "true"))
-    try f finally keys.foreach(spark.conf.unset)
-  }
-  private val RuleKeys = Seq("spark.graft.bloomPrune.enabled",
-    "spark.graft.statsPrune.enabled")
-  private val DynKey = "spark.graft.dynFilePrune.enabled"
-
   /** every entry point on one case; returns failure labels (empty = ok) */
   private def check(c: Case, root: String, n: Int): List[String] = {
     val dir = s"$root/c$n"
@@ -223,11 +215,9 @@ class ManifestPropSpec extends AnyFunSuite {
         pts.map(v => col("k") === lit(keyOf(kt, v))))
     val (sqlWant, ptWant) = (want(0), want(1))
 
-    // 1. plain SQL with both manifest rules scoped on
-    withRules(RuleKeys: _*) {
-      val got = spark.sql(s"SELECT * FROM $tbl WHERE $sqlCond")
-      agrees(s"SQL rules ($sqlCond)", got, got.inputFiles.map(name).toSet, sqlWant)
-    }
+    // 1. plain SQL, pruned by the bloom and stats rules
+    val sqlGot = spark.sql(s"SELECT * FROM $tbl WHERE $sqlCond")
+    agrees(s"SQL rules ($sqlCond)", sqlGot, sqlGot.inputFiles.map(name).toSet, sqlWant)
 
     // 2. the explicit range reader (inclusive boxes)
     bx.zipWithIndex.foreach { case ((lo, hi, l, h), i) =>
@@ -257,10 +247,8 @@ class ManifestPropSpec extends AnyFunSuite {
       val missed = ptWant._2 -- files.map(_.getName).toSet
       if (missed.nonEmpty) fails += s"keyFiles: skipped $missed holding a match"
     }
-    withRules(DynKey) {
-      val got = spark.sql(joinSql)
-      agrees("DynamicFilePruneRule", got, got.inputFiles.map(name).toSet, ptWant)
-    }
+    val joinGot = spark.sql(joinSql)
+    agrees("DynamicFilePruneRule", joinGot, joinGot.inputFiles.map(name).toSet, ptWant)
 
     // 5. a row-bearing append past the manifests: explicit readers
     //    refuse by name, rules and probes fall back
@@ -278,14 +266,10 @@ class ManifestPropSpec extends AnyFunSuite {
       fails += "readBloomLookupDir: stale manifest not refused"
     val want2 = unpruned(spark.read.parquet(dir),
       Seq(org.apache.spark.sql.functions.expr(sqlCond), ptCond))
-    withRules(RuleKeys: _*) {
-      if (rows(spark.sql(s"SELECT * FROM $tbl WHERE $sqlCond")) != want2(0)._1)
-        fails += "SQL rules: stale manifest not fallen back"
-    }
-    withRules(DynKey) {
-      if (rows(spark.sql(joinSql)) != want2(1)._1)
-        fails += "DynamicFilePruneRule: stale manifest not fallen back"
-    }
+    if (rows(spark.sql(s"SELECT * FROM $tbl WHERE $sqlCond")) != want2(0)._1)
+      fails += "SQL rules: stale manifest not fallen back"
+    if (rows(spark.sql(joinSql)) != want2(1)._1)
+      fails += "DynamicFilePruneRule: stale manifest not fallen back"
     if (RuntimeFilter.dynamicFilePrune(spark, dir, "k", ptKeys).nonEmpty)
       fails += "dynamicFilePrune: stale manifest not fallen back"
     if (Manifest.keyFiles(spark, new Path(dir), "k", digs(ptKeys)).nonEmpty)

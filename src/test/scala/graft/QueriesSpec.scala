@@ -29,6 +29,27 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("manifest-pruned and merge-on-read queries answer the same in registry order and in reverse") {
+    // the planner's prune rules and merge-on-read fold run in every
+    // session: an answer that depended on what ran before would show
+    // here as a different sorted-row hash between the two passes
+    val names = Set("a24_bloom_prune_rule", "a25_bloom_in_rule",
+      "a26_stats_prune_rule", "a28_zorder_sql_prune", "a29_mor_sql_rule",
+      "a30_prune_compose", "a31_stats_in_rule", "a32_part_prune",
+      "a36_mor_upsert_sql_rule", "a51_optimize_zorder", "q60_dyn_prune_rule")
+    val qs = Registry.all.filter(q => names(q.name))
+    assert(qs.map(_.name).toSet == names)
+    def hashes(order: Seq[Q]): Map[String, String] = order.map { q =>
+      val rows = q.run(spark, TestSpark.sf).collect().map(_.toString).sorted
+      q.name -> java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    }.toMap
+    val forward = hashes(qs)
+    val reverse = hashes(qs.reverse)
+    val differ = qs.map(_.name).filter(n => forward(n) != reverse(n))
+    assert(differ.isEmpty, s"answers depend on run order: ${differ.mkString(", ")}")
+  }
+
   test("q36 native hour buckets coincide with q18's integer epoch hours") {
     // the two time-bucket forms must be the SAME partition of events:
     // q18's hour_s (epoch-seconds arithmetic) and q36's hour_ts

@@ -5,7 +5,8 @@
   code     lines that are not blank and do not start with //, * or /**
   keys     distinct spark.graft.* configuration keys named in the source
            (a key prefix ending in '.', such as the per-table
-           spark.graft.dml.key.<table>, is a pattern, not a key)
+           spark.graft.dml.key.<table>, is a pattern, not a key),
+           followed by their names, one per line
 
 Usage: python3 tools/loc.py [repo_root]
 """
@@ -32,6 +33,8 @@ def main(root):
     print(f"total {total:,}")
     print(f"code {code:,}")
     print(f"keys {len(keys)}")
+    for k in sorted(keys):
+        print(f"  {k}")
 
 
 if __name__ == "__main__":
